@@ -62,7 +62,7 @@ def main():
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
     from entityresolution_capstone_spark.operators.scoring import (
         precompute_dense_tfidf,
-        score_pairs_slim,
+        score_pairs,
     )
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
@@ -169,7 +169,7 @@ def main():
 
     if "score" in phases:
         def score_only():
-            scored = score_pairs_slim(
+            scored = score_pairs(
                 state["pairs"],
                 state["docs"],
                 DQ.ScoringConfig(

@@ -21,6 +21,8 @@ callers must apply the same truncation in any SQL oracle.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -808,7 +810,11 @@ def make_pair_sim_udf(kind: str = "jaro_winkler", max_len: int = DEFAULT_MAX_LEN
     return sim_udf
 
 
-def make_weighted_char_sim_udf(weighted: dict[str, float], max_len: int = DEFAULT_MAX_LEN):
+def make_weighted_char_sim_udf(
+    weighted: dict[str, float],
+    max_len: int = DEFAULT_MAX_LEN,
+    prefix_weight: float = JW_PREFIX_WEIGHT,
+):
     """One pandas UDF computing ``sum_k w_k * kernel_k`` over the same pair.
 
     The Arrow transport of the two prefix columns (the dominant fixed cost of
@@ -817,11 +823,11 @@ def make_weighted_char_sim_udf(weighted: dict[str, float], max_len: int = DEFAUL
     per kernel — the kernels run their ``_coded`` entries on the shared
     matrices (r5; the wrapper path re-encoded each chunk up to 6x and
     re-compacted twice, measured at ~58% of the fused kernel's profile, all
-    of it redundant).
+    of it redundant). ``prefix_weight`` is the Winkler boost of ``jw``.
     """
     kernels = {
         "jaro": _jaro_coded,
-        "jw": _jaro_winkler_coded,
+        "jw": functools.partial(_jaro_winkler_coded, prefix_weight=prefix_weight),
         "lev": _scaled_lev_coded,
     }
     parts = [(kernels[k], w) for k, w in weighted.items()]
@@ -862,7 +868,7 @@ def make_weighted_char_sim_udf(weighted: dict[str, float], max_len: int = DEFAUL
                 sub += w * jaro
             elif k == "jw":
                 sub += w * _winkler_from_jaro(
-                    jaro, au, la_u, bu, lb_u, JW_PREFIX_WEIGHT
+                    jaro, au, la_u, bu, lb_u, prefix_weight
                 )
             else:  # lev
                 dist = _lev_myers_uniform_swapped(eq_all, la_s, lb_s)
@@ -926,20 +932,6 @@ def make_weighted_char_sim_udf(weighted: dict[str, float], max_len: int = DEFAUL
         return res
 
     return sim_udf
-
-
-def scaled_levenshtein_col(c1: Column, c2: Column, max_len: int = DEFAULT_MAX_LEN) -> Column:
-    """JVM-side scaled Levenshtein on truncated strings (no Python at all).
-
-    Uses Spark's built-in ``levenshtein``; preferred over the pandas kernel in
-    the hot path. Two empty strings -> 1.0.
-    """
-    a = F.substring(c1, 1, max_len)
-    b = F.substring(c2, 1, max_len)
-    mx = F.greatest(F.length(a), F.length(b))
-    return F.when(mx == 0, F.lit(1.0)).otherwise(
-        F.lit(1.0) - F.levenshtein(a, b) / mx.cast("double")
-    )
 
 
 def token_jaccard_col(t1: Column, t2: Column) -> Column:

@@ -42,7 +42,7 @@ MAX_STATIC_DIM = 256
 # beats Arrow at dim 64 — 4.25 vs 5.87 s on a ~4M-pair stream — but by
 # dim 128 the generated projection no longer compiles into effective
 # whole-stage codegen and runs interpreted: 29.1 vs 8.5 s. The same cliff
-# appears in the hot/cold TF-IDF split between 64 and 128 mult-add slots).
+# gates the dense TF-IDF route of operators/scoring.py at 64 slots).
 # kernel="auto" dispatch uses THIS bound; explicit kernel="static" callers
 # may still go up to MAX_STATIC_DIM (correct, just slow past the cliff).
 AUTO_STATIC_MAX_DIM = 64

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from . import blocking as B
 from .blocking import BlockingConfig, _attach_key_payload, _first_key_match
-from .scoring import ScoringConfig, score_pairs_slim
+from .scoring import ScoringConfig, score_pairs
 from ..functions.tfidf import doc_frequencies
 
 
@@ -142,7 +142,7 @@ def attach_to_clusters(
     base_blocks = B.build_blocks(base_docs, tdict, blocking_cfg)
     pairs = cross_candidate_pairs(new_blocks, base_blocks, blocking_cfg)
     n = union.count()
-    scored = score_pairs_slim(
+    scored = score_pairs(
         pairs.select(F.col("new_id").alias("id1"), F.col("base_id").alias("id2")),
         union,
         scoring_cfg,

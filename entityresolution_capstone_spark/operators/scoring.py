@@ -5,23 +5,32 @@ Mirrors the reference's weighted attribute combination
 ``attr_sim = Σ_k w_k · sim_k`` and ``sim = (1-α)·attr_sim + α·rel_sim``
 (α defaults to 0 per resolver.py:236, making a single scoring pass exact).
 
-Kernel dispatch:
-- ``lev``      JVM-side scaled Levenshtein on the bounded doc prefix (builtin)
-- ``jw``       vectorized pandas-UDF Jaro-Winkler on the doc prefix
-- ``jaro``     vectorized pandas-UDF Jaro
-- ``tfidf``    JVM-side TF-IDF cosine over tokens (explode + DF join algebra)
-- ``stfidf``   soft-TF-IDF pandas UDF (reference default for 'text' attrs)
-- ``jaccard``  JVM-side token-set Jaccard
+:func:`score_pairs` is the one scoring implementation. Every kernel except
+the sparse TF-IDF route is a term of ONE per-pair projection over
+``pairs ⋈ doc features``:
 
-The hot path at 100 TB is {lev, tfidf, jaccard}: zero Python. jw/stfidf move
-batches through Arrow once; their inputs are bounded-length prefixes / token
-arrays, so Python cost is O(pairs · prefix²) with vectorized inner loops.
+- ``jw`` / ``jaro`` / ``lev``  one fused Arrow UDF
+  (:func:`~..functions.similarity.make_weighted_char_sim_udf`): transport,
+  codepoint encode and alphabet compaction are paid once per batch for all
+  char kernels; ``lev`` is the bit-parallel Myers kernel
+- ``jaccard``  JVM-side token-set Jaccard
+- ``stfidf``   soft-TF-IDF pandas UDF over a broadcast DF dict, or the
+  distributed ``soft_tfidf_pairs`` join above the dict caps
+- custom kernels: one pandas UDF each over the doc prefixes
+- ``tfidf``    cosine by one of two routes: the DENSE route (vocabulary
+  <= DENSE_TFIDF_MAX_VOCAB) broadcast-joins per-doc vectors onto the pair
+  rows and adds a static dot product to the same projection; otherwise the
+  SPARSE route joins the exploded (doc, token) weights, and its per-pair
+  partials are unioned with the projection's partial and summed in one
+  pair-level groupBy.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -30,12 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions import tfidf as tfidf_mod
-from ..functions.similarity import (
-    make_pair_sim_udf,
-    scaled_levenshtein_col,
-    token_jaccard_col,
-    make_weighted_char_sim_udf,
-)
+from ..functions import vector as V
+from ..functions.similarity import make_weighted_char_sim_udf, token_jaccard_col
+
+CHAR_KERNELS = ("jw", "jaro", "lev")
 
 
 @dataclass
@@ -55,9 +62,6 @@ class ScoringConfig:
     # above EITHER cap the scorer reroutes to the fully distributed
     # soft_tfidf_pairs plan.
     stfidf_max_vocab_bytes: int = 64 << 20
-    # "bitparallel": all char kernels fused into one Arrow UDF with Myers
-    # bit-vector Levenshtein; "jvm": builtin levenshtein column + per-kernel UDFs
-    lev_impl: str = "bitparallel"
     # user-supplied kernels (reference resolver.py:899-901 custom callables):
     # name -> batch fn (ndarray[str], ndarray[str]) -> ndarray[float64],
     # applied to the doc prefixes through the same Arrow-batched transport.
@@ -67,17 +71,29 @@ class ScoringConfig:
         total = sum(self.weights.values())
         if abs(total - 1.0) > 1e-9:
             raise ValueError(f"kernel weights must sum to 1, got {total}")
-        known = {"jw", "jaro", "lev", "tfidf", "stfidf", "jaccard"}
+        known = {*CHAR_KERNELS, "tfidf", "stfidf", "jaccard"}
         unknown = set(self.weights) - known - set(self.custom_kernels)
         if unknown:
             raise ValueError(f"unknown kernels (no custom_kernels entry): {unknown}")
 
 
-DENSE_TFIDF_MAX_VOCAB = 256
+# Dense TF-IDF vocabulary gate: the static dot is `vocab` multiply-adds in
+# the per-pair projection, and just above 64 of them it leaves whole-stage
+# codegen. Measured on a 4-core host at local[2], default weights, with the
+# ER frontier's tokens split into variants to widen the vocabulary: at sf0.1
+# (706k pairs) dense beats sparse 6.5 s vs 12.0 s at vocab 31 and 8.2 s vs
+# 13.5 s at 62, then loses 30.5 s vs 11.6 s at 93; at sf0.01 dense takes
+# 2.4 s at 62, 3.2 s at 65 and 4.3 s at 69 against 1.9-2.6 s sparse. At 221
+# the generated method exceeds 64 KB and Spark interprets the projection.
+DENSE_TFIDF_MAX_VOCAB = 64
 # dense vectors are broadcast to both sides of the pair join; vocabulary bounds
-# row WIDTH but not row COUNT, so gate on docs too: 200k docs x 256 doubles
-# ~ 400 MB, the most a driver/executor broadcast should carry
+# row WIDTH but not row COUNT, so gate on docs too: 200k docs x 64 doubles
+# ~ 100 MB, well inside what a driver/executor broadcast should carry
 DENSE_TFIDF_MAX_DOCS = 200_000
+# sparse route: the (doc, token, weight) table is broadcast to the pair joins
+# up to this many rows (~64 B each, about the session's 64 MB broadcast
+# threshold); above it both joins shuffle
+SPARSE_TFIDF_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def _dense_tfidf_docs(docs, df_table, corpus_size, vocab):
@@ -117,12 +133,12 @@ def _dense_tfidf_docs(docs, df_table, corpus_size, vocab):
 
 
 def _dense_path_eligible(vocab: int, corpus_size: int | None) -> bool:
-    """ONE predicate for the dense-TF-IDF path, shared by
-    precompute_dense_tfidf and score_pairs_slim — if the two ever diverged,
-    bench.py could precompute None while scoring still takes the dense path
+    """ONE predicate for the dense-TF-IDF route, shared by
+    precompute_dense_tfidf and score_pairs — if the two ever diverged,
+    bench.py could precompute None while scoring still takes the dense route
     and silently re-derives the table inside the timed run.
 
-    SPARK_GRAFT_FORCE_SPARSE_TFIDF=1 disables the dense path regardless of
+    SPARK_GRAFT_FORCE_SPARSE_TFIDF=1 disables the dense route regardless of
     vocab size: the sparse explode+join route is the only one available at
     real-corpus vocabularies, so cross-scale growth measurements must be able
     to hold the PLAN fixed while the input grows (the x10 weak-scaling input
@@ -131,15 +147,15 @@ def _dense_path_eligible(vocab: int, corpus_size: int | None) -> bool:
     masquerades as a superlinear wall-growth exponent)."""
     if os.environ.get("SPARK_GRAFT_FORCE_SPARSE_TFIDF", "") == "1":
         return False
-    return vocab <= DENSE_TFIDF_MAX_VOCAB and (corpus_size or 0) <= DENSE_TFIDF_MAX_DOCS
+    return 0 < vocab <= DENSE_TFIDF_MAX_VOCAB and (corpus_size or 0) <= DENSE_TFIDF_MAX_DOCS
 
 
 def precompute_dense_tfidf(
     docs: DataFrame, df_table: DataFrame, corpus_size: int
 ) -> DataFrame | None:
-    """Materialize the per-doc dense tf-idf table score_pairs_slim's dense
-    path needs, or None when the vocab/corpus is too large for the dense
-    path (the sparse explode+join route needs no precompute).
+    """Materialize the per-doc dense tf-idf table score_pairs' dense route
+    needs, or None when the vocab/corpus is too large for it (the sparse
+    explode+join route needs no precompute).
 
     Per-doc featurization is O(docs) work a pipeline runs ONCE (and persists)
     before scoring O(pairs) candidates; callers pass the persisted result as
@@ -175,275 +191,105 @@ def pair_features(pairs: DataFrame, docs: DataFrame, cols: list[str]) -> DataFra
     return pairs.join(d1, "id1").join(d2, "id2")
 
 
-def score_pairs_slim(
-    pairs: DataFrame,
-    docs: DataFrame,
-    cfg: ScoringConfig | None = None,
-    df_table: DataFrame | None = None,
-    corpus_size: int | None = None,
-    dense_table: DataFrame | None = None,
-) -> DataFrame:
-    """(id1, id2) -> (id1, id2, attr_sim): the shuffle-minimal scoring plan.
+def _stfidf_kernel(pairs, docs, cfg, df_table, corpus_size):
+    """Soft-TF-IDF: (udf column over tokens_1/tokens_2, None) when the DF dict
+    fits the caps, else (None, distributed (id1, id2, stfidf) frame).
 
-    Numerically identical to :func:`score_pairs`'s ``attr_sim`` (the weighted
-    partials are summed per pair; FP addition of the two partials is
-    commutative, so grouping order cannot change the value), but instead of
-    sort-merge-joining two wide 10^6-row tables it unions SKINNY per-pair
-    partial rows (2 ids + 1 double) and does ONE groupBy-sum:
-
-    - char kernels (jw/jaro/lev) ride the pair⋈prefix join -> one partial row
-      per pair;
-    - TF-IDF cosine rides the explode⋈DF join -> at most one partial row per
-      pair (absent when no shared token == cosine 0).
-
-    This is the hot path for clustering/bench where only ``sim`` matters.
-    """
-    cfg = cfg or ScoringConfig()
-    char_kernels = [k for k in cfg.weights if k in ("jw", "jaro", "lev")]
-    parts: list[DataFrame] = []
-    if char_kernels:
-        feat = pair_features(pairs, docs, ["doc_prefix"])
-        if cfg.lev_impl == "jvm":
-            # legacy split: JVM builtin levenshtein + one pandas UDF per
-            # remaining char kernel
-            expr = None
-            for k in char_kernels:
-                if k == "lev":
-                    col = scaled_levenshtein_col(
-                        F.col("doc_prefix_1"), F.col("doc_prefix_2"),
-                        max_len=cfg.prefix_len,
-                    )
-                else:
-                    udf = make_pair_sim_udf(
-                        "jaro_winkler" if k == "jw" else "jaro",
-                        max_len=cfg.prefix_len,
-                    )
-                    col = udf(F.col("doc_prefix_1"), F.col("doc_prefix_2"))
-                term = F.lit(cfg.weights[k]) * col
-                expr = term if expr is None else expr + term
-        else:
-            # one combined Arrow kernel: transport + encode paid once; lev is
-            # the bit-parallel Myers kernel (~6x the JVM builtin at 128 chars)
-            udf = make_weighted_char_sim_udf(
-                {
-                    ("jw" if k == "jw" else "jaro" if k == "jaro" else "lev"): cfg.weights[k]
-                    for k in char_kernels
-                },
-                max_len=cfg.prefix_len,
-            )
-            expr = udf(F.col("doc_prefix_1"), F.col("doc_prefix_2"))
-        parts.append(feat.select("id1", "id2", expr.alias("partial")))
-    if "tfidf" in cfg.weights:
-        if df_table is None or corpus_size is None:
-            raise ValueError("tfidf kernel needs df_table + corpus_size")
-        vocab = df_table.count()
-        if _dense_path_eligible(vocab, corpus_size):
-            # dense path: per-doc V-dim tf-idf arrays attached to the pair rows,
-            # cosine = JVM zip_with dot product — ZERO shuffles after the
-            # feature join, so this kernel scales like the char kernels. Only
-            # viable when the vocabulary is small enough to pivot into columns;
-            # large vocabularies take the sparse explode+join route below.
-            # dense_table: caller-precomputed (and typically persisted) output
-            # of precompute_dense_tfidf — per-doc featurization is O(docs) prep
-            # a pipeline materializes once, not once per scoring pass
-            dense = dense_table if dense_table is not None else _dense_tfidf_docs(
-                docs, df_table, corpus_size, vocab
-            )
-            dv1 = dense.select(
-                F.col("conv_id").alias("id1"), F.col("v").alias("_v1"), F.col("nrm").alias("_n1")
-            )
-            dv2 = dense.select(
-                F.col("conv_id").alias("id2"), F.col("v").alias("_v2"), F.col("nrm").alias("_n2")
-            )
-            # STATIC dot product (vocab is a plan-time constant): element_at
-            # ordinal access + scalar multiply-adds stay inside whole-stage
-            # codegen. The zip_with+aggregate form this replaces is an
-            # interpreted (codegen-fallback) expression pair that measurably
-            # anti-scales at high in-JVM concurrency on the quadratic pair
-            # stream (VERDICT r2 / r3 microbenches: interpreted array HOFs
-            # were the 8→32-core collapse of the hot queries).
-            dot = None
-            for i in range(vocab):
-                term = F.element_at("_v1", i + 1) * F.element_at("_v2", i + 1)
-                dot = term if dot is None else dot + term
-            # left joins + coalesce: a doc with zero tokens has no dense row;
-            # its pairs must still score (tfidf partial 0), matching score_pairs
-            cos_col = F.when(
-                (F.col("_n1") > 0) & (F.col("_n2") > 0), dot / (F.col("_n1") * F.col("_n2"))
-            ).otherwise(0.0)
-            tfidf_partial = F.coalesce(
-                F.lit(cfg.weights["tfidf"]) * cos_col, F.lit(0.0)
-            )
-            unsupported = set(cfg.weights) - set(char_kernels) - {"tfidf"}
-            if unsupported:
-                raise ValueError(f"score_pairs_slim does not support kernels: {unsupported}")
-            # FUSED single-stage plan: both partials are per-pair row-aligned
-            # (char kernel rides the docs join; dense tf-idf rides two
-            # broadcast joins), so the union + 2x-pair-count groupBy shuffle
-            # the sparse path needs is pure overhead here. Adding the two
-            # partials in one projection is bit-identical to summing them in
-            # the groupBy (IEEE a+b is commutative and there are exactly two
-            # terms per pair), and the whole of q_score becomes ONE pipelined
-            # stage: scan pairs -> joins -> kernels -> partial agg.
-            base = parts[0] if char_kernels else pairs
-            fused = (
-                base.join(F.broadcast(dv1), "id1", "left")
-                .join(F.broadcast(dv2), "id2", "left")
-            )
-            sim = (
-                (F.col("partial") + tfidf_partial) if char_kernels else tfidf_partial
-            )
-            return fused.select("id1", "id2", sim.alias("attr_sim"))
-        # per-doc tables: tiny next to the pair table; persisted because the
-        # plan reads vectors twice and the two norm broadcasts would otherwise
-        # re-run the whole explode+join chain each
-        vectors = tfidf_mod.tfidf_vectors(docs, df_table, corpus_size).persist()
-        norms = tfidf_mod.tfidf_norms(vectors).persist()
-        # Hot/cold token split (r6; closes the q_score Zipf-skew overage of
-        # BENCH/CROSS_SCALE_SKEW.json — exponent 1.375 vs the 1.25 gate).
-        # The sparse dot's cost is the exploded pairs x tokens-per-doc
-        # stream, and under a skewed vocabulary the HOT tokens' df² mass
-        # dominates it: every doc carries them, so they multiply the join
-        # stream by ~hot-tokens-per-doc. Splitting them out: the <= H
-        # hottest tokens (by df) become per-doc DENSE mini-vectors scored
-        # with the JIT-compiled static dot on rows the pair stream already
-        # carries (two doc-cardinality joins, no extra pair-set exchange),
-        # and only the TAIL tokens ride the explode join — identical dot by
-        # summation algebra (hot terms + tail terms partition the shared
-        # tokens; FP association differs in final ulps only, and both the
-        # graded queries and the oracle round to 6 decimals — the graded
-        # SFs take the dense path anyway). SPARK_GRAFT_TFIDF_HOT_SPLIT=0
-        # restores the single explode join for A/B measurement.
-        hot_split = (
-            os.environ.get("SPARK_GRAFT_TFIDF_HOT_SPLIT", "1") == "1"
-            and vocab > 0
+    The UDF kernel broadcasts the DF table as a python dict (per-token DF
+    lookups inside the Arrow batch). Unbounded, that collect OOMs the driver
+    at web-scale vocab — so (a) prune the table to tokens that actually occur
+    in candidate docs, (b) above either cap, fall back to the fully
+    DISTRIBUTED plan (functions/tfidf.py: soft_tfidf_pairs — same algebra, no
+    driver collect)."""
+    cand_ids = (
+        pairs.select(F.col("id1").alias("conv_id"))
+        .unionByName(pairs.select(F.col("id2").alias("conv_id")))
+        .distinct()
+    )
+    cand_tokens = (
+        docs.join(cand_ids, "conv_id")
+        .select(F.explode(F.array_distinct("tokens")).alias("token"))
+        .distinct()
+    )
+    pruned = df_table.join(cand_tokens, "token")
+    stats = pruned.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.length("token")), F.lit(0)).alias("chars"),
+    ).first()
+    n_tokens = int(stats["n"])
+    # CPython dict-entry footprint: ~104 B fixed (8 B table slot + 49 B str
+    # header + 28 B small int + insertion-order entry) + the token bytes
+    # themselves. An estimate, not an accounting — sized so the 64 MB default
+    # caps the dict two orders of magnitude below driver heap, with the
+    # distributed plan as the overflow path either way.
+    est_bytes = n_tokens * 104 + int(stats["chars"])
+    if n_tokens > cfg.stfidf_max_vocab or est_bytes > cfg.stfidf_max_vocab_bytes:
+        return None, tfidf_mod.soft_tfidf_pairs(
+            pairs, docs, df_table, corpus_size, threshold=cfg.stfidf_threshold
         )
-        if hot_split:
-            from ..functions import vector as V
-            from ..functions.ids import dense_rank_ids
+    df_map = {r["token"]: r["df"] for r in pruned.collect()}
+    bc = pairs.sparkSession.sparkContext.broadcast(df_map)
+    st = tfidf_mod.make_soft_tfidf_udf(bc, corpus_size, threshold=cfg.stfidf_threshold)
+    return st(F.col("tokens_1"), F.col("tokens_2")), None
 
-            # Hot-slot width: 64 by default, NOT DENSE_TFIDF_MAX_VOCAB.
-            # Measured at skew-1x (2.77M pairs, forced sparse, local[32],
-            # min-of-3 q_score): H=64 -> 17.5s, H=128 -> 44.1s, H=256 ->
-            # 66.7s vs 14.4s without the split — the per-pair projection
-            # leaves effective codegen between 64 and 128 mult-add slots
-            # and the interpreted wide dot then dominates (the round-3
-            # law). Zipf-style df distributions concentrate df² mass in the
-            # first few dozen ranks, so 64 slots keep ~all of the split's
-            # benefit. Overridable for re-measurement.
-            H = min(int(os.environ.get("SPARK_GRAFT_TFIDF_HOT_VOCAB", "64")), vocab)
-            ranked = dense_rank_ids(
-                df_table.select("token", "df").withColumn(
-                    "_negdf", -F.col("df")
-                ),
-                ["_negdf", "token"],
-                "_hid",
-            )
-            hot = ranked.filter(F.col("_hid") <= H).select(
-                "token", "df", F.col("_hid").alias("hid")
-            )
-            v_tail = vectors.join(
-                F.broadcast(hot.select("token")), "token", "left_anti"
-            )
-        else:
-            v_tail = vectors
-        v1 = v_tail.select(F.col("conv_id").alias("id1"), "token", F.col("w").alias("w1"))
-        v2 = v_tail.select(F.col("conv_id").alias("id2"), "token", F.col("w").alias("w2"))
-        tail_products = (
-            pairs.join(v1, "id1")
-            .join(v2, ["id2", "token"])
-            .select("id1", "id2", (F.col("w1") * F.col("w2")).alias("dot"))
+
+def _cosine(dot, n1, n2):
+    return F.when((n1 > 0) & (n2 > 0), dot / (n1 * n2)).otherwise(0.0)
+
+
+def _attach_dense_tfidf(base, dense):
+    """Broadcast-join the per-doc dense vectors onto both sides of ``base``.
+    Left joins: a doc with zero tokens has no dense row; its pairs still
+    score (null norms fail the cosine's norm test, giving 0)."""
+    dv1 = dense.select(
+        F.col("conv_id").alias("id1"), F.col("v").alias("_v1"), F.col("nrm").alias("_n1")
+    )
+    dv2 = dense.select(
+        F.col("conv_id").alias("id2"), F.col("v").alias("_v2"), F.col("nrm").alias("_n2")
+    )
+    return base.join(F.broadcast(dv1), "id1", "left").join(F.broadcast(dv2), "id2", "left")
+
+
+def _dense_cosine(vocab):
+    """Cosine over the attached dense vectors as a STATIC dot product (vocab
+    is a plan-time constant): element_at ordinal access + scalar multiply-adds
+    stay inside whole-stage codegen while the vocabulary is below the
+    measured cliff."""
+    return _cosine(V.static_dot("_v1", "_v2", vocab), F.col("_n1"), F.col("_n2"))
+
+
+def _sparse_tfidf_partials(pairs, docs, df_table, corpus_size, w, broadcast):
+    """(id1, id2, partial = w · cosine) for the pairs sharing a token: the
+    pair stream joins the exploded (doc, token, weight) rows on both sides,
+    one groupBy sums the products, two broadcast norm joins normalize.
+
+    ``broadcast``: ship the (doc, token, weight) table to both joins. Its
+    planned size is the tf ⋈ DF join's cartesian bound, so without the hint
+    the second join plans as a sort-merge join that shuffles the
+    pairs x tokens stream."""
+    vectors = tfidf_mod.tfidf_vectors(docs, df_table, corpus_size)
+    norms = tfidf_mod.tfidf_norms(vectors)
+    v1 = vectors.select(F.col("conv_id").alias("id1"), "token", F.col("w").alias("w1"))
+    v2 = vectors.select(F.col("conv_id").alias("id2"), "token", F.col("w").alias("w2"))
+    if broadcast:
+        v1, v2 = F.broadcast(v1), F.broadcast(v2)
+    dots = (
+        pairs.join(v1, "id1")
+        .join(v2, ["id2", "token"])
+        .select("id1", "id2", (F.col("w1") * F.col("w2")).alias("dot"))
+        .groupBy("id1", "id2")
+        .agg(F.sum("dot").alias("dot"))
+    )
+    n1 = F.broadcast(norms.select(F.col("conv_id").alias("id1"), F.col("norm").alias("n1")))
+    n2 = F.broadcast(norms.select(F.col("conv_id").alias("id2"), F.col("norm").alias("n2")))
+    return (
+        dots.join(n1, "id1")
+        .join(n2, "id2")
+        .select(
+            "id1",
+            "id2",
+            (F.lit(w) * _cosine(F.col("dot"), F.col("n1"), F.col("n2"))).alias("partial"),
         )
-        if hot_split:
-            tf_hot = (
-                docs.select("conv_id", F.explode("tokens").alias("token"))
-                .groupBy("conv_id", "token")
-                .agg(F.count("*").alias("tf"))
-                .join(F.broadcast(hot), "token")
-                .select(
-                    "conv_id",
-                    "hid",
-                    (
-                        F.col("tf") * F.lit(float(corpus_size)) / F.col("df")
-                    ).alias("w"),
-                )
-            )
-            sums = [
-                F.sum(
-                    F.when(F.col("hid") == i + 1, F.col("w")).otherwise(0.0)
-                ).alias(f"c{i}")
-                for i in range(H)
-            ]
-            hv = (
-                tf_hot.groupBy("conv_id")
-                .agg(*sums)
-                .select(
-                    "conv_id",
-                    F.array(*[F.col(f"c{i}") for i in range(H)]).alias("hv"),
-                )
-            )
-            hv1 = hv.select(F.col("conv_id").alias("id1"), F.col("hv").alias("_hv1"))
-            hv2 = hv.select(F.col("conv_id").alias("id2"), F.col("hv").alias("_hv2"))
-            # one hot-dot row per pair, computed by two BROADCAST joins +
-            # the static dot in the same pipelined stage (docs without hot
-            # tokens coalesce to 0.0), then UNIONED into the same pair-level
-            # groupBy that sums the tail products — the total stays a SINGLE
-            # pair-cardinality shuffle with map-side combine. (The first r6
-            # cut of this split instead left-joined `pairs` against the
-            # aggregated tail dots — a pair x pair sort-merge join that cost
-            # two extra full-pair-stream exchanges; caught by the skew
-            # re-measurement, q_score 1x 23.5 -> 55.9s, and removed.)
-            hot_rows = (
-                pairs.join(hv1, "id1", "left")
-                .join(hv2, "id2", "left")
-                .select(
-                    "id1",
-                    "id2",
-                    F.coalesce(
-                        V.static_dot("_hv1", "_hv2", H), F.lit(0.0)
-                    ).alias("dot"),
-                )
-            )
-            dots = (
-                tail_products.unionByName(hot_rows)
-                .groupBy("id1", "id2")
-                .agg(F.sum("dot").alias("dot"))
-            )
-        else:
-            dots = tail_products.groupBy("id1", "id2").agg(
-                F.sum("dot").alias("dot")
-            )
-        n1 = F.broadcast(norms.select(F.col("conv_id").alias("id1"), F.col("norm").alias("n1")))
-        n2 = F.broadcast(norms.select(F.col("conv_id").alias("id2"), F.col("norm").alias("n2")))
-        cos = (
-            dots.join(n1, "id1")
-            .join(n2, "id2")
-            .select(
-                "id1",
-                "id2",
-                (
-                    F.lit(cfg.weights["tfidf"])
-                    * F.when((F.col("n1") > 0) & (F.col("n2") > 0), F.col("dot") / (F.col("n1") * F.col("n2"))).otherwise(0.0)
-                ).alias("partial"),
-            )
-        )
-        parts.append(cos)
-    unsupported = set(cfg.weights) - set(char_kernels) - {"tfidf"}
-    if unsupported:
-        raise ValueError(f"score_pairs_slim does not support kernels: {unsupported}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    agg = out.groupBy("id1", "id2").agg(F.sum("partial").alias("attr_sim"))
-    if char_kernels:
-        # the char partial emits exactly one row per pair, so the groupBy
-        # already covers the full pair set — no restore join needed
-        return agg
-    # tfidf-only: the sparse dot-product inner join drops pairs with no shared
-    # token; restore them with attr_sim = 0.0 so the row set equals `pairs`
-    # (numerical parity with score_pairs, per its contract)
-    return pairs.join(agg, ["id1", "id2"], "left").select(
-        "id1", "id2", F.coalesce("attr_sim", F.lit(0.0)).alias("attr_sim")
     )
 
 
@@ -454,111 +300,87 @@ def score_pairs(
     df_table: DataFrame | None = None,
     corpus_size: int | None = None,
     rel_scores: DataFrame | None = None,
-    spark=None,
+    dense_table: DataFrame | None = None,
 ) -> DataFrame:
-    """(id1, id2) -> (id1, id2, <kernel cols>, attr_sim, sim)."""
+    """(id1, id2) -> (id1, id2, attr_sim, sim).
+
+    ``dense_table``: a caller-precomputed (typically persisted) output of
+    :func:`precompute_dense_tfidf`, reused by the dense TF-IDF route instead
+    of re-deriving the per-doc vectors. The Spark session is taken from
+    ``pairs``.
+    """
     cfg = cfg or ScoringConfig()
-    # tfidf deliberately NOT here: its cosine rides the explode+join path in
-    # tfidf_cosine_pairs — attaching token arrays to millions of pair rows
-    # would dominate the stage for no reason (measured 10x on the bench).
-    need_tokens = any(k in cfg.weights for k in ("stfidf", "jaccard"))
-    need_prefix = any(k in cfg.weights for k in ("jw", "jaro", "lev")) or bool(
-        set(cfg.weights) & set(cfg.custom_kernels)
-    )
-    cols = (["doc_prefix"] if need_prefix else []) + (["tokens"] if need_tokens else [])
-    feat = pair_features(pairs, docs, cols)
+    weights = cfg.weights
+    if ("tfidf" in weights or "stfidf" in weights) and (
+        df_table is None or corpus_size is None
+    ):
+        raise ValueError("tfidf/stfidf kernels need df_table + corpus_size")
+    char = {k: w for k, w in weights.items() if k in CHAR_KERNELS}
 
-    kernel_cols: dict[str, F.Column] = {}
-    if "jw" in cfg.weights:
-        jw = make_pair_sim_udf("jaro_winkler", max_len=cfg.prefix_len)
-        kernel_cols["jw"] = jw(F.col("doc_prefix_1"), F.col("doc_prefix_2"))
-    if "jaro" in cfg.weights:
-        jr = make_pair_sim_udf("jaro", max_len=cfg.prefix_len)
-        kernel_cols["jaro"] = jr(F.col("doc_prefix_1"), F.col("doc_prefix_2"))
-    if "lev" in cfg.weights:
-        kernel_cols["lev"] = scaled_levenshtein_col(
-            F.col("doc_prefix_1"), F.col("doc_prefix_2"), max_len=cfg.prefix_len
-        )
-    if "jaccard" in cfg.weights:
-        kernel_cols["jaccard"] = token_jaccard_col(F.col("tokens_1"), F.col("tokens_2"))
-    for name, batch_fn in cfg.custom_kernels.items():
-        if name not in cfg.weights:
-            continue
-        kernel_cols[name] = _custom_kernel_udf(batch_fn)(
-            F.col("doc_prefix_1"), F.col("doc_prefix_2")
-        )
-
-    stfidf_join = None
-    if "stfidf" in cfg.weights:
-        if df_table is None or corpus_size is None or spark is None:
-            raise ValueError("stfidf kernel needs df_table + corpus_size + spark")
-        # the soft-TF-IDF UDF kernel broadcasts the DF table as a python dict
-        # (per-token DF lookups inside the Arrow batch). Unbounded, that
-        # collect OOMs the driver at web-scale vocab — so (a) prune the table
-        # to tokens that actually occur in candidate docs, (b) above the cap,
-        # fall back to the fully DISTRIBUTED plan (functions/tfidf.py:
-        # soft_tfidf_pairs — same algebra, no driver collect, r3: removes the
-        # last driver-bounded reference kernel).
-        cand_ids = (
-            pairs.select(F.col("id1").alias("conv_id"))
-            .unionByName(pairs.select(F.col("id2").alias("conv_id")))
-            .distinct()
-        )
-        cand_tokens = (
-            docs.join(cand_ids, "conv_id")
-            .select(F.explode(F.array_distinct("tokens")).alias("token"))
-            .distinct()
-        )
-        pruned = df_table.join(cand_tokens, "token")
-        stats = pruned.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.length("token")), F.lit(0)).alias("chars"),
+    stfidf_col = stfidf_join = None
+    if "stfidf" in weights:
+        stfidf_col, stfidf_join = _stfidf_kernel(pairs, docs, cfg, df_table, corpus_size)
+    dense = sparse = None
+    if "tfidf" in weights:
+        # vocabulary and Σ df (= the number of (doc, token) weight rows) in
+        # one job: the route and the sparse broadcast gate
+        vocab, nnz = df_table.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum("df"), F.lit(0))
         ).first()
-        n_tokens = int(stats["n"])
-        # CPython dict-entry footprint: ~104 B fixed (8 B table slot + 49 B
-        # str header + 28 B small int + insertion-order entry) + the token
-        # bytes themselves. An estimate, not an accounting — sized so the
-        # 64 MB default caps the dict two orders of magnitude below driver
-        # heap, with the distributed plan as the overflow path either way.
-        est_bytes = n_tokens * 104 + int(stats["chars"])
-        if n_tokens > cfg.stfidf_max_vocab or est_bytes > cfg.stfidf_max_vocab_bytes:
-            stfidf_join = tfidf_mod.soft_tfidf_pairs(
-                pairs,
-                docs,
-                df_table,
-                corpus_size,
-                threshold=cfg.stfidf_threshold,
-            )
+        if _dense_path_eligible(vocab, corpus_size):
+            dense = dense_table
+            if dense is None:
+                dense = _dense_tfidf_docs(docs, df_table, corpus_size, vocab)
         else:
-            df_map = {r["token"]: r["df"] for r in pruned.collect()}
-            bc = spark.sparkContext.broadcast(df_map)
-            st = tfidf_mod.make_soft_tfidf_udf(
-                bc, corpus_size, threshold=cfg.stfidf_threshold
+            sparse = _sparse_tfidf_partials(
+                pairs, docs, df_table, corpus_size, weights["tfidf"],
+                broadcast=nnz <= SPARSE_TFIDF_BROADCAST_MAX_ROWS,
             )
-            kernel_cols["stfidf"] = st(F.col("tokens_1"), F.col("tokens_2"))
 
-    scored = feat
-    for name, col in kernel_cols.items():
-        scored = scored.withColumn(name, col)
+    # Σ w_k · sim_k in weight order, as one per-pair projection; the fused
+    # char term carries its own weights and stands at its first kernel
+    p1, p2 = F.col("doc_prefix_1"), F.col("doc_prefix_2")
+    terms = []
+    for k, w in weights.items():
+        if k in char:
+            if k == next(iter(char)):
+                udf = make_weighted_char_sim_udf(
+                    char, max_len=cfg.prefix_len, prefix_weight=cfg.jw_prefix_weight
+                )
+                terms.append(udf(p1, p2))
+        elif k == "tfidf":
+            if dense is not None:
+                terms.append(F.lit(w) * _dense_cosine(vocab))
+        elif k == "jaccard":
+            terms.append(F.lit(w) * token_jaccard_col(F.col("tokens_1"), F.col("tokens_2")))
+        elif k == "stfidf":
+            st = stfidf_col if stfidf_col is not None else F.col("stfidf")
+            terms.append(F.lit(w) * st)
+        else:
+            terms.append(F.lit(w) * _custom_kernel_udf(cfg.custom_kernels[k])(p1, p2))
+    partial = reduce(operator.add, terms) if terms else F.lit(0.0)
+
+    need_prefix = bool(char) or bool(set(weights) & set(cfg.custom_kernels))
+    need_tokens = "jaccard" in weights or stfidf_col is not None
+    cols = (["doc_prefix"] if need_prefix else []) + (["tokens"] if need_tokens else [])
+    base = pair_features(pairs, docs, cols) if cols else pairs
     if stfidf_join is not None:
-        scored = scored.join(stfidf_join, ["id1", "id2"])
-        kernel_cols["stfidf"] = F.col("stfidf")
+        base = base.join(stfidf_join, ["id1", "id2"])
+    if dense is not None:
+        base = _attach_dense_tfidf(base, dense)
 
-    if "tfidf" in cfg.weights:
-        if df_table is None or corpus_size is None:
-            raise ValueError("tfidf kernel needs df_table + corpus_size")
-        vectors = tfidf_mod.tfidf_vectors(docs, df_table, corpus_size)
-        norms = tfidf_mod.tfidf_norms(vectors)
-        cos = tfidf_mod.tfidf_cosine_pairs(pairs, vectors, norms)
-        scored = scored.join(cos, ["id1", "id2"], "left").withColumn(
-            "tfidf", F.coalesce("tfidf_cosine", F.lit(0.0))
+    if sparse is None:
+        scored = base.select("id1", "id2", partial.alias("attr_sim"))
+    else:
+        # one projection row per pair plus at most one TF-IDF row (absent
+        # when no shared token == cosine 0): a two-term sum, so the groupBy
+        # is bit-identical to adding the two terms in one projection
+        scored = (
+            base.select("id1", "id2", partial.alias("partial"))
+            .unionByName(sparse)
+            .groupBy("id1", "id2")
+            .agg(F.sum("partial").alias("attr_sim"))
         )
-
-    attr_sim = None
-    for name, w in cfg.weights.items():
-        term = F.lit(w) * F.col(name)
-        attr_sim = term if attr_sim is None else attr_sim + term
-    scored = scored.withColumn("attr_sim", attr_sim)
 
     if cfg.alpha > 0:
         if rel_scores is None:
@@ -566,16 +388,17 @@ def score_pairs(
         r = rel_scores.select(
             F.col("c1").alias("id1"), F.col("c2").alias("id2"), "rel_sim"
         )
-        scored = scored.join(r, ["id1", "id2"], "left").withColumn(
-            "sim",
-            (1 - cfg.alpha) * F.col("attr_sim")
-            + cfg.alpha * F.coalesce("rel_sim", F.lit(0.0)),
+        return scored.join(r, ["id1", "id2"], "left").select(
+            "id1",
+            "id2",
+            "attr_sim",
+            (
+                (1 - cfg.alpha) * F.col("attr_sim")
+                + cfg.alpha * F.coalesce("rel_sim", F.lit(0.0))
+            ).alias("sim"),
         )
-    else:
-        scored = scored.withColumn("sim", F.col("attr_sim"))
+    return scored.select("id1", "id2", "attr_sim", F.col("attr_sim").alias("sim"))
 
-    keep = ["id1", "id2", *kernel_cols.keys()]
-    if "tfidf" in cfg.weights:
-        keep.append("tfidf")
-    keep += ["attr_sim", "sim"]
-    return scored.select(*keep)
+
+# the fast-path name older callers (and the frozen bench.py) import
+score_pairs_slim = score_pairs

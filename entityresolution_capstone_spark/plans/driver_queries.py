@@ -36,7 +36,7 @@ from ..operators import similarity_search as S
 from ..operators import textstats as TS
 from ..operators.canonicalize import canonical_docs
 from ..operators.cc import assign_clusters, connected_components
-from ..operators.scoring import ScoringConfig, score_pairs, score_pairs_slim
+from ..operators.scoring import ScoringConfig, score_pairs
 
 MERSENNE_P = 2147483647
 TURN_TOKENS = 8
@@ -256,7 +256,7 @@ def _er_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     if "scored" not in st:
         if "n_docs" not in st:
             st["n_docs"] = st["docs"].count()
-        st["scored"] = score_pairs_slim(
+        st["scored"] = score_pairs(
             _er_pairs(spark, sf_dir),
             st["docs"],
             ScoringConfig(weights=dict(ER_WEIGHTS), prefix_len=PREFIX),

@@ -183,7 +183,6 @@ class Pipeline:
                 score_cfg,
                 df_table=dft,
                 corpus_size=corpus_size,
-                spark=self.spark,
             ),
             resume,
         )

@@ -399,7 +399,6 @@ class EntityResolver:
         """Per-attr kernels -> weighted attr_sim (reference G1 weighted sum)."""
         from .operators.scoring import ScoringConfig, score_pairs
 
-        spark = self._get_spark()
         n_docs = nodes.count()
         attr_w = self.weights or {a: 1.0 / len(attrs) for a in attrs}
         combined = None
@@ -422,7 +421,7 @@ class EntityResolver:
                 jw_prefix_weight=self._kwargs["jw_prefix_weight"],
             )
             s = score_pairs(
-                pairs, view, cfg, df_table=dft, corpus_size=n_docs, spark=spark
+                pairs, view, cfg, df_table=dft, corpus_size=n_docs
             ).select("id1", "id2", F.col("attr_sim").alias(f"_s_{a}"))
             combined = s if combined is None else combined.join(s, ["id1", "id2"])
         expr = None

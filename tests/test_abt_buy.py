@@ -36,7 +36,7 @@ def matches(spark):
     )
     from entityresolution_capstone_spark.operators.scoring import (
         ScoringConfig,
-        score_pairs_slim,
+        score_pairs,
     )
 
     def side(path, prefix):
@@ -72,7 +72,7 @@ def matches(spark):
     cross = pairs.filter(
         F.col("id1").startswith("a:") & F.col("id2").startswith("b:")
     )
-    scored = score_pairs_slim(
+    scored = score_pairs(
         cross, docs,
         ScoringConfig(weights={"jw": 0.2, "tfidf": 0.8}, prefix_len=128),
         df_table=dft, corpus_size=n,

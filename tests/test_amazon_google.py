@@ -33,7 +33,7 @@ def matches(spark):
     )
     from entityresolution_capstone_spark.operators.scoring import (
         ScoringConfig,
-        score_pairs_slim,
+        score_pairs,
     )
 
     def side(path, prefix, name_col):
@@ -70,7 +70,7 @@ def matches(spark):
     cross = pairs.filter(
         F.col("id1").startswith("a:") & F.col("id2").startswith("g:")
     )
-    scored = score_pairs_slim(
+    scored = score_pairs(
         cross, docs,
         ScoringConfig(weights={"jw": 0.2, "tfidf": 0.8}, prefix_len=128),
         df_table=dft, corpus_size=n,

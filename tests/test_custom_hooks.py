@@ -25,19 +25,25 @@ def test_custom_kernel_hook(spark):
             [1.0 if a and b and a[0] == b[0] else 0.0 for a, b in zip(x, y)]
         )
 
-    scored = SC.score_pairs(
-        pairs.limit(20),
-        docs,
-        SC.ScoringConfig(
-            weights={"firstchar": 0.5, "lev": 0.5},
-            custom_kernels={"firstchar": same_first_char},
-        ),
-    )
-    rows = scored.collect()
-    assert rows
-    for r in rows:
-        assert r["firstchar"] in (0.0, 1.0)
-        assert r["sim"] == pytest.approx(0.5 * r["firstchar"] + 0.5 * r["lev"])
+    few = pairs.limit(20).persist()
+
+    def scores(weights):
+        cfg = SC.ScoringConfig(
+            weights=weights, custom_kernels={"firstchar": same_first_char}
+        )
+        out = SC.score_pairs(few, docs, cfg).collect()
+        return {(r["id1"], r["id2"]): r for r in out}
+
+    first = scores({"firstchar": 1.0})
+    lev = scores({"lev": 1.0})
+    mix = scores({"firstchar": 0.5, "lev": 0.5})
+    few.unpersist()
+    assert mix and set(mix) == set(first) == set(lev)
+    for k, r in mix.items():
+        assert first[k]["attr_sim"] in (0.0, 1.0)
+        assert r["sim"] == pytest.approx(
+            0.5 * first[k]["attr_sim"] + 0.5 * lev[k]["attr_sim"]
+        )
 
 
 def test_unknown_kernel_rejected():

@@ -32,7 +32,7 @@ def matches(spark):
     )
     from entityresolution_capstone_spark.operators.scoring import (
         ScoringConfig,
-        score_pairs_slim,
+        score_pairs,
     )
 
     def side(path, prefix):
@@ -65,7 +65,7 @@ def matches(spark):
     cross = pairs.filter(
         F.col("id1").startswith("a:") & F.col("id2").startswith("d:")
     )
-    scored = score_pairs_slim(
+    scored = score_pairs(
         cross, docs,
         ScoringConfig(weights={"lev": 0.3, "tfidf": 0.7}, prefix_len=128),
         df_table=dft, corpus_size=n,

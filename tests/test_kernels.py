@@ -167,7 +167,7 @@ def test_bitparallel_lev_matches_duckdb_and_dp(s1, s2):
 
 def test_weighted_char_udf_matches_split_kernels(spark):
     """The fused char-kernel UDF == w_jw*JW + w_lev*scaled-lev computed
-    separately (the score_pairs_slim numerical-identity contract)."""
+    separately (the score_pairs numerical-identity contract)."""
     import numpy as np
 
     from entityresolution_capstone_spark.functions.similarity import (

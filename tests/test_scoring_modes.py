@@ -32,13 +32,14 @@ def test_stfidf_scoring_path(spark, small):
         SC.ScoringConfig(weights={"stfidf": 1.0}),
         df_table=dft,
         corpus_size=docs.count(),
-        spark=spark,
     )
     rows = scored.collect()
+    assert rows
     # soft-TF-IDF is NOT bounded by 1: the similarity map may pair a token
     # with a different, higher-idf token, exceeding the plain-cosine bound
     # (py_stringmatching behaves the same way). Identical docs score ~1.
-    assert all(0.0 <= r["stfidf"] < 2.0 for r in rows)
+    # Single-kernel weights: attr_sim IS the stfidf score.
+    assert all(0.0 <= r["attr_sim"] < 2.0 for r in rows)
     assert all(r["sim"] == r["attr_sim"] for r in rows)
 
 
@@ -47,7 +48,15 @@ def test_jaccard_kernel_path(spark, small):
     scored = SC.score_pairs(
         pairs.limit(50), docs, SC.ScoringConfig(weights={"jaccard": 1.0})
     )
-    assert all(0.0 <= r["jaccard"] <= 1.0 for r in scored.collect())
+    rows = scored.collect()
+    assert rows
+    assert all(0.0 <= r["attr_sim"] <= 1.0 for r in rows)
+    # single-kernel weights: attr_sim IS the token-set Jaccard
+    toks = {r["conv_id"]: set(r["tokens"]) for r in docs.select("conv_id", "tokens").collect()}
+    for r in rows:
+        a, b = toks[r["id1"]], toks[r["id2"]]
+        want = len(a & b) / len(a | b) if a | b else 1.0
+        assert r["attr_sim"] == pytest.approx(want, abs=1e-12)
 
 
 def test_alpha_relational_mix(spark, small):
@@ -87,32 +96,124 @@ def test_weights_must_sum_to_one():
         SC.ScoringConfig(weights={"jw": 0.5, "lev": 0.2})
 
 
-def test_slim_matches_detailed_attr_sim(spark, small):
-    """score_pairs_slim (incl. the dense small-vocab tf-idf path) must equal
-    score_pairs' attr_sim."""
-    docs, dft, pairs, _ = small
-    cfg = SC.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5})
-    n = docs.count()
-    detailed = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    slim = SC.score_pairs_slim(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    a = {(r["id1"], r["id2"]): r["attr_sim"] for r in detailed.collect()}
-    b = {(r["id1"], r["id2"]): r["attr_sim"] for r in slim.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-9, k
+def _driver_reference(docs, dft, pairs, n_docs, weights, prefix_len):
+    """attr_sim computed independently of score_pairs: the char kernels on
+    the driver (jaro_winkler_batch / scaled_levenshtein_batch over the
+    collected prefixes), TF-IDF cosine by the JVM tfidf_cosine_pairs plan."""
+    import numpy as np
 
-
-def test_slim_tfidf_only_keeps_all_pairs(spark):
-    """tfidf-only weights: pairs with NO shared token (cosine 0) must still
-    appear in score_pairs_slim output with attr_sim 0.0 (ADVICE fix: the
-    sparse dot-product inner join used to drop them)."""
-    from pyspark.sql import functions as F
-
-    from entityresolution_capstone_spark.functions.tfidf import doc_frequencies
-    from entityresolution_capstone_spark.operators.scoring import (
-        ScoringConfig,
-        score_pairs_slim,
+    from entityresolution_capstone_spark.functions import tfidf as T
+    from entityresolution_capstone_spark.functions.similarity import (
+        jaro_winkler_batch,
+        scaled_levenshtein_batch,
     )
+
+    prefix = {r["conv_id"]: r["doc_prefix"] for r in docs.select("conv_id", "doc_prefix").collect()}
+    keys = [(r["id1"], r["id2"]) for r in pairs.collect()]
+    x = np.array([prefix[a] for a, _ in keys], dtype=object)
+    y = np.array([prefix[b] for _, b in keys], dtype=object)
+    vectors = T.tfidf_vectors(docs, dft, n_docs)
+    cos = {
+        (r["id1"], r["id2"]): r["tfidf_cosine"]
+        for r in T.tfidf_cosine_pairs(pairs, vectors, T.tfidf_norms(vectors)).collect()
+    }
+    kernels = {
+        "jw": jaro_winkler_batch(x, y, max_len=prefix_len),
+        "lev": scaled_levenshtein_batch(x, y, max_len=prefix_len),
+        "tfidf": np.array([cos.get(k, 0.0) for k in keys]),
+    }
+    total = sum(w * kernels[k] for k, w in weights.items())
+    return dict(zip(keys, total))
+
+
+@pytest.mark.parametrize("weights", ["default", "tfidf_only"])
+@pytest.mark.parametrize("route", ["dense", "sparse", "sparse_shuffled"])
+def test_score_pairs_matches_driver_references(spark, small, monkeypatch, route, weights):
+    """Both TF-IDF routes (the sparse one with and without the broadcast of
+    its weight table) give the weighted sum of independently computed
+    kernels, and keep every input pair (a pair sharing no token scores a
+    tfidf term of 0, it is not dropped)."""
+    docs, dft, pairs, _ = small
+    monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", 10**6 if route == "dense" else 0)
+    if route == "sparse_shuffled":
+        monkeypatch.setattr(SC, "SPARSE_TFIDF_BROADCAST_MAX_ROWS", -1)
+    # candidate pairs plus every pair among a few docs, so some pairs share
+    # no candidate block
+    ids = sorted(r["conv_id"] for r in docs.select("conv_id").collect())[:6]
+    cross = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id1 string, id2 string"
+    )
+    p = pairs.select("id1", "id2").unionByName(cross).distinct()
+    cfg = SC.ScoringConfig() if weights == "default" else SC.ScoringConfig(weights={"tfidf": 1.0})
+    n = docs.count()
+    got = {
+        (r["id1"], r["id2"]): (r["attr_sim"], r["sim"])
+        for r in SC.score_pairs(p, docs, cfg, df_table=dft, corpus_size=n).collect()
+    }
+    want = _driver_reference(docs, dft, p, n, cfg.weights, cfg.prefix_len)
+    assert set(got) == set(want) and len(want) > len(ids)
+    for k, (attr, sim) in got.items():
+        assert abs(attr - want[k]) < 1e-9, k
+        assert sim == attr
+
+
+def test_jw_prefix_weight_takes_effect(spark):
+    """ScoringConfig.jw_prefix_weight reaches the fused kernel, on both its
+    uniform-length (shared tensor) and general chunk paths."""
+    import numpy as np
+
+    from entityresolution_capstone_spark.functions.similarity import jaro_winkler_batch
+
+    # 300 equal-length pairs take the modal-length fused path; the mixed
+    # lengths take the general one. Every pair shares a prefix and jaro < 1.
+    rows = [("martha%03d" % i, "marhta%03d" % i) for i in range(300)]
+    rows += [("dwayne", "duane"), ("dixon", "dicksonx"), ("jellyfish", "jellyfishes")]
+    docs = spark.createDataFrame(
+        [(f"a{i}", a) for i, (a, _) in enumerate(rows)]
+        + [(f"b{i}", b) for i, (_, b) in enumerate(rows)],
+        "conv_id string, doc_prefix string",
+    )
+    # one partition, so a single Arrow batch holds all 300 modal-length pairs
+    pairs = spark.createDataFrame(
+        [(f"a{i}", f"b{i}") for i in range(len(rows))], "id1 string, id2 string"
+    ).coalesce(1)
+    x = np.array([a for a, _ in rows], dtype=object)
+    y = np.array([b for _, b in rows], dtype=object)
+
+    def scores(pw):
+        cfg = SC.ScoringConfig(weights={"jw": 1.0}, jw_prefix_weight=pw)
+        out = SC.score_pairs(pairs, docs, cfg).collect()
+        by_id = {r["id1"]: r["attr_sim"] for r in out}
+        return np.array([by_id[f"a{i}"] for i in range(len(rows))])
+
+    at_02 = scores(0.2)
+    want = jaro_winkler_batch(x, y, prefix_weight=0.2, max_len=64)
+    assert np.array_equal(at_02, want)
+    at_01 = scores(0.1)
+    assert np.all(at_02 > at_01)
+
+
+def test_scoring_leaves_no_cached_frames(spark, small, monkeypatch, tmp_path):
+    """score_pairs returns a lazy frame, so it must persist nothing it could
+    never release: scoring plus a write adds no cache-manager entries, on
+    either TF-IDF route."""
+    docs, dft, pairs, _ = small
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n = docs.count()
+    for route, cap in (("dense", 10**6), ("sparse", 0)):
+        monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", cap)
+        before = cm.numCachedEntries()
+        SC.score_pairs(pairs, docs, SC.ScoringConfig(), df_table=dft, corpus_size=n).write.parquet(
+            str(tmp_path / route)
+        )
+        assert cm.numCachedEntries() == before, route
+
+
+def test_slim_tfidf_only_keeps_all_pairs(spark, monkeypatch):
+    """tfidf-only weights: pairs with NO shared token (cosine 0) must still
+    appear in score_pairs output with attr_sim 0.0, on both TF-IDF routes
+    (ADVICE fix: the sparse dot-product inner join used to drop them)."""
+    from entityresolution_capstone_spark.functions.tfidf import doc_frequencies
 
     docs = spark.createDataFrame(
         [
@@ -127,14 +228,16 @@ def test_slim_tfidf_only_keeps_all_pairs(spark):
         [("c1", "c2"), ("c1", "c3"), ("c3", "c4")], "id1 string, id2 string"
     )
     dft = doc_frequencies(docs)
-    out = score_pairs_slim(
-        pairs, docs, ScoringConfig(weights={"tfidf": 1.0}),
-        df_table=dft, corpus_size=4,
-    )
-    rows = {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
-    assert set(rows) == {("c1", "c2"), ("c1", "c3"), ("c3", "c4")}
-    assert rows[("c1", "c3")] == 0.0 and rows[("c3", "c4")] == 0.0
-    assert rows[("c1", "c2")] > 0.0
+    for cap in (10**6, 0):  # dense route, then sparse route
+        monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", cap)
+        out = SC.score_pairs(
+            pairs, docs, SC.ScoringConfig(weights={"tfidf": 1.0}),
+            df_table=dft, corpus_size=4,
+        )
+        rows = {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
+        assert set(rows) == {("c1", "c2"), ("c1", "c3"), ("c3", "c4")}, cap
+        assert rows[("c1", "c3")] == 0.0 and rows[("c3", "c4")] == 0.0, cap
+        assert rows[("c1", "c2")] > 0.0, cap
 
 
 def test_stfidf_vocab_cap_falls_back_to_distributed(spark):
@@ -162,7 +265,7 @@ def test_stfidf_vocab_cap_falls_back_to_distributed(spark):
 
     def scores(cap):
         cfg = ScoringConfig(weights={"stfidf": 1.0}, stfidf_max_vocab=cap)
-        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30, spark=spark)
+        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30)
         return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 
     broadcast_path = scores(10_000)  # vocab (31 tokens) fits → dict broadcast
@@ -199,7 +302,7 @@ def test_stfidf_byte_cap_falls_back_to_distributed(spark):
         cfg = ScoringConfig(
             weights={"stfidf": 1.0}, stfidf_max_vocab_bytes=byte_cap
         )
-        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30, spark=spark)
+        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30)
         return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 
     # 64 MB default: dict path. 1 KB: 31 entries × (104 B + ~42 chars) ≈ 4.5 KB
@@ -211,21 +314,23 @@ def test_stfidf_byte_cap_falls_back_to_distributed(spark):
         assert abs(dict_path[k] - rerouted[k]) < 1e-12, k
 
 
-def test_dense_table_precompute_parity(spark, small):
-    """score_pairs_slim with a caller-precomputed dense_table must be
+def test_dense_table_precompute_parity(spark, small, monkeypatch):
+    """score_pairs with a caller-precomputed dense_table must be
     bit-identical to the inline dense path (bench.py materializes the
     per-doc featurization once in q_block and reuses it across scoring
     passes — the output may not depend on who derived the table)."""
     docs, dft, pairs, _ = small
+    # the fixture's vocabulary is above the default gate; lift it
+    monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", 10**6)
     n_docs = docs.count()
     cfg = SC.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5})
 
-    inline = SC.score_pairs_slim(
+    inline = SC.score_pairs(
         pairs, docs, cfg, df_table=dft, corpus_size=n_docs
     )
     dense = SC.precompute_dense_tfidf(docs, dft, n_docs)
     assert dense is not None  # tiny corpus must take the dense path
-    pre = SC.score_pairs_slim(
+    pre = SC.score_pairs(
         pairs, docs, cfg, df_table=dft, corpus_size=n_docs,
         dense_table=dense.persist(),
     )
@@ -242,46 +347,15 @@ def test_force_sparse_tfidf_env_matches_dense_path(spark, small, monkeypatch):
     docs, dft, pairs, _ = small
     cfg = SC.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5})
     n = docs.count()
+    monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", 10**6)
     monkeypatch.delenv("SPARK_GRAFT_FORCE_SPARSE_TFIDF", raising=False)
     assert SC._dense_path_eligible(dft.count(), n)  # dense is the baseline
-    dense = SC.score_pairs_slim(pairs, docs, cfg, df_table=dft, corpus_size=n)
+    dense = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
     a = {(r["id1"], r["id2"]): r["attr_sim"] for r in dense.collect()}
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SPARSE_TFIDF", "1")
     assert not SC._dense_path_eligible(dft.count(), n)
-    sparse = SC.score_pairs_slim(pairs, docs, cfg, df_table=dft, corpus_size=n)
+    sparse = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
     b = {(r["id1"], r["id2"]): r["attr_sim"] for r in sparse.collect()}
     assert set(a) == set(b) and len(a) > 0
     for k in a:
         assert abs(a[k] - b[k]) < 1e-9, k
-
-
-def test_tfidf_hot_cold_split_matches_plain_sparse(spark, small, monkeypatch):
-    """r6 hot/cold token split: the sparse route with the hottest tokens
-    scored as dense mini-vectors (static dot) + tail tokens in the explode
-    join must equal the single explode join — the shared tokens are
-    partitioned between the two sums, so only FP association can differ."""
-    docs, dft, pairs, _ = small
-    cfg = SC.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5})
-    n = docs.count()
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_SPARSE_TFIDF", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_HOT_SPLIT", "1")
-    split = SC.score_pairs_slim(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    a = {(r["id1"], r["id2"]): r["attr_sim"] for r in split.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_HOT_SPLIT", "0")
-    plain = SC.score_pairs_slim(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    b = {(r["id1"], r["id2"]): r["attr_sim"] for r in plain.collect()}
-    assert set(a) == set(b) and len(a) > 0
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-9, k
-
-    # tfidf-only (no char kernels): the pair-restore path must also agree
-    cfg2 = SC.ScoringConfig(weights={"tfidf": 1.0})
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_HOT_SPLIT", "1")
-    s2 = SC.score_pairs_slim(pairs, docs, cfg2, df_table=dft, corpus_size=n)
-    a2 = {(r["id1"], r["id2"]): r["attr_sim"] for r in s2.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_HOT_SPLIT", "0")
-    p2 = SC.score_pairs_slim(pairs, docs, cfg2, df_table=dft, corpus_size=n)
-    b2 = {(r["id1"], r["id2"]): r["attr_sim"] for r in p2.collect()}
-    assert set(a2) == set(b2) and len(a2) > 0
-    for k in a2:
-        assert abs(a2[k] - b2[k]) < 1e-9, k

@@ -101,7 +101,7 @@ def test_empty_token_side_scores_zero(spark):
 def test_score_pairs_over_cap_uses_distributed(spark):
     """score_pairs with a vocab cap below the corpus vocabulary must fall back
     to the distributed plan (r3: no refusal) and produce the same stfidf
-    column as the UDF path."""
+    score as the UDF path."""
     from entityresolution_capstone_spark.operators.scoring import (
         ScoringConfig,
         score_pairs,
@@ -118,8 +118,9 @@ def test_score_pairs_over_cap_uses_distributed(spark):
         cfg = ScoringConfig(
             weights={"stfidf": 1.0}, stfidf_max_vocab=cap, stfidf_threshold=0.5
         )
-        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n, spark=spark)
-        return {(r["id1"], r["id2"]): r["stfidf"] for r in out.collect()}
+        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
+        # single-kernel weights: attr_sim IS the stfidf score
+        return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 
     udf_path = run(10_000)   # under cap -> broadcast-dict UDF kernel
     dist_path = run(1)       # over cap -> distributed soft_tfidf_pairs

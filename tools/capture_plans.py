@@ -33,7 +33,7 @@ def main():
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
     from entityresolution_capstone_spark.operators.scoring import (
         precompute_dense_tfidf,
-        score_pairs_slim,
+        score_pairs,
     )
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
@@ -75,7 +75,7 @@ def main():
         cap("q_block_pairs", pairs)
         n_docs = docs.count()
         dense = precompute_dense_tfidf(docs, dft, n_docs)
-        scored = score_pairs_slim(
+        scored = score_pairs(
             pairs, docs,
             DQ.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5},
                              prefix_len=128),

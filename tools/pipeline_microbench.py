@@ -53,7 +53,7 @@ def main():
 
     def score_fn():
         n_docs = docs.count()
-        s = DQ.score_pairs_slim(
+        s = DQ.score_pairs(
             state["pairs"], docs,
             DQ.ScoringConfig(weights=dict(DQ.ER_WEIGHTS), prefix_len=DQ.PREFIX),
             df_table=dft, corpus_size=n_docs,

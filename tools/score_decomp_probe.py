@@ -51,7 +51,7 @@ def main():
 
     from entityresolution_capstone_spark.functions.tfidf import doc_frequencies
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
-    from entityresolution_capstone_spark.operators.scoring import score_pairs_slim
+    from entityresolution_capstone_spark.operators.scoring import score_pairs
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
     BENCH_BLOCKING = DQ.B.BlockingConfig(
@@ -88,7 +88,7 @@ def main():
         return int(row["n"])
 
     def plan(weights):
-        return lambda: score_pairs_slim(
+        return lambda: score_pairs(
             pairs,
             docs,
             DQ.ScoringConfig(weights=weights, prefix_len=BENCH_PREFIX),

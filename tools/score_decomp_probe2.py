@@ -40,7 +40,7 @@ def main():
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
     from entityresolution_capstone_spark.operators.scoring import (
         precompute_dense_tfidf,
-        score_pairs_slim,
+        score_pairs,
     )
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
@@ -101,7 +101,7 @@ def main():
     clock("bjoin2", bjoin)
 
     def plan(weights):
-        return lambda: score_pairs_slim(
+        return lambda: score_pairs(
             pairs,
             docs,
             DQ.ScoringConfig(weights=weights, prefix_len=BENCH_PREFIX),

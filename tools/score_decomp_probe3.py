@@ -36,7 +36,7 @@ def main():
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
     from entityresolution_capstone_spark.operators.scoring import (
         precompute_dense_tfidf,
-        score_pairs_slim,
+        score_pairs,
     )
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
@@ -79,7 +79,7 @@ def main():
     full = {"jw": 0.3, "lev": 0.2, "tfidf": 0.5}
 
     def make(dt):
-        return score_pairs_slim(
+        return score_pairs(
             pairs,
             docs,
             DQ.ScoringConfig(weights=full, prefix_len=BENCH_PREFIX),

@@ -78,7 +78,7 @@ def main():
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
     from entityresolution_capstone_spark.operators.scoring import (
         precompute_dense_tfidf,
-        score_pairs_slim,
+        score_pairs,
     )
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
@@ -116,7 +116,7 @@ def main():
     prep_s = time.time() - t0
 
     def score_run():
-        scored = score_pairs_slim(
+        scored = score_pairs(
             pairs,
             docs,
             DQ.ScoringConfig(

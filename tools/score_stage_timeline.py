@@ -43,7 +43,7 @@ def main():
 
     from entityresolution_capstone_spark.functions.tfidf import doc_frequencies
     from entityresolution_capstone_spark.operators.canonicalize import canonical_docs
-    from entityresolution_capstone_spark.operators.scoring import score_pairs_slim
+    from entityresolution_capstone_spark.operators.scoring import score_pairs
     from entityresolution_capstone_spark.plans import driver_queries as DQ
 
     BENCH_BLOCKING = DQ.B.BlockingConfig(
@@ -68,7 +68,7 @@ def main():
     n_docs = docs.count()
 
     def run():
-        scored = score_pairs_slim(
+        scored = score_pairs(
             pairs,
             docs,
             DQ.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5}, prefix_len=BENCH_PREFIX),
