@@ -13,6 +13,15 @@ North-rule contract implemented here:
   rows_out, wall_ms) plus stage-level metrics to the ``_metrics`` table;
 - the connected-components frontier is checkpointed per round (operators/cc.py).
 
+The bookkeeping runs no Spark job. ``partition_id``/``rows_out`` are the
+writing task's partition and its row count, taken from the commit manifest
+(parquet footers, see sources/tables.py), not from a scan of the table read
+back; ``wall_ms`` is build + commit. ``n_docs``/``n_pairs`` also come from the
+manifests, on fresh and resumed runs alike. Each ``_metrics`` append is one
+small parquet file written on the driver with pyarrow (``schemas.
+STAGE_METRICS`` types), so like the commit itself it assumes a local
+filesystem; ``spark.read.parquet`` reads the table as before.
+
 The reference's equivalent control flow is ``Resolver.resolve``
 (/root/reference/src/entity_resolver/core/resolver.py:295-345) — a
 single-threaded in-memory sequence; here each arrow is a Catalyst-planned
@@ -76,23 +85,35 @@ class Pipeline:
         return os.path.join(self.cfg.base_dir, "_metrics")
 
     def _append_metrics(self, rows: list[dict]) -> None:
+        """Append rows to ``_metrics`` as one parquet file, without Spark."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from .. import schemas
 
-        df = self.spark.createDataFrame(
+        table = pa.Table.from_pylist(
             [
-                (
-                    r["run_id"],
-                    r["stage"],
-                    r.get("partition_id"),
-                    r.get("rows_out"),
-                    r.get("wall_ms"),
-                    json.dumps(r.get("extra", {})),
-                )
+                {
+                    "run_id": r["run_id"],
+                    "stage": r["stage"],
+                    "partition_id": r.get("partition_id"),
+                    "rows_out": r.get("rows_out"),
+                    "wall_ms": r.get("wall_ms"),
+                    "extra": json.dumps(r.get("extra", {})),
+                }
                 for r in rows
             ],
-            schema=schemas.STAGE_METRICS,
+            schema=to_arrow_schema(schemas.STAGE_METRICS),
         )
-        df.coalesce(1).write.mode("append").parquet(self._metrics_path())
+        out = self._metrics_path()
+        os.makedirs(out, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        # written under a hidden name, then renamed: a reader never sees a
+        # partial file
+        tmp = os.path.join(out, "." + name)
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(out, name))
 
     def _run_stage(
         self, stage: str, build, resume: bool = True, extra: dict | None = None
@@ -102,38 +123,20 @@ class Pipeline:
         if resume and TBL.is_committed(path):
             return TBL.read_table(self.spark, path)
         t0 = time.time()
-        df = build()
-        TBL.write_table(df, path, extra_manifest={"run_id": self.run_id, "stage": stage})
-        out = TBL.read_table(self.spark, path)
-        wall_ms = int((time.time() - t0) * 1000)
-        per_part = (
-            out.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .count()
-            .collect()
+        manifest = TBL.write_table(
+            build(), path, extra_manifest={"run_id": self.run_id, "stage": stage}
         )
+        wall_ms = int((time.time() - t0) * 1000)
+        base = {
+            "run_id": self.run_id, "stage": stage, "wall_ms": wall_ms, "extra": extra or {}
+        }
         rows = [
-            {
-                "run_id": self.run_id,
-                "stage": stage,
-                "partition_id": int(p["_pid"]),
-                "rows_out": int(p["count"]),
-                "wall_ms": wall_ms,
-                "extra": extra or {},
-            }
-            for p in per_part
-        ] or [
-            {
-                "run_id": self.run_id,
-                "stage": stage,
-                "partition_id": None,
-                "rows_out": 0,
-                "wall_ms": wall_ms,
-                "extra": extra or {},
-            }
-        ]
+            {**base, "partition_id": pid, "rows_out": n}
+            for pid, n in sorted(TBL.partition_rows(manifest).items())
+            if n
+        ] or [{**base, "partition_id": None, "rows_out": 0}]
         self._append_metrics(rows)
-        return out
+        return TBL.read_table(self.spark, path)
 
     # -- stages --------------------------------------------------------------
 
@@ -151,7 +154,7 @@ class Pipeline:
         )
 
         dft = self._run_stage("df_table", lambda: doc_frequencies(docs), resume)
-        corpus_size = docs.count()
+        corpus_size = TBL.num_rows(self.spark, self._path("docs"))
         tdict = self._run_stage(
             "token_dict", lambda: B.token_dictionary(dft), resume
         )
@@ -164,9 +167,16 @@ class Pipeline:
             lambda: B.block_size_metrics(blocks, cfg.blocking),
             resume,
         )
+        # the pairs are lazy over frames blocking persists; release those
+        # once the stage has committed (later stages read the table)
+        held: list[DataFrame] = []
         pairs = self._run_stage(
-            "pairs", lambda: B.candidate_pairs(blocks, cfg.blocking), resume
+            "pairs",
+            lambda: B.candidate_pairs(blocks, cfg.blocking, persisted=held),
+            resume,
         )
+        for df in held:
+            df.unpersist()
 
         # with the iterative alpha path the rel mix-in happens per merge
         # round (operators/iterative.py), so the scoring stage computes the
@@ -269,7 +279,7 @@ class Pipeline:
         result = {
             "run_id": self.run_id,
             "n_docs": corpus_size,
-            "n_pairs": pairs.count(),
+            "n_pairs": TBL.num_rows(self.spark, self._path("pairs")),
             "n_clusters": clusters.select("cluster_id").distinct().count(),
             "clusters_path": self._path("clusters"),
         }

@@ -12,18 +12,30 @@ configured), :func:`write_table` transparently uses ``saveAsTable`` instead.
 Why not plain ``parquet.write``: a job killed mid-write leaves a partial
 directory that a naive reader would treat as complete — the manifest is the
 commit point.
+
+The parquet manifest also records what the table's readers would otherwise
+pay Spark jobs for: the written frame's schema (``schema``, so
+:func:`read_table` skips schema inference) and every data file's row count
+read from its parquet footer on the driver (``file_rows``, relative file name
+-> rows). Spark names a data file ``part-NNNNN-...`` after the partition of
+the task that wrote it, so ``file_rows`` is per-writing-task lineage
+(:func:`partition_rows`). Like the commit's ``os.rename``, the footer read
+assumes the table lives on a filesystem the driver can open directly.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_ercs_manifest.json"
+_PART_ID = re.compile(r"part-(\d+)-")
 
 
 def _iceberg_available(spark: SparkSession) -> str | None:
@@ -77,15 +89,63 @@ def write_table(
         **(extra_manifest or {}),
     }
     if not catalog:
+        # partition columns are read back from directory names, typed and
+        # ordered by inference, so only an unpartitioned schema is recorded
+        if not partition_by:
+            manifest["schema"] = df.schema.jsonValue()
+        manifest["file_rows"] = _file_rows(path)
         with open(os.path.join(path, MANIFEST), "w") as f:
             json.dump(manifest, f)
     return manifest
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
+def _file_rows(path: str) -> dict[str, int]:
+    """Row count of every data file under ``path``, from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                full = os.path.join(root, name)
+                out[os.path.relpath(full, path)] = pq.ParquetFile(full).metadata.num_rows
+    return out
+
+
+def read_manifest(path: str) -> dict:
     if not is_committed(path):
         raise FileNotFoundError(f"no committed table at {path}")
-    return spark.read.parquet(path)
+    with open(os.path.join(path, MANIFEST)) as f:
+        return json.load(f)
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """A committed table; read with its recorded schema when the manifest has
+    one (no inference job), else with the schema inferred from the files."""
+    schema = read_manifest(path).get("schema")
+    reader = spark.read
+    if schema:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+def partition_rows(manifest: dict) -> dict[int, int]:
+    """Rows per writing-task partition id (summed over that task's files)."""
+    out: dict[int, int] = {}
+    for name, n in manifest["file_rows"].items():
+        pid = int(_PART_ID.match(os.path.basename(name)).group(1))
+        out[pid] = out.get(pid, 0) + n
+    return out
+
+
+def num_rows(spark: SparkSession, path: str) -> int:
+    """A committed table's row count: from the manifest, or a ``count()`` for
+    a table committed without file row counts."""
+    manifest = read_manifest(path)
+    if "file_rows" in manifest:
+        return sum(manifest["file_rows"].values())
+    return read_table(spark, path).count()
 
 
 def write_bucketed_table(

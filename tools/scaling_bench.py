@@ -418,6 +418,9 @@ def _pool_levels(pairs: list[dict]) -> None:
                 if tagged:
                     p["healthy_windows"] = 0
                     p["unhealthy_windows"] = len(tagged)
+                    # no window vouches for the host: the verdict is not
+                    # evidence the gate holds
+                    p["provisional"] = True
                 p["scaling_efficiency"] = p["all_window_median"]
                 p["efficiency_method"] = "same-window-median"
         else:
@@ -483,7 +486,8 @@ otherwise-fast trial must not pin the whole table).
         # another pair's pass (nor vice versa — no all()-collapse either way).
         verdict = ", ".join(
             f"{r['N']}v{4*r['N']} = {r['scaling_efficiency']:.3f} "
-            f"({'MET' if r['scaling_efficiency'] >= 0.8 else 'NOT MET'})"
+            f"({'MET' if r['scaling_efficiency'] >= 0.8 else 'NOT MET'}"
+            f"{', provisional: 0 healthy windows' if r.get('provisional') else ''})"
             for r in gate_pairs
         )
         md.append(
@@ -565,17 +569,22 @@ proved ALU alone is blind to it: it certified windows healthy at 0.87-1.01
 while the workload collapsed). A window is tagged healthy only if BOTH
 probe kinds pass their floors (alu >= {thr}, mem >= {memthr}) at BOTH
 endpoints; a transient that recovers before the post-probe can still slip
-through, so the tag is necessary, not sufficient — it can only
-under-claim, never launder a bad window into the headline. Each level's
+through, so the tag is necessary, not sufficient. Each level's
 q_score inside a window is itself min-of-{wt} timed trials (v4), so a
-single straggler run cannot destroy a window. Headline = median over
-healthy windows; the all-window median is disclosed beside it and every
-window stays in the table.
+single straggler run cannot destroy a window. {headline}
 
 | window | q_score local[{n}] | q_score local[{m}] | efficiency | alu pre/post | mem pre/post | healthy |
 |---|---|---|---|---|---|---|
 """.format(thr=BALLAST_MIN, memthr=BALLAST_MEM_MIN, wt=WINDOW_TRIALS,
-           n=n, m=4 * n)
+           n=n, m=4 * n, headline=(
+               "Headline = median over healthy windows, so the tag can only "
+               "under-claim, never launder a bad window into the headline; "
+               "the all-window median is disclosed beside it and every "
+               "window stays in the table."
+               if r.get("healthy_windows", 0)
+               else "No window here is healthy, so the headline is the "
+               "all-window median of unhealthy windows and its gate "
+               "verdict is provisional; every window stays in the table."))
                     + "\n".join(
                         f"| {t['window']} | {t['q_score_N']} | {t['q_score_4N']} "
                         f"| {t['window_efficiency']:.3f} "

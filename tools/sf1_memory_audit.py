@@ -23,14 +23,18 @@ whether a real executor OOMs) and the python driver's peak RSS.
 
 Writes BENCH/SF1_MEMORY.json. Usage:
 
-    python tools/sf1_memory_audit.py [k] [base_sf_dir]
+    python tools/sf1_memory_audit.py [k] [base_sf_dir] [--bench]
 
 Defaults: k=10, base=/root/testdata/sf0.1. The scaled input is built under
 $ERCS_SCALE_SCRATCH (default /dev/shm/ercs-scale) and reused if present.
+``--bench`` also runs one bench.py trial at the scaled input and records its
+process tree's peak RSS and query walls (``queries`` is null when the bench
+printed no result line).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -82,9 +86,21 @@ def _storage_mb(spark) -> dict:
     }
 
 
+def _bench_queries(line: str | None) -> dict | None:
+    """The query walls of bench.py's JSON result line; None for a crashed run."""
+    try:
+        return json.loads(line)["queries"]
+    except (TypeError, ValueError, KeyError):
+        return None
+
+
 def main():
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("k", type=int, nargs="?", default=10)
+    ap.add_argument("base", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("--bench", action="store_true")
+    args = ap.parse_args()
+    k, base = args.k, args.base
     scratch = os.environ.get("ERCS_SCALE_SCRATCH", "/dev/shm/ercs-scale")
     sf_dir = os.path.join(scratch, f"x{k}")
 
@@ -148,7 +164,7 @@ def main():
 
     spark.stop()
 
-    if "--bench" in sys.argv:
+    if args.bench:
         # The gate chain above rides ER_BLOCKING's hot-block cap (the 31-token
         # corpus vocabulary makes most blocks oversized, so the cap bounds the
         # gate's pair mass at ~710k/sf0.1-copy). The BENCH chain is the heavy
@@ -207,7 +223,7 @@ def main():
             "wall_s": round(time.time() - t0, 1),
             "trials": 1,
             "tree_peak_rss_mb": round(peak_mb, 1),
-            "queries": json.loads(bench_line)["queries"] if bench_line else None,
+            "queries": _bench_queries(bench_line),
         }
         print(json.dumps({"bench_at_scale": report["bench_at_scale"]}), flush=True)
 
