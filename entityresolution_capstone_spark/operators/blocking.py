@@ -16,11 +16,26 @@ SparkER, EDBT 2019 — PAPERS.md): blocking as data-parallel key generation +
 equality joins, with explicit block-size accounting instead of trusting the
 key distribution.
 
-Skew handling is explicit (north rule): block sizes are computed first; blocks
-larger than ``max_block_size`` are dropped and *reported* (dropped-block
-metrics), since a hot token (stopword-like) generates O(s²) candidate pairs for
-no precision gain. The self-join runs on the block key after an explicit
-``repartition`` on the key; AQE skew-join splitting handles residual imbalance.
+Skew handling is explicit (north rule): one window count gives every block's
+size (:func:`with_block_size`); blocks larger than ``max_block_size`` are
+dropped and *reported* (dropped-block metrics), since a hot token
+(stopword-like) generates O(s²) candidate pairs for no precision gain.
+
+This module holds the ONE MinHash-LSH band join that blocking and the dedup
+operators (operators/dedup.py) share — SparkER's key-generation operator plus
+one equality-join operator:
+
+- :func:`minhash_mins`: the signature builder (raw per-hash mins per doc);
+  blocking renders ``mh:<band>:...`` strings from it, dedup packed int64
+  band keys (:func:`pack_band`), the estimator audit an array;
+- :func:`bucket_self_join`: the skew-safe self-join — hot blocks through the
+  salted sub-bucket join (:func:`salted_pairs`), the rest through an
+  explicitly repartitioned equi-join; its input is pinned once by
+  :func:`_pin` (eager localCheckpoint), the one materialization policy, so
+  no caller has frames to release;
+- :func:`first_band_match`: the exactly-once predicate over packed band
+  payloads (variable-width keys use the Arrow kernel
+  :func:`_pair_key_stats` instead).
 
 The MinHash implementation is deliberately dictionary-based (token -> dense id
 via the document-frequency table, then ``(a_i * id + b_i) mod P``): the DF
@@ -32,23 +47,17 @@ ANSI SQL (for the DuckDB correctness oracle), and everything stays JVM-side
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.ids import dense_rank_ids
 
 MERSENNE_P = 2147483647  # 2^31 - 1
-
-
-def _persist(df: DataFrame, persisted: list[DataFrame] | None) -> DataFrame:
-    df = df.persist()
-    if persisted is not None:
-        persisted.append(df)
-    return df
 
 
 @dataclass
@@ -114,47 +123,63 @@ def token_block_keys(
     )
 
 
+def minhash_mins(
+    docs: DataFrame,
+    token_dict: DataFrame,
+    n_hashes: int,
+    seed: int,
+    id_col: str = "conv_id",
+    tokens_col: str = "tokens",
+) -> DataFrame:
+    """(id, h0..h{n_hashes-1}): the raw MinHash signature of every doc — the
+    one signature builder that blocking keys, dedup band buckets and the
+    estimator audit all render from.
+
+    Plan: explode distinct tokens -> broadcast-join the dictionary -> for each
+    hash function take min((a*id + b) % P) per doc. The per-hash min is one
+    groupBy(id) aggregation (map-side combinable). Every value is < P < 2^31.
+    """
+    toks = docs.select(
+        id_col, F.explode(F.array_distinct(tokens_col)).alias("token")
+    ).join(F.broadcast(token_dict.select("token", "token_id")), "token")
+    return toks.groupBy(id_col).agg(
+        *[
+            F.min(
+                (F.lit(a) * F.col("token_id") + F.lit(b)) % F.lit(MERSENNE_P)
+            ).alias(f"h{i}")
+            for i, (a, b) in enumerate(_hash_params(n_hashes, seed))
+        ]
+    )
+
+
+def pack_band(hs: list) -> list:
+    """One band's MinHash values (each < 2^31) packed two per int64
+    (``h_even * 2^31 + h_odd`` < 2^62): ``ceil(len(hs)/2)`` longs that
+    identify the band key EXACTLY — injective, so a packed key join gives the
+    same pair set as the ``mh:<band>:<h>_<h>`` string key."""
+    return [
+        hs[i] * F.lit(1 << 31) + (hs[i + 1] if i + 1 < len(hs) else F.lit(0))
+        for i in range(0, len(hs), 2)
+    ]
+
+
 def minhash_signatures(
     docs: DataFrame, token_dict: DataFrame, cfg: BlockingConfig
 ) -> DataFrame:
-    """(conv_id, band, band_sig): LSH band keys from min-hashed token ids.
-
-    Plan: explode distinct tokens -> broadcast-join the dictionary -> for each
-    of b*r hash functions take min((a*id + b) % P) per doc -> concat per band.
-    The per-hash min is one groupBy(conv_id) aggregation (map-side combinable).
-    """
-    n_hashes = cfg.minhash_rows * cfg.minhash_bands
-    params = _hash_params(n_hashes, cfg.seed)
-    toks = docs.select(
-        "conv_id", F.explode(F.array_distinct("tokens")).alias("token")
-    ).join(F.broadcast(token_dict.select("token", "token_id")), "token")
-    mins = [
-        F.min((F.lit(a) * F.col("token_id") + F.lit(b)) % F.lit(MERSENNE_P)).alias(
-            f"h{i}"
-        )
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = toks.groupBy("conv_id").agg(*mins)
-    bands = []
-    for band in range(cfg.minhash_bands):
-        cols = [
-            F.col(f"h{band * cfg.minhash_rows + r}").cast("string")
-            for r in range(cfg.minhash_rows)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.concat_ws("_", *cols).alias("sig"),
-            )
-        )
-    return sig.select(
-        "conv_id", F.explode(F.array(*bands)).alias("bs")
-    ).select(
-        "conv_id",
+    """(conv_id, block_key): LSH band keys ``mh:<band>:<h>_<h>...`` rendered
+    from :func:`minhash_mins`, one row per (doc, band)."""
+    r = cfg.minhash_rows
+    sig = minhash_mins(docs, token_dict, r * cfg.minhash_bands, cfg.seed)
+    keys = [
         F.concat(
-            F.lit("mh:"), F.col("bs.band").cast("string"), F.lit(":"), F.col("bs.sig")
-        ).alias("block_key"),
-    )
+            F.lit(f"mh:{band}:"),
+            F.concat_ws(
+                "_", *[F.col(f"h{band * r + i}").cast("string") for i in range(r)]
+            ),
+        )
+        for band in range(cfg.minhash_bands)
+    ]
+    return sig.select("conv_id", F.explode(F.array(*keys)).alias("block_key"))
 
 
 def build_blocks(
@@ -195,13 +220,12 @@ def block_size_metrics(blocks: DataFrame, cfg: BlockingConfig) -> DataFrame:
 def candidate_pairs(
     blocks: DataFrame,
     cfg: BlockingConfig | None = None,
-    shuffle_partitions: int | None = None,
     with_weight: bool = False,
-    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Self-join blocks on block_key -> distinct unordered pairs (id1 < id2).
 
-    Skew handling, explicitly (north rule):
+    Skew handling, explicitly (north rule), in :func:`bucket_self_join` over
+    one block-size column (:func:`with_block_size`):
     - blocks larger than ``max_block_size`` are excluded before the join
       (accounting in :func:`block_size_metrics`);
     - with ``salt_block_size > 0``, blocks in (salt_block_size,
@@ -213,78 +237,34 @@ def candidate_pairs(
       lands once; AQE skew-join splits any residual imbalance.
 
     Pair dedup across keys is NOT a distinct() (that would shuffle the full
-    pair set — the dominant exchange at 10^10 pairs): each member carries the
-    sorted array of its doc's kept DENSE KEY IDS (:func:`_attach_key_payload`)
-    and a pair survives only under the MINIMUM key the two docs share —
-    every co-blocked pair is emitted exactly once, as a per-row predicate
-    evaluated by one Arrow-batched NumPy kernel (:func:`_pair_key_stats`).
-    The key dictionary + arrays cost key-/doc-cardinality shuffles, orders of
-    magnitude below pair cardinality.
+    pair set — the dominant exchange at 10^10 pairs): each member carries a
+    per-doc payload of its kept keys and a pair survives only under the FIRST
+    key the two docs share — every co-blocked pair is emitted exactly once,
+    as a per-row predicate. Two payloads, one join:
 
-    The returned pairs are lazy over intermediates this function persists, so
-    it cannot release them itself. A caller that materializes the pairs
-    passes a list as ``persisted``: the persisted frames are appended to it,
-    for the caller to ``unpersist()`` once the pairs are written.
+    - minhash-only configs (the hot ER/bench path): packed int64 band keys
+      and the static :func:`first_band_match` (whole-stage codegen), see
+      :func:`_banded_candidate_pairs` — the array payload below anti-scaled
+      8→32 cores at sf0.1 (VERDICT r2 item 1);
+    - any other key mix (token keys, custom keys — variable width): the
+      sorted array of the doc's kept DENSE KEY IDS
+      (:func:`_attach_key_payload`), checked by one Arrow-batched NumPy
+      kernel (:func:`_pair_key_stats`).
+
+    Both payloads cost doc×key-cardinality work, orders of magnitude below
+    pair cardinality. ``with_weight`` adds the CBS weight (number of shared
+    kept keys) for meta-blocking.
     """
     cfg = cfg or BlockingConfig()
     if cfg.use_minhash and not cfg.use_token_keys and cfg.custom_key_fn is None:
-        # minhash-only configs (the hot ER/bench path) take the all-integer
-        # banded plan: packed int64 band keys, flat-column first-band-match
-        # (whole-stage codegen), no string keys or array payloads anywhere on
-        # the quadratic join stream. Pair set is bit-identical (the key remap
-        # is injective); measured at sf0.1/local[32] the string-array
-        # _first_key_match below anti-scales 8→32 cores (VERDICT r2 item 1).
-        return _banded_candidate_pairs(
-            blocks, cfg, shuffle_partitions, with_weight, persisted
-        )
+        return _banded_candidate_pairs(blocks, cfg, with_weight)
     # custom key fns may emit repeated (conv_id, block_key) rows; uniqueness
     # is what makes the first-key filter exact (built-in key sources are
     # distinct by construction)
-    blocks = blocks.dropDuplicates(["conv_id", "block_key"])
-    # the blocks frontier feeds sizes, the anti-join, doc_keys, and both join
-    # sides — without materialization every reference recomputes the whole
-    # upstream key chain (minhash explode + dictionary join + 16 min-aggs),
-    # measured as a >2x inflation of the stage; persist is the standard
-    # many-consumer materialization (spills to disk beyond executor memory)
-    blocks = _persist(blocks, persisted)
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("_sz"))
-    kept = blocks.join(
-        F.broadcast(sizes.filter(F.col("_sz") > cfg.max_block_size)),
-        "block_key",
-        "left_anti",
+    kept = with_block_size(
+        blocks.dropDuplicates(["conv_id", "block_key"]), cfg.max_block_size
     )
-    # consumed by the salted split and both self-join sides
-    kept = _persist(_attach_key_payload(kept), persisted)
-    parts = []
-    if cfg.salt_block_size and cfg.salt_block_size < cfg.max_block_size:
-        hot = F.broadcast(
-            sizes.filter(
-                (F.col("_sz") > cfg.salt_block_size)
-                & (F.col("_sz") <= cfg.max_block_size)
-            ).select("block_key")
-        )
-        salted = kept.join(hot, "block_key", "left_semi")
-        kept = kept.join(hot, "block_key", "left_anti")
-        parts.append(salted_pairs(salted, cfg.salt_factor, payload_col="_p"))
-    # explicit-N repartition: tiny join input, quadratic output — see
-    # salted_pairs for why AQE's input-size coalescing must not fold this
-    n_part = shuffle_partitions or int(
-        blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    a = kept.select(
-        "block_key", F.col("conv_id").alias("id1"), F.col("_p").alias("p1")
-    ).repartition(n_part, "block_key")
-    b = kept.select(
-        "block_key", F.col("conv_id").alias("id2"), F.col("_p").alias("p2")
-    ).repartition(n_part, "block_key")
-    parts.append(
-        a.join(b, "block_key")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "p1", "p2")
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = bucket_self_join(_attach_key_payload(kept), _salt_size(cfg), cfg.salt_factor)
     # one Arrow kernel pass computes BOTH the exactly-once predicate and the
     # CBS weight; referencing two fields of the same deterministic UDF result
     # through a named column guarantees a single evaluation per row
@@ -292,11 +272,45 @@ def candidate_pairs(
         "_st", _pair_key_stats(F.col("p1.cur"), F.col("p1.keys"), F.col("p2.keys"))
     ).filter(F.col("_st.keep"))
     if with_weight:
-        # CBS (common-blocks scheme) edge weight for meta-blocking — already
-        # computed by the kernel from the key arrays riding the pair row, so
-        # no extra pair-set shuffle.
         return out.select("id1", "id2", F.col("_st.weight").alias("weight"))
     return out.select("id1", "id2")
+
+
+def _salt_size(cfg: BlockingConfig) -> int:
+    """Salting threshold for :func:`bucket_self_join`: 0 (off) unless it lies
+    below the size cap — larger blocks are dropped before salting."""
+    return cfg.salt_block_size if cfg.salt_block_size < cfg.max_block_size else 0
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Materialize a band-join frame that several consumers read.
+
+    The one materialization policy of the band join: an eager
+    ``localCheckpoint``, for the lifecycle reasons given at
+    :func:`..functions.ids.dense_rank_ids` — the frame is computed once, no
+    CacheManager entry is created, and its blocks are reclaimed by the
+    ContextCleaner once no live plan references them, so no caller has to
+    release anything. Every pinned frame is doc×key cardinality, never pair
+    cardinality."""
+    return df.localCheckpoint(eager=True)
+
+
+def with_block_size(
+    blocks: DataFrame, max_block_size: int | None = None
+) -> DataFrame:
+    """``blocks(block_key, conv_id, ...)`` plus ``_sz``, the member count of
+    each row's block; with ``max_block_size``, the rows of larger blocks are
+    dropped (the hot-block cap).
+
+    One window count serves both the size cap and the salting split of
+    :func:`bucket_self_join` — no separate size table, no broadcast
+    semi/anti joins."""
+    sized = blocks.withColumn(
+        "_sz", F.count(F.lit(1)).over(Window.partitionBy("block_key"))
+    )
+    if max_block_size is None:
+        return sized
+    return sized.filter(F.col("_sz") <= max_block_size)
 
 
 def _attach_key_payload(kept: DataFrame) -> DataFrame:
@@ -305,30 +319,37 @@ def _attach_key_payload(kept: DataFrame) -> DataFrame:
 
     Keys become dense int64 ids ordered BY THE KEY STRING
     (:func:`..functions.ids.dense_rank_ids` over the distinct kept keys), so
-    "minimum shared key" selects the same emitting key as the previous
-    ``array<string>`` payload — pair set, emitting key, and CBS weights are
-    all unchanged (dense ranking is injective and order-preserving). The id
-    dictionary costs one shuffle at KEY cardinality and one join at doc×key
-    cardinality — both orders of magnitude below pair cardinality — and in
-    exchange the quadratic join's shuffle payload shrinks to fixed-width
-    integers and the pair-level predicate becomes an Arrow-batched NumPy
-    kernel (:func:`_pair_key_stats`) instead of the interpreted
-    ``array_min(array_intersect(...))`` pair that anti-scales at high in-JVM
-    concurrency (docs/SCALE.md, round-3 law; VERDICT r3 "What's wrong" 3).
+    "minimum shared key" selects the same emitting key as an
+    ``array<string>`` payload would — pair set, emitting key, and CBS weights
+    are unchanged (dense ranking is injective and order-preserving). The id
+    dictionary costs one shuffle at KEY cardinality and one groupBy at
+    doc×key cardinality — both orders of magnitude below pair cardinality —
+    and in exchange the quadratic join's shuffle payload shrinks to
+    fixed-width integers and the pair-level predicate becomes an
+    Arrow-batched NumPy kernel (:func:`_pair_key_stats`) instead of the
+    interpreted ``array_min(array_intersect(...))`` pair that anti-scales at
+    high in-JVM concurrency (docs/SCALE.md, round-3 law).
     """
+    # read by the key dictionary and by the per-doc payload aggregate
+    kept = _pin(kept)
     other = [c for c in kept.columns if c not in ("conv_id", "block_key")]
     kids = dense_rank_ids(
         kept.select("block_key").distinct(), ["block_key"], "_kid"
     )
-    kept = kept.join(kids, "block_key")
-    doc_keys = kept.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list("_kid")).alias("_keys")
+    per_doc = (
+        kept.join(kids, "block_key")
+        .groupBy("conv_id")
+        .agg(F.collect_list(F.struct("block_key", "_kid", *other)).alias("_rows"))
     )
-    return kept.join(doc_keys, "conv_id").select(
+    return per_doc.select(
         "conv_id",
-        "block_key",
-        *other,
-        F.struct(F.col("_kid").alias("cur"), F.col("_keys").alias("keys")).alias(
+        F.explode("_rows").alias("_r"),
+        F.array_sort(F.col("_rows._kid")).alias("_keys"),
+    ).select(
+        "conv_id",
+        "_r.block_key",
+        *[f"_r.{c}" for c in other],
+        F.struct(F.col("_r._kid").alias("cur"), F.col("_keys").alias("keys")).alias(
             "_p"
         ),
     )
@@ -401,11 +422,7 @@ def _first_key_match(p1, p2):
 
 
 def _banded_candidate_pairs(
-    blocks: DataFrame,
-    cfg: BlockingConfig,
-    shuffle_partitions: int | None = None,
-    with_weight: bool = False,
-    persisted: list[DataFrame] | None = None,
+    blocks: DataFrame, cfg: BlockingConfig, with_weight: bool = False
 ) -> DataFrame:
     """Minhash-only candidate pairs over packed int64 band keys.
 
@@ -414,138 +431,107 @@ def _banded_candidate_pairs(
     emit each co-blocked pair exactly once (under its first shared KEPT band)
     — but every key and payload is fixed-width integers:
 
-    - signature values are < 2^31 (P = 2^31 − 1), so PAIRS of values pack
-      injectively into one int64 (``h_even * 2^31 + h_odd``); a band key is
-      ``cpb = ceil(rows/2)`` longs, parsed back from the block-key string at
-      doc×band cardinality (≪ pair cardinality, and the persisted ``blocks``
-      frontier keeps serving the metrics queries unchanged);
-    - the first-band filter is a static OR/AND over flat struct fields plus a
-      kept-band bitmask ``m`` (bit b set iff this doc's band-b block survived
-      the size cap) — dropped bands cannot suppress a pair, and since equal
-      band keys mean the SAME block, the two sides' kept flags agree, so the
-      emit-exactly-once argument is unchanged and EXACT (no hashing anywhere:
-      the pair set is bit-identical to the string-key form).
+    - a band key is ``struct(band, c0..c{cpb-1})`` of :func:`pack_band`
+      longs, parsed back from the committed block-key string at doc×band
+      cardinality (≪ pair cardinality; the string ``blocks`` table keeps
+      serving the metrics queries unchanged);
+    - the payload is the doc's packed key of every band plus a kept-band
+      bitmask ``m`` (bit b set iff this doc's band-b block survived the size
+      cap), built by one groupBy per doc and exploded back onto its kept
+      (doc, band) rows; :func:`first_band_match` is static OR/AND algebra
+      over it, exact (no hashing anywhere).
 
-    ``with_weight`` emits the CBS weight (number of shared kept band keys) as
-    a per-row static sum — same value as size(array_intersect(kept keys)).
+    ``with_weight`` emits the CBS weight (number of shared kept band keys).
     """
-    rows_, bands = cfg.minhash_rows, cfg.minhash_bands
-    cpb = (rows_ + 1) // 2
-    K = bands * cpb
-    parsed = (
-        blocks.select("conv_id", F.split("block_key", ":").alias("_pp"))
-        .select(
-            "conv_id",
-            F.col("_pp").getItem(1).cast("int").alias("band"),
-            F.split(F.col("_pp").getItem(2), "_").alias("_hs"),
-        )
-        .select(
-            "conv_id",
-            "band",
-            *[
-                (
-                    F.element_at("_hs", 2 * c + 1).cast("long") * F.lit(1 << 31)
-                    + (
-                        F.element_at("_hs", 2 * c + 2).cast("long")
-                        if 2 * c + 1 < rows_
-                        else F.lit(0)
-                    )
-                ).alias(f"c{c}")
-                for c in range(cpb)
-            ],
-        )
+    r, bands = cfg.minhash_rows, cfg.minhash_bands
+    cpb = (r + 1) // 2
+    parts = blocks.select("conv_id", F.split("block_key", ":").alias("_pp")).select(
+        "conv_id",
+        F.col("_pp").getItem(1).cast("int").alias("band"),
+        F.split(F.col("_pp").getItem(2), "_").alias("_hs"),
     )
-    # the parsed frontier feeds sizes, the hot split, the payload aggregate
-    # and both self-join sides — materialize once (same rationale as the
-    # generic path's persist)
-    parsed = _persist(parsed, persisted)
-    key_cols = ["band", *[f"c{c}" for c in range(cpb)]]
-    sizes = parsed.groupBy(*key_cols).agg(F.count("*").alias("_sz"))
-    kept = parsed.join(
-        F.broadcast(sizes.filter(F.col("_sz") > cfg.max_block_size).select(*key_cols)),
-        key_cols,
-        "left_anti",
+    packed = pack_band([F.element_at("_hs", i + 1).cast("long") for i in range(r)])
+    kept = with_block_size(
+        parts.select(
+            "conv_id",
+            F.struct(
+                "band", *[c.alias(f"c{j}") for j, c in enumerate(packed)]
+            ).alias("block_key"),
+        ),
+        cfg.max_block_size,
     )
     # per-doc payload: one min-agg per (band, chunk) slot (rows are unique per
     # band, so min == the value; NULL == band dropped for this doc)
-    aggs = [
-        F.min(F.when(F.col("band") == b, F.col(f"c{c}"))).alias(f"k{b * cpb + c}")
+    band = F.col("block_key.band")
+    per_doc = kept.groupBy("conv_id").agg(
+        F.collect_list(F.struct("block_key", "_sz")).alias("_rows"),
+        *[
+            F.min(F.when(band == b, F.col(f"block_key.c{c}"))).alias(f"k{b * cpb + c}")
+            for b in range(bands)
+            for c in range(cpb)
+        ],
+    )
+    mask = sum(
+        F.when(F.col(f"k{b * cpb}").isNotNull(), F.lit(1 << b)).otherwise(F.lit(0))
         for b in range(bands)
-        for c in range(cpb)
-    ]
-    pay = kept.groupBy("conv_id").agg(*aggs)
-    mask = None
-    for b in range(bands):
-        bit = F.when(F.col(f"k{b * cpb}").isNotNull(), F.lit(1 << b)).otherwise(F.lit(0))
-        mask = bit if mask is None else mask + bit
-    keyed = _persist(kept.join(pay, "conv_id").select(
+    )
+    keyed = per_doc.select(
         "conv_id",
-        F.struct(*key_cols).alias("block_key"),
+        F.explode("_rows").alias("_r"),
+        *[F.coalesce(F.col(f"k{j}"), F.lit(-1)).alias(f"k{j}") for j in range(bands * cpb)],
+        mask.alias("m"),
+    ).select(
+        "conv_id",
+        "_r.block_key",
+        "_r._sz",
         F.struct(
-            F.col("band").alias("band"),
-            *[F.coalesce(F.col(f"k{j}"), F.lit(-1)).alias(f"k{j}") for j in range(K)],
-            mask.alias("m"),
+            F.col("_r.block_key.band").alias("band"),
+            *[f"k{j}" for j in range(bands * cpb)],
+            "m",
         ).alias("_p"),
-    ), persisted)
-
-    def _eq_band(p1, p2, b):
-        eq = F.lit(True)
-        for c in range(cpb):
-            j = b * cpb + c
-            eq = eq & (p1[f"k{j}"] == p2[f"k{j}"])
-        return eq
-
-    def _kept_band(p1, b):
-        return p1["m"].bitwiseAND(F.lit(1 << b)) != 0
-
-    def first_kept_band_match(p1, p2):
-        earlier = F.lit(False)
-        for b in range(bands):
-            earlier = earlier | (
-                (F.lit(b) < p1["band"]) & _kept_band(p1, b) & _eq_band(p1, p2, b)
-            )
-        return ~earlier
-
-    parts = []
-    if cfg.salt_block_size and cfg.salt_block_size < cfg.max_block_size:
-        hot = F.broadcast(
-            sizes.filter(
-                (F.col("_sz") > cfg.salt_block_size)
-                & (F.col("_sz") <= cfg.max_block_size)
-            ).select(F.struct(*key_cols).alias("block_key"))
-        )
-        salted = keyed.join(hot, "block_key", "left_semi")
-        keyed = keyed.join(hot, "block_key", "left_anti")
-        parts.append(salted_pairs(salted, cfg.salt_factor, payload_col="_p"))
-    n_part = shuffle_partitions or int(
-        blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    a = keyed.select(
-        "block_key", F.col("conv_id").alias("id1"), F.col("_p").alias("p1")
-    ).repartition(n_part, "block_key")
-    b = keyed.select(
-        "block_key", F.col("conv_id").alias("id2"), F.col("_p").alias("p2")
-    ).repartition(n_part, "block_key")
-    parts.append(
-        a.join(b, "block_key")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "p1", "p2")
+    p1, p2 = F.col("p1"), F.col("p2")
+    out = bucket_self_join(keyed, _salt_size(cfg), cfg.salt_factor).filter(
+        first_band_match(p1, p2, bands, r)
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.filter(first_kept_band_match(F.col("p1"), F.col("p2")))
     if with_weight:
-        w = None
-        for b in range(bands):
-            term = F.when(
-                _kept_band(F.col("p1"), b)
-                & _eq_band(F.col("p1"), F.col("p2"), b),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-            w = term if w is None else w + term
-        return out.select("id1", "id2", w.cast("long").alias("weight"))
+        # CBS weight: number of kept bands whose keys the two docs share
+        weight = sum(F.when(s, 1).otherwise(0) for s in _shared_bands(p1, p2, bands, r))
+        return out.select("id1", "id2", weight.cast("long").alias("weight"))
     return out.select("id1", "id2")
+
+
+def _shared_bands(p1, p2, bands: int, rows: int) -> list:
+    """Per band b: true iff band b is kept (``m`` bit b) and both packed
+    payloads (``struct(band, k0..k{bands*cpb-1}, m)``, ``cpb = ceil(rows/2)``)
+    hold the same band-b key. Equal band keys mean the SAME block, so the
+    two sides' kept flags agree and p1's mask suffices."""
+    cpb = (rows + 1) // 2
+    out = []
+    for b in range(bands):
+        eq = p1["m"].bitwiseAND(F.lit(1 << b)) != 0
+        for c in range(cpb):
+            eq = eq & (p1[f"k{b * cpb + c}"] == p2[f"k{b * cpb + c}"])
+        out.append(eq)
+    return out
+
+
+def first_band_match(p1, p2, bands: int, rows: int):
+    """Keep a band-joined pair only in the FIRST kept band its two docs share:
+    the pair joined in band ``p1.band`` survives iff no earlier kept band's
+    keys are equal — every colliding pair is emitted exactly once across
+    bands with NO distinct().
+
+    The one first-band predicate over packed payloads (banded blocking, MinHash
+    dedup, cross-corpus dedup). It statically expands to scalar boolean
+    algebra — ``NOT OR_b ((b < p1.band) AND kept(b) AND all-chunks-equal(b))``
+    — so it stays inside whole-stage codegen with ZERO per-row allocation
+    (the array<string> + zip_with/exists form it replaced anti-scaled 8→32
+    cores at sf0.1, VERDICT r2 item 1)."""
+    earlier = F.lit(False)
+    for b, shared in enumerate(_shared_bands(p1, p2, bands, rows)):
+        earlier = earlier | ((F.lit(b) < p1["band"]) & shared)
+    return ~earlier
 
 
 def salted_pairs(blocks: DataFrame, g: int, payload_col: str | None = None) -> DataFrame:
@@ -560,7 +546,7 @@ def salted_pairs(blocks: DataFrame, g: int, payload_col: str | None = None) -> D
 
     With ``payload_col``, that column rides along each member and is emitted
     as ``p1``/``p2`` aligned with the (id1, id2) = (least, greatest) order —
-    used by dedup's first-matching-band dedupe-free enumeration.
+    the payload the emit-once predicates behind :func:`bucket_self_join` read.
     """
     m = blocks.withColumn("_s", F.pmod(F.xxhash64("conv_id"), F.lit(g)).cast("int"))
     pairs_ij = F.array(
@@ -607,6 +593,53 @@ def salted_pairs(blocks: DataFrame, g: int, payload_col: str | None = None) -> D
             F.when(fwd, F.col("_pb")).otherwise(F.col("_pa")).alias("p2"),
         ]
     return within.unionByName(across).select(*out_cols)
+
+
+def bucket_self_join(
+    rows: DataFrame, salt_block_size: int = 0, salt_factor: int = 8
+) -> DataFrame:
+    """(id1 < id2[, p1, p2]): every pair of ``rows(block_key, conv_id[, _p])``
+    that shares a block_key, once per shared key — the one skew-safe band
+    self-join behind blocking and dedup.
+
+    ``rows`` is pinned (:func:`_pin`: it feeds the salting split and both
+    join sides). With ``salt_block_size > 0``, blocks above it go through
+    :func:`salted_pairs`; their size is the ``_sz`` column of
+    :func:`with_block_size` (added here when the caller has not). The rest
+    take the plain self-join, pinned to an explicit partition count: the
+    join input is tiny but its OUTPUT is quadratic, and AQE coalesces
+    exchanges by INPUT size — left alone it merges this shuffle into 1-2
+    partitions and the entire pair stream (plus any downstream work
+    pipelined into the same tasks) runs on 1-2 cores (measured: 107s -> 32s
+    at sf0.1). A ``_p`` payload rides along as ``p1``/``p2``, aligned with
+    (id1, id2), for the caller's emit-once predicate.
+    """
+    if salt_block_size and "_sz" not in rows.columns:
+        rows = with_block_size(rows)
+    rows = _pin(rows)
+    pay = "_p" in rows.columns
+    parts = []
+    if salt_block_size:
+        hot = F.col("_sz") > salt_block_size
+        parts.append(
+            salted_pairs(rows.filter(hot), salt_factor, "_p" if pay else None)
+        )
+        rows = rows.filter(~hot)
+    n_part = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    a, b = (
+        rows.select(
+            "block_key",
+            F.col("conv_id").alias(f"id{i}"),
+            *([F.col("_p").alias(f"p{i}")] if pay else []),
+        ).repartition(n_part, "block_key")
+        for i in (1, 2)
+    )
+    parts.append(
+        a.join(b, "block_key")
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2", *(["p1", "p2"] if pay else []))
+    )
+    return reduce(DataFrame.unionByName, parts)
 
 
 def sorted_neighborhood_pairs(
@@ -677,9 +710,7 @@ def sorted_neighborhood_pairs(
 
 
 def metablock_pairs(
-    blocks: DataFrame,
-    cfg: BlockingConfig | None = None,
-    shuffle_partitions: int | None = None,
+    blocks: DataFrame, cfg: BlockingConfig | None = None
 ) -> DataFrame:
     """Meta-blocking: prune the blocking graph by edge weight (Papadakis et
     al., "Meta-Blocking: Taking Entity Resolution to the Next Level", TKDE'14).
@@ -704,7 +735,7 @@ def metablock_pairs(
     driver-side, core/blocker.py); this extends the blocking surface the way
     a 10^12-turn deployment needs — pair budget cut before scoring.
     """
-    pw = candidate_pairs(blocks, cfg, shuffle_partitions, with_weight=True)
+    pw = candidate_pairs(blocks, cfg, with_weight=True)
     # pw feeds the node-threshold aggregate AND the final join; persist so the
     # blocking chain runs once, and materialize the (far smaller) pruned
     # output eagerly so the cache can be released before returning — without

@@ -16,6 +16,12 @@ Python is the Arrow-batched cosine kernel for embeddings):
 Every hash is dictionary-based and arithmetic (``(a*id + b) mod P``), so the
 DuckDB correctness oracle can reproduce results bit-for-bit in ANSI SQL — no
 engine-specific hash functions anywhere.
+
+The MinHash band join is blocking's (operators/blocking.py): signatures come
+from :func:`.blocking.minhash_mins`, every bucket self-join (MinHash, SimHash,
+bucketed embeddings) runs through :func:`.blocking.bucket_self_join` via
+:func:`bucket_pairs`, and MinHash pairs are emitted once by
+:func:`.blocking.first_band_match`.
 """
 
 from __future__ import annotations
@@ -27,21 +33,14 @@ from pyspark.sql import functions as F
 
 from ..functions.ids import dense_rank_ids
 from ..functions.text import token_ngrams, tokenize
-
-MERSENNE_P = 2147483647
-
-
-def _hash_params(n: int, seed: int) -> list[tuple[int, int]]:
-    """Seeded LCG-derived (a,b) pairs — identical to blocking._hash_params."""
-    params = []
-    state = seed * 2654435761 % MERSENNE_P
-    for _ in range(n):
-        state = (state * 1103515245 + 12345) % MERSENNE_P
-        a = state % (MERSENNE_P - 1) + 1
-        state = (state * 1103515245 + 12345) % MERSENNE_P
-        b = state % MERSENNE_P
-        params.append((a, b))
-    return params
+from .blocking import (
+    MERSENNE_P,
+    _hash_params,
+    bucket_self_join,
+    first_band_match,
+    minhash_mins,
+    pack_band,
+)
 
 
 def prepare_docs(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -107,71 +106,29 @@ def bucket_pairs(
 ) -> DataFrame:
     """(id1 < id2) pairs of ids sharing a bucket key, skew-safe, dedupe-cheap.
 
-    Skew: near-dup-heavy corpora put a large fraction of the corpus into a
-    handful of band buckets (measured at sf0.1: 4 buckets of ~2,300 of 5,000
-    docs); a naive self-join then materializes O(s²) pairs of each hot bucket
-    in ONE task — the straggler that keeps the dedup family flat across cores
-    and is fatal at 100x scale. Buckets larger than ``salt_bucket_size`` go
-    through :func:`blocking.salted_pairs` (sub-bucket composite keys:
-    C(g+1, 2) evenly-sized tasks per hot bucket); the rest take the plain
-    self-join. Pair set is identical to the naive join (pinned in
-    tests/test_dedup.py).
+    Enumeration is the band self-join blocking uses
+    (:func:`.blocking.bucket_self_join`). Skew: near-dup-heavy corpora put a
+    large fraction of the corpus into a handful of band buckets (measured at
+    sf0.1: 4 buckets of ~2,300 of 5,000 docs); buckets larger than
+    ``salt_bucket_size`` go through the salted sub-bucket join (C(g+1, 2)
+    evenly-sized tasks per hot bucket) instead of one O(s²) straggler task.
+    Pair set is identical to the naive join (pinned in tests/test_dedup.py).
 
     Dedupe: without ``pair_filter``, cross-bucket duplicates are removed with
     ``distinct()`` — a full shuffle of the pair set (measured: 15s of the
     18s enumeration at sf0.1; at 10^10 pairs it's the dominant exchange).
     With ``payload_col`` + ``pair_filter(p1, p2)``, the filter runs per
     joined row INSTEAD of the distinct — callers use the first-matching-band
-    pattern (keep a pair only in the lowest band whose keys collide) so each
-    pair survives exactly once and the pair set never shuffles at all.
+    pattern (:func:`.blocking.first_band_match`: keep a pair only in the
+    lowest band whose keys collide) so each pair survives exactly once and
+    the pair set never shuffles at all.
     """
-    from .blocking import salted_pairs
-
     if pair_filter is not None and payload_col is None:
         raise ValueError("pair_filter requires payload_col")
     sel = [F.col(key_col).alias("block_key"), F.col(id_col).alias("conv_id")]
     if payload_col:
         sel.append(F.col(payload_col).alias("_p"))
-    # materialize once: the bucket rows feed the size scan, the hot-bucket
-    # semi/anti split, and both self-join sides — unpersisted, each reference
-    # recomputes the whole signature chain (explode + dict join + min-aggs)
-    b = buckets.select(*sel).persist()
-    parts = []
-    if salt_bucket_size:
-        sizes = b.groupBy("block_key").agg(F.count("*").alias("_sz"))
-        hot = F.broadcast(
-            sizes.filter(F.col("_sz") > salt_bucket_size).select("block_key")
-        )
-        parts.append(
-            salted_pairs(
-                b.join(hot, "block_key", "left_semi"),
-                salt_factor,
-                payload_col="_p" if payload_col else None,
-            )
-        )
-        b = b.join(hot, "block_key", "left_anti")
-    pay1 = [F.col("_p").alias("p1")] if payload_col else []
-    pay2 = [F.col("_p").alias("p2")] if payload_col else []
-    # pin the join input partitioning: the bucket rows are tiny but the join
-    # OUTPUT explodes quadratically, and AQE coalesces exchanges by INPUT
-    # size — left alone it merges this shuffle into 1-2 partitions and the
-    # entire pair stream (plus any downstream broadcast-join work pipelined
-    # into the same tasks) runs on 1-2 cores (measured: 107s -> 32s at sf0.1)
-    n_part = int(b.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    a = b.select("block_key", F.col("conv_id").alias("id1"), *pay1).repartition(
-        n_part, "block_key"
-    )
-    c = b.select("block_key", F.col("conv_id").alias("id2"), *pay2).repartition(
-        n_part, "block_key"
-    )
-    parts.append(
-        a.join(c, "block_key")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", *(["p1", "p2"] if payload_col else []))
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = bucket_self_join(buckets.select(*sel), salt_bucket_size, salt_factor)
     if pair_filter is not None:
         out = out.filter(pair_filter(F.col("p1"), F.col("p2")))
         # keep_payload lets callers consume per-doc state (e.g. packed
@@ -180,55 +137,6 @@ def bucket_pairs(
         cols = ["id1", "id2"] + (["p1", "p2"] if keep_payload else [])
         return out.select(*cols)
     return out.select("id1", "id2").distinct()
-
-
-def first_band_match(p1, p2):
-    """Keep a pair only in the FIRST band whose keys collide (array variant).
-
-    Payload contract: ``p = struct(band int, keys array<string>)`` where
-    ``keys[b]`` is the full band-b bucket key. The pair joined in band
-    ``p1.band`` survives iff no earlier band's keys are equal — so every
-    colliding pair is emitted exactly once across bands with NO distinct().
-
-    NOTE (r3): zip_with/exists are interpreted (codegen-fallback) expressions;
-    on the quadratic join stream they measurably anti-scale at high in-JVM
-    concurrency. Hot paths use :func:`make_first_band_match` (flat int64
-    columns, whole-stage codegen) instead; this array form remains for
-    variable-width key sets (SimHash string bands).
-    """
-    earlier = F.zip_with(
-        F.slice(p1["keys"], F.lit(1), p1["band"]),
-        F.slice(p2["keys"], F.lit(1), p2["band"]),
-        lambda x, y: x == y,
-    )
-    return ~F.exists(earlier, lambda v: v)
-
-
-def make_first_band_match(bands: int, rows: int):
-    """First-band-match predicate over FLAT packed int64 band keys.
-
-    Payload contract (see :func:`packed_band_buckets`): ``p = struct(band int,
-    k0..k{bands*cpb-1} long)`` with ``cpb = ceil(rows/2)`` packed longs per
-    band. The predicate statically expands to pure scalar boolean algebra —
-    ``OR_b ((b < p1.band) AND all-chunks-equal(b))`` — so it stays inside
-    whole-stage codegen with ZERO per-row allocation, unlike the
-    array<string> + zip_with/exists form it replaces (measured at sf0.1 /
-    local[32]: the interpreted-HOF pair filters and per-row array ops were
-    the 8→32-core anti-scaling of q_dedup/q_block; VERDICT r2 item 1).
-    """
-    cpb = (rows + 1) // 2
-
-    def pred(p1, p2):
-        earlier = F.lit(False)
-        for b in range(bands):
-            eq = F.lit(True)
-            for c in range(cpb):
-                j = b * cpb + c
-                eq = eq & (p1[f"k{j}"] == p2[f"k{j}"])
-            earlier = earlier | ((F.lit(b) < p1["band"]) & eq)
-        return ~earlier
-
-    return pred
 
 
 # ---------------------------------------------------------------------------
@@ -245,41 +153,6 @@ class MinHashConfig:
     salt_factor: int = 8
 
 
-def minhash_band_buckets(
-    docs: DataFrame, token_dict: DataFrame, cfg: MinHashConfig
-) -> DataFrame:
-    """(doc_id, bkey, p): one row per (doc, band) with the band bucket key.
-
-    ``p = struct(band, keys)`` is the first-band-match payload (see
-    :func:`first_band_match`). Plan: explode distinct tokens -> dictionary
-    join -> b*r min-aggregations per doc (one map-side-combinable groupBy)
-    -> posexplode the band keys.
-    """
-    n_hashes = cfg.rows * cfg.bands
-    params = _hash_params(n_hashes, cfg.seed)
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("token")
-    ).join(F.broadcast(token_dict), "token")
-    mins = [
-        F.min((F.lit(a) * F.col("token_id") + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = toks.groupBy("doc_id").agg(*mins)
-    bands = [
-        F.concat_ws(
-            "_",
-            F.lit(str(band)),
-            *[F.col(f"h{band * cfg.rows + r}").cast("string") for r in range(cfg.rows)],
-        )
-        for band in range(cfg.bands)
-    ]
-    return (
-        sig.select("doc_id", F.array(*bands).alias("keys"))
-        .select("doc_id", "keys", F.posexplode("keys").alias("band", "bkey"))
-        .select("doc_id", "bkey", F.struct("band", "keys").alias("p"))
-    )
-
-
 def packed_band_buckets(
     docs: DataFrame,
     token_dict: DataFrame,
@@ -289,40 +162,33 @@ def packed_band_buckets(
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
 ) -> DataFrame:
-    """(id, bkey, p): one row per (doc, band), all-integer band keys.
+    """(id, bkey, p): one row per (doc, band), all-integer band keys rendered
+    from :func:`.blocking.minhash_mins`.
 
-    MinHash values are < 2^31 (P = 2^31 − 1), so PAIRS of signature values
-    pack injectively into one int64 (``h_even * 2^31 + h_odd`` < 2^62) —
-    ``cpb = ceil(rows/2)`` longs identify a band key EXACTLY (no hashing, no
-    collision risk: the candidate-pair set is bit-identical to the string-key
-    form, just cheaper to shuffle and compare).
+    A band key is ``cpb = ceil(rows/2)`` longs of :func:`.blocking.pack_band`
+    — it identifies the band key EXACTLY (no hashing, no collision risk: the
+    candidate-pair set is bit-identical to the string-key form, just cheaper
+    to shuffle and compare).
 
     - ``bkey = struct(band, c0..c{cpb-1})``: the join/groupBy key — fixed-width
       ints instead of a ~40-byte concatenated string;
-    - ``p = struct(band, k0..k{bands*cpb-1})``: the first-band-match payload —
-      flat long columns (whole-stage codegen) instead of array<string>
-      (interpreted zip_with; see :func:`make_first_band_match`).
+    - ``p = struct(band, k0..k{bands*cpb-1}, m)``: the
+      :func:`.blocking.first_band_match` payload — flat long columns
+      (whole-stage codegen); every band is kept, so the kept-band mask ``m``
+      has all ``bands`` bits set.
     """
-    n_hashes = rows * bands
-    params = _hash_params(n_hashes, seed)
-    toks = docs.select(
-        id_col, F.explode(F.array_distinct(tokens_col)).alias("token")
-    ).join(F.broadcast(token_dict), "token")
-    mins = [
-        F.min((F.lit(a) * F.col("token_id") + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = toks.groupBy(id_col).agg(*mins)
+    sig = minhash_mins(docs, token_dict, rows * bands, seed, id_col, tokens_col)
     cpb = (rows + 1) // 2
-    packed = []
-    for j in range(bands * cpb):
-        band, c = divmod(j, cpb)
-        i0 = band * rows + 2 * c
-        col = F.col(f"h{i0}") * F.lit(1 << 31)
-        if 2 * c + 1 < rows:
-            col = col + F.col(f"h{i0 + 1}")
-        packed.append(col.alias(f"k{j}"))
-    sig = sig.select(id_col, *packed)
+    sig = sig.select(
+        id_col,
+        *[
+            k.alias(f"k{b * cpb + c}")
+            for b in range(bands)
+            for c, k in enumerate(
+                pack_band([F.col(f"h{b * rows + i}") for i in range(rows)])
+            )
+        ],
+    )
     kcols = [F.col(f"k{j}") for j in range(bands * cpb)]
     band_structs = F.array(
         *[
@@ -336,7 +202,9 @@ def packed_band_buckets(
     return sig.select(id_col, *kcols, F.explode(band_structs).alias("bkey")).select(
         id_col,
         "bkey",
-        F.struct(F.col("bkey.band").alias("band"), *kcols).alias("p"),
+        F.struct(
+            F.col("bkey.band").alias("band"), *kcols, F.lit((1 << bands) - 1).alias("m")
+        ).alias("p"),
     )
 
 
@@ -355,7 +223,7 @@ def minhash_candidate_pairs(
         salt_bucket_size=cfg.salt_bucket_size,
         salt_factor=cfg.salt_factor,
         payload_col="p",
-        pair_filter=make_first_band_match(cfg.bands, cfg.rows),
+        pair_filter=lambda p1, p2: first_band_match(p1, p2, cfg.bands, cfg.rows),
     )
 
 
@@ -394,19 +262,15 @@ def token_jaccard_verify(
     - ``auto``: bitset when the vocabulary fits and threshold > 0, else
       explode (the unbounded-vocabulary route; at web-scale vocab the masks
       would be wider than the token lists).
-    - ``array``: attach the (distinct) token arrays to the pair rows and
-      compute ``size(array_intersect)`` per row. At LOW parallelism on short
-      docs this wins (fewer shuffled rows; measured 14.9s vs 26.4s at sf0.1 /
-      local[8] pinned) — but array_intersect is an interpreted, per-row-
-      allocating expression and COLLAPSES at high in-JVM concurrency
-      (measured r3, identical 2.83M-row output at sf0.1: local[32]
-      array=627.6s vs explode=40.3s — the q_dedup 8→32-core anti-scaling of
-      VERDICT r2). Use only for small jobs at low parallelism.
 
     ``token_dict``: optional (token, token_id) table with DENSE ids 1..vocab
     (e.g. :func:`dedup_token_dict` output) for the bitset path; derived
-    internally when absent. Ignored by the other strategies.
+    internally when absent. Ignored by ``explode``.
     """
+    if strategy not in ("explode", "bitset", "auto"):
+        raise ValueError(
+            f"strategy must be 'explode', 'bitset' or 'auto', got {strategy!r}"
+        )
     if strategy in ("auto", "bitset"):
         tdict = token_dict if token_dict is not None else dedup_token_dict(docs)
         vocab = int(
@@ -476,24 +340,6 @@ def token_jaccard_verify(
                 .filter(F.col("jaccard") >= threshold)
             )
         strategy = "explode"
-    if strategy == "array":
-        t = docs.select(
-            "doc_id", F.array_distinct(tokens_col).alias("_t")
-        )
-        t1 = t.select(F.col("doc_id").alias("id1"), F.col("_t").alias("_t1"))
-        t2 = t.select(F.col("doc_id").alias("id2"), F.col("_t").alias("_t2"))
-        inter = F.size(F.array_intersect("_t1", "_t2")).cast("double")
-        union = (F.size("_t1") + F.size("_t2")).cast("double") - inter
-        return (
-            pairs.join(t1, "id1")
-            .join(t2, "id2")
-            .select(
-                "id1",
-                "id2",
-                F.when(union == 0, F.lit(1.0)).otherwise(inter / union).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
     t = docs.select("doc_id", F.explode(F.array_distinct(tokens_col)).alias("token"))
     t1 = t.select(F.col("doc_id").alias("id1"), "token")
     t2 = t.select(F.col("doc_id").alias("id2"), "token")
@@ -603,7 +449,7 @@ def cross_minhash_duplicates(
     ).repartition(n_part, "bkey")
     cand = (
         a.join(b, "bkey")
-        .filter(make_first_band_match(cfg.bands, cfg.rows)(F.col("p1"), F.col("p2")))
+        .filter(first_band_match(F.col("p1"), F.col("p2"), cfg.bands, cfg.rows))
         .select("id1", "id2")
     )
     verified = token_jaccard_verify(
@@ -1575,15 +1421,7 @@ def minhash_jaccard_error(
     Output: (id1, id2, est, jaccard, abs_err), doubles rounded 6dp.
     """
     n_hashes = cfg.rows * cfg.bands
-    params = _hash_params(n_hashes, cfg.seed)
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("token")
-    ).join(F.broadcast(token_dict), "token")
-    mins = [
-        F.min((F.lit(a) * F.col("token_id") + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = toks.groupBy("doc_id").agg(*mins).select(
+    sig = minhash_mins(docs, token_dict, n_hashes, cfg.seed, "doc_id").select(
         "doc_id", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
     )
     pairs = minhash_candidate_pairs(docs, token_dict, cfg)

@@ -44,7 +44,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import blocking as B
-from .blocking import BlockingConfig, _attach_key_payload, _first_key_match
+from .blocking import (
+    BlockingConfig,
+    _attach_key_payload,
+    _first_key_match,
+    _pin,
+    with_block_size,
+)
 from .scoring import ScoringConfig, score_pairs
 from ..functions.tfidf import doc_frequencies
 
@@ -53,7 +59,6 @@ def cross_candidate_pairs(
     new_blocks: DataFrame,
     base_blocks: DataFrame,
     cfg: BlockingConfig | None = None,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(new_id, base_id): co-blocked cross-side pairs, each exactly once.
 
@@ -63,46 +68,33 @@ def cross_candidate_pairs(
     the block key, so its output is proportional to cross collisions, not to
     the base corpus' internal pair count.
 
-    Shares the self-join's scale machinery: union-wide hot-block cap,
-    explicit-N repartition of both join inputs (AQE must not fold the tiny
-    input of an explosive join — docs/SCALE.md), and the min-common-key
-    per-row predicate instead of a pair-set distinct().
+    Shares the self-join's scale machinery (operators/blocking.py):
+    union-wide hot-block cap (:func:`..blocking.with_block_size`), the
+    dense-id key payload and its min-common-key predicate instead of a
+    pair-set distinct(), the pinned join input, and explicit-N repartition
+    of both join inputs (AQE must not fold the tiny input of an explosive
+    join — docs/SCALE.md).
     """
     cfg = cfg or BlockingConfig()
-    nb = new_blocks.dropDuplicates(["conv_id", "block_key"]).withColumn(
-        "_new", F.lit(True)
+    nb, bb = (
+        blk.dropDuplicates(["conv_id", "block_key"]).withColumn("_new", F.lit(is_new))
+        for blk, is_new in ((new_blocks, True), (base_blocks, False))
     )
-    bb = base_blocks.dropDuplicates(["conv_id", "block_key"]).withColumn(
-        "_new", F.lit(False)
-    )
-    # one frontier feeds sizes, the cap anti-join, per-doc key arrays, and
-    # both join sides — persist so the upstream key chain runs once
-    blocks = nb.unionByName(bb).persist()
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("_sz"))
-    kept = blocks.join(
-        F.broadcast(sizes.filter(F.col("_sz") > cfg.max_block_size)),
-        "block_key",
-        "left_anti",
-    )
-    # dense-id payload + Arrow-kernel predicate (same machinery as
-    # candidate_pairs — see blocking._attach_key_payload/_pair_key_stats);
-    # _new rides along
-    kept = _attach_key_payload(kept)
-    n_part = shuffle_partitions or int(
-        blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    kept = with_block_size(nb.unionByName(bb), cfg.max_block_size)
+    # the payload frontier feeds both join sides (_new rides along)
+    kept = _pin(_attach_key_payload(kept))
+    n_part = int(kept.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     a = kept.filter("_new").select(
         "block_key", F.col("conv_id").alias("new_id"), F.col("_p").alias("p1")
     ).repartition(n_part, "block_key")
     b = kept.filter(~F.col("_new")).select(
         "block_key", F.col("conv_id").alias("base_id"), F.col("_p").alias("p2")
     ).repartition(n_part, "block_key")
-    out = (
+    return (
         a.join(b, "block_key")
         .filter(_first_key_match(F.col("p1"), F.col("p2")))
         .select("new_id", "base_id")
     )
-    return out
 
 
 def attach_to_clusters(

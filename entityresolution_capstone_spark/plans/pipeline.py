@@ -167,16 +167,9 @@ class Pipeline:
             lambda: B.block_size_metrics(blocks, cfg.blocking),
             resume,
         )
-        # the pairs are lazy over frames blocking persists; release those
-        # once the stage has committed (later stages read the table)
-        held: list[DataFrame] = []
         pairs = self._run_stage(
-            "pairs",
-            lambda: B.candidate_pairs(blocks, cfg.blocking, persisted=held),
-            resume,
+            "pairs", lambda: B.candidate_pairs(blocks, cfg.blocking), resume
         )
-        for df in held:
-            df.unpersist()
 
         # with the iterative alpha path the rel mix-in happens per merge
         # round (operators/iterative.py), so the scoring stage computes the

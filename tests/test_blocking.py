@@ -142,3 +142,114 @@ def test_snm_window_validation(spark):
     df = spark.createDataFrame([("a", "x")], "conv_id string, key string")
     with _pytest.raises(ValueError, match="window"):
         sorted_neighborhood_pairs(df, "key", 1)
+
+
+# ---------------------------------------------------------------------------
+# the band join: banded vs generic dispatch, kept-band mask, materialization
+# ---------------------------------------------------------------------------
+
+_BAND_CFG = B.BlockingConfig(
+    use_token_keys=False,
+    use_minhash=True,
+    minhash_rows=2,
+    minhash_bands=4,
+    max_block_size=20,
+    salt_block_size=5,
+    salt_factor=3,
+)
+
+
+def _band_blocks():
+    """(conv_id, block_key) rows in the ``mh:<band>:<h>_<h>`` format: band 0
+    puts 30 docs into one block (capped at 20), bands 1-3 draw from a few
+    keys so several blocks land in the salted range (5, 20]."""
+    import random
+
+    rng = random.Random(17)
+    rows = []
+    for d in range(60):
+        cid = f"c{d:02d}"
+        rows.append((cid, "mh:0:1_1" if d < 30 else f"mh:0:{d}_{d}"))
+        for band in (1, 2, 3):
+            h = rng.randrange(6 if band < 3 else 40)
+            rows.append((cid, f"mh:{band}:{h}_{h + band}"))
+    return rows
+
+
+def _brute_force_pairs(rows, max_block_size):
+    members = {}
+    for cid, key in rows:
+        members.setdefault(key, set()).add(cid)
+    weight = {}
+    for ids in members.values():
+        if len(ids) > max_block_size:
+            continue
+        ids = sorted(ids)
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                weight[(a, b)] = weight.get((a, b), 0) + 1
+    return weight
+
+
+def _is_banded(df):
+    return "ArrowEvalPython" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_band_join_paths_agree_with_brute_force(spark):
+    """The banded path (packed keys, first_band_match) and the generic path
+    (dense-id payload, Arrow kernel) give the same pairs and CBS weights as a
+    driver-side brute force over the kept blocks — with one capped block and
+    several salted ones."""
+    import dataclasses
+
+    rows = _band_blocks()
+    want = _brute_force_pairs(rows, _BAND_CFG.max_block_size)
+    sizes = {}
+    for _, key in rows:
+        sizes[key] = sizes.get(key, 0) + 1
+    assert max(sizes.values()) > _BAND_CFG.max_block_size
+    assert sum(
+        _BAND_CFG.salt_block_size < n <= _BAND_CFG.max_block_size
+        for n in sizes.values()
+    ) >= 3
+    blocks = spark.createDataFrame(rows, "conv_id string, block_key string")
+    generic_cfg = dataclasses.replace(_BAND_CFG, custom_key_fn=lambda d: d)
+    banded = B.candidate_pairs(blocks, _BAND_CFG, with_weight=True)
+    generic = B.candidate_pairs(blocks, generic_cfg, with_weight=True)
+    assert _is_banded(banded) and not _is_banded(generic)
+    for out in (banded, generic):
+        got = [(r["id1"], r["id2"], r["weight"]) for r in out.collect()]
+        assert len(got) == len({(a, b) for a, b, _ in got})
+        assert {(a, b): w for a, b, w in got} == want
+    unweighted = B.candidate_pairs(blocks, _BAND_CFG)
+    assert {(r["id1"], r["id2"]) for r in unweighted.collect()} == set(want)
+
+
+def test_banded_pair_in_dropped_and_kept_band_emitted_once(spark):
+    """Two docs share a DROPPED band-0 block and a kept band-2 block: the
+    dropped band must not suppress the pair, and it is emitted exactly once
+    (under band 2), with weight 1."""
+    rows = [("a", "mh:0:5_5"), ("b", "mh:0:5_5"), ("c", "mh:0:5_5")]
+    rows += [("a", "mh:1:1_1"), ("b", "mh:1:2_2"), ("c", "mh:1:3_3")]
+    rows += [("a", "mh:2:7_7"), ("b", "mh:2:7_7"), ("c", "mh:2:8_8")]
+    rows += [("a", "mh:3:1_1"), ("b", "mh:3:2_2"), ("c", "mh:3:3_3")]
+    blocks = spark.createDataFrame(rows, "conv_id string, block_key string")
+    cfg = B.BlockingConfig(
+        use_token_keys=False, minhash_rows=2, minhash_bands=4, max_block_size=2
+    )
+    got = B.candidate_pairs(blocks, cfg, with_weight=True).collect()
+    assert [(r["id1"], r["id2"], r["weight"]) for r in got] == [("a", "b", 1)]
+
+
+def test_candidate_pairs_leaves_no_cached_frames(spark):
+    """Both candidate_pairs paths pin their intermediates with
+    localCheckpoint: nothing lands in the CacheManager, and no caller has
+    frames to release."""
+    import dataclasses
+
+    blocks = spark.createDataFrame(_band_blocks(), "conv_id string, block_key string")
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for cfg in (_BAND_CFG, dataclasses.replace(_BAND_CFG, custom_key_fn=lambda d: d)):
+        assert B.candidate_pairs(blocks, cfg).count() > 0
+        assert cm.isEmpty()

@@ -223,28 +223,6 @@ def test_pandas_dot_and_cosine_ordered_fold_bit_identical(spark):
         assert r["pcos"] is None
 
 
-def test_jaccard_verify_array_matches_explode(spark, documents, docs):
-    from entityresolution_capstone_spark.operators.dedup import (
-        dedup_token_dict,
-        minhash_candidate_pairs,
-        token_jaccard_verify,
-        MinHashConfig,
-    )
-
-    cfg = MinHashConfig()
-    cand = (
-        minhash_candidate_pairs(docs, dedup_token_dict(docs), cfg)
-        .orderBy("id1", "id2")
-        .limit(500)
-        .cache()
-    )
-    a = token_jaccard_verify(cand, docs, 0.5, strategy="explode")
-    b = token_jaccard_verify(cand, docs, 0.5, strategy="array")
-    ra = sorted((r["id1"], r["id2"], round(r["jaccard"], 9)) for r in a.collect())
-    rb = sorted((r["id1"], r["id2"], round(r["jaccard"], 9)) for r in b.collect())
-    assert ra == rb
-
-
 def test_jaccard_verify_bitset_matches_explode(spark, documents, docs):
     """r6 bitset verify == explode verify, value-for-value (same integers,
     same one final division -> bit-identical doubles, asserted unrounded)."""
@@ -299,21 +277,42 @@ def test_bucket_pairs_pair_filter_requires_payload(spark):
 
 def test_first_band_match_emits_each_pair_once(spark):
     """Two docs colliding in bands 1 and 3 (0-indexed) must yield ONE pair,
-    attributed to band 1."""
-    rows = [
-        (1, ["a0", "X", "c0", "Y"]),
-        (2, ["a2", "X", "c2", "Y"]),
-    ]
-    sig = spark.createDataFrame(rows, "doc_id long, keys array<string>")
-    buckets = (
-        sig.select("doc_id", "keys")
-        .select("doc_id", "keys", F.posexplode("keys").alias("band", "bkey"))
-        .select("doc_id", "bkey", F.struct("band", "keys").alias("p"))
+    attributed to band 1 — on the packed payload every band join uses
+    (rows=2: one long per band; all bands kept)."""
+    from entityresolution_capstone_spark.operators.blocking import first_band_match
+
+    bands, rows = 4, 2
+    keys = {1: [10, 99, 30, 77], 2: [20, 99, 40, 77]}
+    pay = "struct<band:int,k0:bigint,k1:bigint,k2:bigint,k3:bigint,m:bigint>"
+    buckets = spark.createDataFrame(
+        [
+            (d, (b, ks[b]), (b, *ks, (1 << bands) - 1))
+            for d, ks in keys.items()
+            for b in range(bands)
+        ],
+        f"doc_id long, bkey struct<band:int,c0:bigint>, p {pay}",
     )
     out = D.bucket_pairs(
-        buckets, payload_col="p", pair_filter=D.first_band_match
+        buckets,
+        payload_col="p",
+        pair_filter=lambda p1, p2: first_band_match(p1, p2, bands, rows),
+        keep_payload=True,
     ).collect()
-    assert [(r["id1"], r["id2"]) for r in out] == [(1, 2)]
+    assert [(r["id1"], r["id2"], r["p1"]["band"]) for r in out] == [(1, 2, 1)]
+
+
+def test_minhash_duplicates_leaves_no_cached_frames(spark):
+    """The band join pins its intermediates with localCheckpoint, never a
+    CacheManager entry, so repeated dedup calls leave nothing to release."""
+    documents = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i % 3} epsilon") for i in range(40)],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(2):
+        assert D.minhash_duplicates(documents, D.MinHashConfig(salt_bucket_size=5)).count() > 0
+        assert cm.isEmpty()
 
 
 def test_cross_minhash_equals_cross_parity_slice_of_full(spark, documents):
