@@ -38,8 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.relational import attr_uniqueness, cluster_neighbors, rel_sim_pairs
-from .cc import connected_components
-from .linkage import cluster_pair_linkage
+from .cc import connected_components, pin
+from .linkage import cluster_pair_linkage, relabel
 
 
 def resolve_iterative(
@@ -70,16 +70,13 @@ def resolve_iterative(
                          "single-pass pipeline for alpha == 0")
     if rel_strategy.startswith("adar_attr") and (attr_docs is None or not a1 or not a2):
         raise ValueError("adar_attr strategies need attr_docs + a1 + a2")
-    if initial_assignment is not None:
-        # e.g. exact-match bootstrap pre-clusters (reference resolver.py:378-475
-        # seeds the merge loop with them)
-        assignment = initial_assignment.select("conv_id", "cluster_id").localCheckpoint(
-            eager=True
-        )
-    else:
-        assignment = all_ids.select(
-            "conv_id", F.col("conv_id").alias("cluster_id")
-        ).localCheckpoint(eager=True)
+    # initial_assignment: e.g. exact-match bootstrap pre-clusters (reference
+    # resolver.py:378-475 seeds the merge loop with them)
+    assignment = pin(
+        all_ids.select("conv_id", F.col("conv_id").alias("cluster_id"))
+        if initial_assignment is None
+        else initial_assignment.select("conv_id", "cluster_id")
+    )
     for _ in range(max_rounds):
         attr_link = cluster_pair_linkage(
             node_scores, assignment, linkage, sim_col="attr_sim"
@@ -103,16 +100,11 @@ def resolve_iterative(
         merges = sim.filter(F.col("sim") >= F.lit(float(threshold))).select(
             F.col("c1").alias("id1"), F.col("c2").alias("id2")
         )
-        if merges.isEmpty():
-            break
-        comp = connected_components(merges).select(
+        comp = connected_components(merges)
+        mapping = comp.select(
             F.col("conv_id").alias("cluster_id"), F.col("cluster_id").alias("_new")
         )
-        assignment = (
-            assignment.join(comp, "cluster_id", "left")
-            .select(
-                "conv_id", F.coalesce("_new", F.col("cluster_id")).alias("cluster_id")
-            )
-            .localCheckpoint(eager=True)
-        )
+        assignment, merged = relabel(assignment, mapping, comp)
+        if merged == 0:
+            break
     return assignment.orderBy("conv_id")

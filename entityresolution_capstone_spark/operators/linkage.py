@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cc import observe_count, pin, round_step
+
 LINKAGES = ("min", "average", "max")
 
 
@@ -97,6 +99,22 @@ def cluster_pair_linkage(
     return agg.select("c1", "c2", link.alias("link"))
 
 
+def relabel(
+    assignment: DataFrame, mapping: DataFrame, *spent: DataFrame
+) -> tuple[DataFrame, int]:
+    """Apply ``mapping`` (cluster_id, _new) to the pinned ``assignment`` as one
+    round of :func:`.cc.round_step` -> (new pinned assignment, labels changed).
+
+    The change count is observed in the pinning job; ``assignment`` and the
+    ``spent`` pins are released once the new assignment is pinned.
+    """
+    moved, changed = observe_count(
+        assignment.join(mapping, "cluster_id", "left"), F.col("_new").isNotNull()
+    )
+    new = F.coalesce("_new", F.col("cluster_id")).alias("cluster_id")
+    return round_step(moved.select("conv_id", new), changed, assignment, *spent)
+
+
 def linkage_clustering(
     scored_pairs: DataFrame,
     all_ids: DataFrame,
@@ -108,23 +126,20 @@ def linkage_clustering(
 ) -> DataFrame:
     """Agglomerative clustering under the chosen linkage -> (conv_id, cluster_id).
 
-    Labels are the min conv_id of each cluster (deterministic). Each round is
-    checkpointed (``localCheckpoint``) — the assignment is re-read by every
-    branch of the next round's joins, and an un-truncated lineage would nest
-    one plan per round.
+    Labels are the min conv_id of each cluster (deterministic). Each round's
+    assignment is pinned by :func:`relabel` — it is re-read by every branch
+    of the next round's joins, and an un-truncated lineage would nest one
+    plan per round.
 
     ``initial_assignment``: optional (conv_id, cluster_id) pre-clusters (e.g.
     exact-match bootstrap groups, the reference's pre-clustering step) —
     defaults to singletons.
     """
-    if initial_assignment is not None:
-        assignment = initial_assignment.select("conv_id", "cluster_id").localCheckpoint(
-            eager=True
-        )
-    else:
-        assignment = all_ids.select(
-            "conv_id", F.col("conv_id").alias("cluster_id")
-        ).localCheckpoint(eager=True)
+    assignment = pin(
+        all_ids.select("conv_id", F.col("conv_id").alias("cluster_id"))
+        if initial_assignment is None
+        else initial_assignment.select("conv_id", "cluster_id")
+    )
     for _ in range(max_rounds):
         cand = cluster_pair_linkage(scored_pairs, assignment, linkage, sim_col).filter(
             F.col("link") >= F.lit(float(threshold))
@@ -150,14 +165,7 @@ def linkage_clustering(
         mapping = mutual.select(
             F.col("_pb").alias("cluster_id"), F.col("_pa").alias("_new")
         )
-        n_merges = mapping.count()
-        if n_merges == 0:
+        assignment, merged = relabel(assignment, mapping)
+        if merged == 0:
             break
-        assignment = (
-            assignment.join(mapping, "cluster_id", "left")
-            .select(
-                "conv_id", F.coalesce("_new", F.col("cluster_id")).alias("cluster_id")
-            )
-            .localCheckpoint(eager=True)
-        )
     return assignment.orderBy("conv_id")

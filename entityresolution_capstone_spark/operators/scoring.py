@@ -28,7 +28,6 @@ the sparse TF-IDF route is a term of ONE per-pair projection over
 from __future__ import annotations
 
 import operator
-import os
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -136,17 +135,7 @@ def _dense_path_eligible(vocab: int, corpus_size: int | None) -> bool:
     """ONE predicate for the dense-TF-IDF route, shared by
     precompute_dense_tfidf and score_pairs — if the two ever diverged,
     bench.py could precompute None while scoring still takes the dense route
-    and silently re-derives the table inside the timed run.
-
-    SPARK_GRAFT_FORCE_SPARSE_TFIDF=1 disables the dense route regardless of
-    vocab size: the sparse explode+join route is the only one available at
-    real-corpus vocabularies, so cross-scale growth measurements must be able
-    to hold the PLAN fixed while the input grows (the x10 weak-scaling input
-    crosses DENSE_TFIDF_MAX_VOCAB by construction — disjoint per-copy token
-    spaces grow vocab linearly — and the resulting plan switch otherwise
-    masquerades as a superlinear wall-growth exponent)."""
-    if os.environ.get("SPARK_GRAFT_FORCE_SPARSE_TFIDF", "") == "1":
-        return False
+    and silently re-derives the table inside the timed run."""
     return 0 < vocab <= DENSE_TFIDF_MAX_VOCAB and (corpus_size or 0) <= DENSE_TFIDF_MAX_DOCS
 
 

@@ -9,6 +9,7 @@ import pytest
 
 from entityresolution_capstone_spark.operators.iterative import resolve_iterative
 from tests.reference_emulator import resolve_alpha_rounds
+from tests.test_cc import persistent_rdd_ids
 
 
 def _run_spark(spark, ids, node_scores, edges, alpha, threshold, strategy):
@@ -140,3 +141,16 @@ def test_driver_query_er_iterative_smoke(spark):
     # cluster ids are member conv_ids (least-id representative convention)
     ids = {r["conv_id"] for r in rows}
     assert all(r["cluster_id"] in ids for r in rows)
+
+
+def test_iterative_leaves_one_persistent_rdd(spark):
+    rng = random.Random(11)
+    ids = list(range(8))
+    node_scores = {
+        (a, b): round(rng.random(), 4) for a, b in itertools.combinations(ids, 2)
+    }
+    edges = {i: i % 3 for i in ids}
+    before = persistent_rdd_ids(spark)
+    got = _run_spark(spark, ids, node_scores, edges, 0.4, 0.62, "jaccard_coef")
+    assert len(got) < len(ids)  # merges ran
+    assert len(persistent_rdd_ids(spark) - before) <= 1

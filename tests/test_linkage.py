@@ -12,6 +12,7 @@ from entityresolution_capstone_spark.operators.linkage import (
     cluster_pair_linkage,
     linkage_clustering,
 )
+from tests.test_cc import persistent_rdd_ids
 
 
 def seq_linkage(ids, sims, threshold, linkage):
@@ -112,3 +113,19 @@ def test_cluster_pair_linkage_average_denominator(spark):
     )
     row = cluster_pair_linkage(pairs, asg, "average").collect()[0]
     assert row["link"] == pytest.approx(0.8 / 2)
+
+
+def test_linkage_leaves_one_persistent_rdd(spark):
+    rng = random.Random(4)
+    ids = list(range(10))
+    sims = {(a, b): round(rng.random(), 6) for a, b in itertools.combinations(ids, 2)}
+    pairs = spark.createDataFrame(
+        [(f"n{a:03d}", f"n{b:03d}", s) for (a, b), s in sims.items()],
+        "id1 string, id2 string, sim double",
+    )
+    all_ids = spark.createDataFrame([(f"n{i:03d}",) for i in ids], "conv_id string")
+    before = persistent_rdd_ids(spark)
+    out = linkage_clustering(pairs, all_ids, 0.5, "average")
+    assert out.count() == len(ids)
+    assert out.select("cluster_id").distinct().count() < len(ids)  # merges ran
+    assert len(persistent_rdd_ids(spark) - before) <= 1

@@ -337,25 +337,3 @@ def test_dense_table_precompute_parity(spark, small, monkeypatch):
     a = {(r["id1"], r["id2"]): r["attr_sim"] for r in inline.collect()}
     b = {(r["id1"], r["id2"]): r["attr_sim"] for r in pre.collect()}
     assert a == b and a
-
-
-def test_force_sparse_tfidf_env_matches_dense_path(spark, small, monkeypatch):
-    """SPARK_GRAFT_FORCE_SPARSE_TFIDF=1 (the cross-scale fixed-plan knob)
-    must produce the same scores as the dense path it disables — the sparse
-    explode+join route is the only plan available at real-corpus
-    vocabularies, so its parity is the 100-TB-relevant correctness fact."""
-    docs, dft, pairs, _ = small
-    cfg = SC.ScoringConfig(weights={"jw": 0.3, "lev": 0.2, "tfidf": 0.5})
-    n = docs.count()
-    monkeypatch.setattr(SC, "DENSE_TFIDF_MAX_VOCAB", 10**6)
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_SPARSE_TFIDF", raising=False)
-    assert SC._dense_path_eligible(dft.count(), n)  # dense is the baseline
-    dense = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    a = {(r["id1"], r["id2"]): r["attr_sim"] for r in dense.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_SPARSE_TFIDF", "1")
-    assert not SC._dense_path_eligible(dft.count(), n)
-    sparse = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
-    b = {(r["id1"], r["id2"]): r["attr_sim"] for r in sparse.collect()}
-    assert set(a) == set(b) and len(a) > 0
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-9, k

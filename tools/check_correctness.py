@@ -45,6 +45,17 @@ def norm_rows(cols, rows):
     return [c for c in sorted(cols)], out
 
 
+def default_driver_mem() -> str:
+    """Driver heap default: 40% of physical memory, at least 1g.
+
+    sf0.1 stress runs collect ~10^6-row results, so the 1g Spark default
+    OOMs; a heap the size of RAM (16g on a 16 GB host) lets the OS kill the
+    JVM mid-run instead. The sf0.01 run peaks at ~4.7 GB RSS with a 6g heap.
+    """
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * 0.4) >> 30)}g"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -61,9 +72,10 @@ def main():
         master="local[8]",
         shuffle_partitions=8,
         extra_conf={
-            # sf0.1 stress runs collect ~10^6-row results; the 1g default
-            # heap OOMs (effective only when this process starts the JVM)
-            "spark.driver.memory": os.environ.get("ERCS_CHECK_DRIVER_MEM", "16g"),
+            # effective only when this process starts the JVM
+            "spark.driver.memory": os.environ.get(
+                "ERCS_CHECK_DRIVER_MEM", default_driver_mem()
+            ),
         },
     )
 
