@@ -205,7 +205,7 @@ def main():
 
         def d_verify():
             return D.token_jaccard_verify(
-                state["cand"], docs, _MH.jaccard_threshold, strategy="explode"
+                state["cand"], docs, _MH.jaccard_threshold, token_dict=state["tdict"]
             ).count()
 
         for nm, fn in [

@@ -12,8 +12,10 @@ tokens that one straggler dominates the stage.
    sampling may vary between runs, but ids depend only on the total order, so
    the output is deterministic regardless of where boundaries land);
 2. per-partition ``row_number`` (parallel: one window task per range slice);
-3. per-partition row counts -> cumulative offsets (a window over ~numPartitions
-   rows — trivially small) broadcast-joined back.
+3. per-partition row counts, collected once right after the pin (numPartitions
+   rows), become cumulative offsets inlined as a literal lookup on the
+   partition id — every consumer reads the ids as a narrow projection of the
+   pinned relation.
 
 The DuckDB oracles keep the plain ``row_number() over (order by df, token)``
 form: same values, different physical plan.
@@ -43,10 +45,10 @@ def dense_rank_ids(
     columns plus the id column, cast to long.
 
     ``pin=False`` skips the internal eager localCheckpoint and returns the
-    raw lazy two-branch plan — FOR PLAN INSPECTION ONLY (tests asserting the
-    range-partitioned shape). With ``pin=False`` the ids are only coherent
-    while Catalyst happens to reuse the range exchange across the two
-    branches; every production caller must leave ``pin=True``.
+    raw lazy plan — FOR PLAN INSPECTION ONLY (tests asserting the
+    range-partitioned shape). With ``pin=False`` the offsets are counted on
+    one evaluation of the range exchange and applied to another, whose
+    boundaries may differ; every production caller must leave ``pin=True``.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartitionByRange(n, *order_cols).withColumn(
@@ -54,14 +56,14 @@ def dense_rank_ids(
     )
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     # MATERIALIZATION is load-bearing, not an optimization. `local` feeds
-    # BOTH the per-partition counts and the final join; without it each
-    # branch physically re-evaluates the repartitionByRange exchange, and
+    # BOTH the per-partition counts and the id projection; without it each
+    # would re-evaluate the repartitionByRange exchange, and
     # RangePartitioner re-SAMPLES its boundaries per evaluation (the sampling
     # seed incorporates the runtime RDD id, so two evaluations of the same
     # plan land different boundaries whenever Catalyst doesn't reuse the
     # exchange — column pruning on the counts branch is enough to break
-    # reuse). `_pid` then names DIFFERENT range slices in the two branches
-    # and the offset join composes ranks from mismatched boundary sets —
+    # reuse). `_pid` then names DIFFERENT range slices in the two
+    # evaluations and the offsets compose ranks from mismatched boundaries —
     # observed as silently corrupted ids (Abt-Buy blocking recall 0.99 ->
     # 0.46 when _attach_key_payload's cur/keys branches disagreed).
     #
@@ -76,17 +78,20 @@ def dense_rank_ids(
     # trade documented here: a lost block is a LOUD job failure (no lineage
     # to recompute), never a silent id-space corruption; production clusters
     # that need fault tolerance should use a reliable checkpoint dir.
-    ranked = parted.withColumn("_rn", F.row_number().over(w))
-    local = ranked.localCheckpoint(eager=True) if pin else ranked
-    # per-partition counts -> exclusive prefix sums; numPartitions rows, so the
-    # partition-less window here is over a tiny table, not the vocabulary
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_cnt").over(wo), F.lit(0)).alias("_off")
+    ranked = parted.withColumn("_rn", F.row_number().over(w)).withColumn(
+        "_cnt", F.count(F.lit(1)).over(Window.partitionBy("_pid"))
     )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(id_name, (F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_off")
+    local = ranked.localCheckpoint(eager=True) if pin else ranked
+    # per-partition counts -> exclusive prefix sums, collected ONCE here (one
+    # row per partition, no shuffle) and inlined as a literal array indexed
+    # by `_pid`: consumers of the ids re-run no counts aggregate, window or
+    # broadcast join
+    counts = dict(local.filter(F.col("_rn") == 1).select("_pid", "_cnt").collect())
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += counts.get(pid, 0)
+    off = F.element_at(F.array(*offsets), F.col("_pid") + 1) if offsets else F.lit(0)
+    return local.withColumn(id_name, (off + F.col("_rn")).cast("long")).drop(
+        "_pid", "_rn", "_cnt"
     )

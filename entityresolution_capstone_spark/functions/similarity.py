@@ -743,16 +743,12 @@ def _lev_myers_coded(
 
 
 def scaled_levenshtein_batch(
-    s1: np.ndarray,
-    s2: np.ndarray,
-    max_len: int = DEFAULT_MAX_LEN,
-    impl: str = "bitparallel",
+    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
 ) -> np.ndarray:
     """1 - dist/max(len); 1.0 for two empty strings (py_stringmatching semantics)."""
     a_len = np.array([min(len(x or ""), max_len) for x in s1], dtype=np.float64)
     b_len = np.array([min(len(x or ""), max_len) for x in s2], dtype=np.float64)
-    dist_fn = levenshtein_batch_bitparallel if impl == "bitparallel" else levenshtein_batch
-    dist = dist_fn(s1, s2, max_len=max_len)
+    dist = levenshtein_batch_bitparallel(s1, s2, max_len=max_len)
     mx = np.maximum(a_len, b_len)
     with np.errstate(divide="ignore", invalid="ignore"):
         sim = 1.0 - dist / mx
@@ -762,7 +758,7 @@ def scaled_levenshtein_batch(
 def _scaled_lev_coded(
     a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
 ) -> np.ndarray:
-    """scaled_levenshtein_batch (bitparallel impl) on pre-encoded codes.
+    """scaled_levenshtein_batch on pre-encoded codes.
     ``la``/``lb`` ARE min(len, max_len) — :func:`_encode_batch` truncates
     before measuring — so the length normalization is byte-identical to the
     wrapper's own per-string recount."""

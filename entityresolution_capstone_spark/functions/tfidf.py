@@ -9,7 +9,9 @@ algorithm and pinned by the reference's own golden scores
 
 - ``idf(t) = corpus_size / df(t)``  (plain ratio, no log)
 - similarity map: for each distinct token x of bag1, the best-matching distinct
-  token y of bag2 under the secondary similarity, kept iff ``sim > threshold``
+  token y of bag2 under the secondary similarity (Jaro-Winkler, the
+  reference's ``second_sim`` default and the only one supported), kept iff
+  ``sim > threshold``
 - numerator  = sum over map entries of ``idf(x)*tf1(x) * idf(y)*tf2(y) * sim``
 - normalized by ``||v1|| * ||v2||`` where ``v_i`` are the plain tf-idf vectors
 - the reference symmetrizes with ``max(score(a,b), score(b,a))``
@@ -29,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .similarity import jaro_batch, jaro_winkler_batch, scaled_levenshtein_batch
+from .similarity import jaro_winkler_batch
 
 
 def doc_frequencies(docs: DataFrame, tokens_col: str = "tokens", id_col: str = "conv_id") -> DataFrame:
@@ -113,20 +115,12 @@ def tfidf_cosine_pairs(
 # Soft-TF-IDF (reference-parity kernel, vectorized pandas UDF)
 # ---------------------------------------------------------------------------
 
-_SECONDARY = {
-    "jaro_winkler": jaro_winkler_batch,
-    "jaro": jaro_batch,
-    "scaled_lev": scaled_levenshtein_batch,
-}
-
-
 def soft_tfidf_pairs(
     pairs: DataFrame,
     docs: DataFrame,
     df_table: DataFrame,
     corpus_size: int,
     threshold: float = 0.5,
-    second_sim: str = "jaro_winkler",
     symmetric: bool = True,
     id1: str = "id1",
     id2: str = "id2",
@@ -146,7 +140,7 @@ def soft_tfidf_pairs(
        doc-cardinality aggregate;
     2. the pair⋈stats⋈stats token cross product (Σ_pairs |u1|·|u2| rows —
        the same work the UDF did per batch, now shuffled instead of looped);
-    3. the secondary similarity evaluated ONCE per DISTINCT co-candidate
+    3. the secondary Jaro-Winkler evaluated ONCE per DISTINCT co-candidate
        token pair through the same batched Arrow kernel (token-pair
        cardinality ≪ cross cardinality), joined back;
     4. per-(pair, source-token) argmax via max_by ordered by (sim DESC,
@@ -187,12 +181,10 @@ def soft_tfidf_pairs(
     - when ``symmetric``, the joined stream is persisted (both direction
       aggregates consume it; Spark evicts it LRU after the job).
     """
-    kernel = _SECONDARY[second_sim]
-
     @pandas_udf("double")
     def sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(
-            kernel(
+            jaro_winkler_batch(
                 a.fillna("").to_numpy(dtype=object),
                 b.fillna("").to_numpy(dtype=object),
             )
@@ -316,7 +308,6 @@ def soft_tfidf_raw(
     df_map: dict[str, int],
     corpus_size: int,
     threshold: float = 0.5,
-    second_sim: str = "jaro_winkler",
 ) -> float:
     """Single-direction soft-TF-IDF raw score (driver/test helper).
 
@@ -325,7 +316,6 @@ def soft_tfidf_raw(
     """
     if not bag1 or not bag2:
         return 0.0
-    kernel = _SECONDARY[second_sim]
     tf1: dict[str, int] = {}
     tf2: dict[str, int] = {}
     for t in bag1:
@@ -335,7 +325,7 @@ def soft_tfidf_raw(
     u1, u2 = list(tf1), list(tf2)
     xs = np.array([x for x in u1 for _ in u2], dtype=object)
     ys = np.array(u2 * len(u1), dtype=object)
-    sims = kernel(xs, ys).reshape(len(u1), len(u2))
+    sims = jaro_winkler_batch(xs, ys).reshape(len(u1), len(u2))
     num = 0.0
     for i, x in enumerate(u1):
         j = int(np.argmax(sims[i]))
@@ -358,18 +348,15 @@ def make_soft_tfidf_udf(
     spark_df_map,
     corpus_size: int,
     threshold: float = 0.5,
-    second_sim: str = "jaro_winkler",
     symmetric: bool = True,
 ):
     """Pandas UDF (tokens1 array, tokens2 array) -> double soft-TF-IDF score.
 
     ``spark_df_map`` is a broadcast variable holding {token: df}. The secondary
-    similarity over the token cross-product is evaluated through the batched
-    NumPy kernels (one flattened kernel call per Arrow batch — token pairs from
+    Jaro-Winkler over the token cross-product is evaluated through the batched
+    NumPy kernel (one flattened kernel call per Arrow batch — token pairs from
     every row in the batch are scored in a single vectorized call).
     """
-    kernel = _SECONDARY[second_sim]
-
     @pandas_udf("double")
     def stfidf_udf(t1: pd.Series, t2: pd.Series) -> pd.Series:
         df_map = spark_df_map.value
@@ -398,7 +385,7 @@ def make_soft_tfidf_udf(
                     ys.append(y)
             metas.append((u1, u2, tf1, tf2, off))
         sims = (
-            kernel(np.array(xs, dtype=object), np.array(ys, dtype=object))
+            jaro_winkler_batch(np.array(xs, dtype=object), np.array(ys, dtype=object))
             if xs
             else np.empty(0)
         )

@@ -95,11 +95,14 @@ def _hash_params(n: int, seed: int) -> list[tuple[int, int]]:
 
 
 def token_dictionary(df_table: DataFrame) -> DataFrame:
-    """(token, token_id, df) with dense ids ordered by (df, token).
+    """(token, df, token_id) with dense ids ordered by (df, token) — the one
+    token-id builder: blocking, the dedup family, the text fingerprints and
+    dense TF-IDF all number their tokens here, from
+    ``functions.tfidf.doc_frequencies``.
 
     Deterministic and reproducible in SQL (equals ``row_number() over (order
     by df, token)``), but computed with NO single-task global sort: ids come
-    from range-partitioned per-partition row numbers + broadcast offsets
+    from range-partitioned per-partition row numbers + per-partition offsets
     (:func:`..functions.ids.dense_rank_ids`), so a 10^9-token vocabulary
     numbers in parallel instead of on one straggler.
     """

@@ -22,17 +22,29 @@ from :func:`.blocking.minhash_mins`, every bucket self-join (MinHash, SimHash,
 bucketed embeddings) runs through :func:`.blocking.bucket_self_join` via
 :func:`bucket_pairs`, and MinHash pairs are emitted once by
 :func:`.blocking.first_band_match`.
+
+One token-id layer serves the whole family: every token dictionary is
+blocking's :func:`.blocking.token_dictionary` over
+``functions.tfidf.doc_frequencies`` (:func:`dedup_token_dict`), and every
+exact token-set overlap — MinHash, cross-corpus and n-gram verify, the
+prefix join above its emit-once width, the estimator audit — is
+:func:`token_overlap`, which picks its bitset or explode route from the
+vocabulary in one place (``VERIFY_BITSET_MAX_WORDS``). Per-doc bitmasks are
+built by :func:`token_masks` and intersected by :func:`mask_overlap`, in the
+overlap operator and in the prefix join's emit-once route alike.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ids import dense_rank_ids
 from ..functions.text import token_ngrams, tokenize
+from ..functions.tfidf import doc_frequencies
 from .blocking import (
     MERSENNE_P,
     _hash_params,
@@ -40,6 +52,7 @@ from .blocking import (
     first_band_match,
     minhash_mins,
     pack_band,
+    token_dictionary,
 )
 
 
@@ -72,22 +85,125 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared: token dictionary over the dedup corpus
+# shared: the token-id layer (one dictionary, one exact overlap operator)
 # ---------------------------------------------------------------------------
 
-def dedup_token_dict(docs: DataFrame) -> DataFrame:
-    """(token, token_id) dense ids ordered by (df, token) — SQL-reproducible.
+# The one bitset/explode decision (:func:`token_overlap`): per-doc token sets
+# become int64 bitmasks while they fit this many words (vocab <= 4096), else
+# the overlap is counted by the explode join
+VERIFY_BITSET_MAX_WORDS = 64
+# prefix_jaccard_join's emit-once route: token AND prefix masks ride every row
+# of the quadratic prefix-token join, so it runs only up to this width (at 21
+# words a Zipf-skewed corpus measured 208 s against ~10 s for the pair-groupBy
+# route; at 1 word the emit-once route won 14.1 -> 2.3 s, sf0.1/local[32])
+EMIT_ONCE_MAX_WORDS = 4
 
-    No global sort: ids via range-partitioned numbering + broadcast offsets
-    (functions.ids.dense_rank_ids), bit-identical to the row_number form the
-    DuckDB oracle uses.
-    """
-    dft = (
-        docs.select("doc_id", F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
+
+def dedup_token_dict(docs: DataFrame) -> DataFrame:
+    """(token, df, token_id) over docs(doc_id, tokens): blocking's
+    :func:`.blocking.token_dictionary`, ids ordered by (df, token)."""
+    return token_dictionary(doc_frequencies(docs, id_col="doc_id"))
+
+
+def vocab_size(token_dict: DataFrame) -> int:
+    """Largest dense id of a token dictionary (0 when empty) — one small job
+    over the pinned dictionary."""
+    return int(token_dict.agg(F.coalesce(F.max("token_id"), F.lit(0))).collect()[0][0])
+
+
+def doc_tokens(docs: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+    """(doc_id, token, n): one row per distinct token of each doc, ``n`` the
+    doc's distinct-token count riding every row. A doc without tokens has no
+    row."""
+    toks = F.array_distinct(tokens_col)
+    return docs.select("doc_id", F.size(toks).alias("n"), F.explode(toks).alias("token"))
+
+
+def token_masks(words: int, prefix: str, where: str = "true") -> list:
+    """``words`` bit_or aggregates ``{prefix}0..`` over rows with a ``tid``
+    column: bit ``tid - 1`` of a doc's token-id set as int64 words (only rows
+    where the SQL predicate ``where`` holds)."""
+    bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST((tid - 1) % 64 AS INT))")
+    word = F.expr("CAST((tid - 1) DIV 64 AS INT)")
+    return [
+        F.bit_or(F.when((word == w) & F.expr(where), bit).otherwise(F.lit(0).cast("long"))).alias(
+            f"{prefix}{w}"
+        )
+        for w in range(words)
+    ]
+
+
+def mask_overlap(a: str, b: str, words: int):
+    """|s1 ∩ s2| of two token sets masked as ``a0..``/``b0..``: the static
+    ``Σ_w bit_count(a_w & b_w)`` — whole-stage codegen, no per-row allocation."""
+    return reduce(
+        operator.add,
+        [F.bit_count(F.col(f"{a}{w}").bitwiseAND(F.col(f"{b}{w}"))) for w in range(words)],
     )
-    return dense_rank_ids(dft, ["df", "token"], "token_id").select("token", "token_id")
+
+
+def token_overlap(
+    pairs: DataFrame, tokens: DataFrame, vocab: int, token_dict: DataFrame | None = None
+) -> DataFrame:
+    """(id1, id2, n1, n2, inter): exact distinct-token overlap of the candidate
+    pairs that share at least one token. ``tokens`` is :func:`doc_tokens`
+    output; ``token_dict`` numbers its tokens 1..``vocab`` (without it,
+    ``token`` already holds those dense ids).
+
+    The route is picked here and nowhere else, from the vocabulary:
+
+    - bitset (``ceil(vocab/64) <= VERIFY_BITSET_MAX_WORDS``): tokens become
+      dictionary ids, each doc's set W int64 masks built at DOC cardinality
+      (one groupBy) and attached to the pairs by two doc-cardinality joins,
+      and ``inter`` is the static :func:`mask_overlap` on the pair rows —
+      the O(pairs · tokens) exploded stream never exists (measured at
+      sf0.1/local[32]: the q_dedup verify 13.4 s -> ~1 s);
+    - explode (unbounded vocabulary, where masks would outgrow the token
+      lists): pairs ⋈ (doc, token) on both sides, one count aggregate, with
+      no dictionary join; the sizes ride the token rows. ``pairs`` is
+      referenced once, so an unpinned enumeration upstream is not
+      recomputed.
+
+    Both routes return the same integers.
+    """
+    pairs = pairs.select("id1", "id2")
+    words = (vocab + 63) // 64
+    if 0 < words <= VERIFY_BITSET_MAX_WORDS:
+        if token_dict is not None:
+            tokens = tokens.join(
+                F.broadcast(token_dict.select("token", "token_id")), "token"
+            ).select("doc_id", F.col("token_id").alias("token"), "n")
+        per_doc = tokens.withColumnRenamed("token", "tid").groupBy("doc_id").agg(
+            F.min("n").alias("n"), *token_masks(words, "_m")
+        )
+
+        def side(k: int, p: str) -> DataFrame:
+            return per_doc.select(
+                F.col("doc_id").alias(f"id{k}"),
+                F.col("n").alias(f"n{k}"),
+                *[F.col(f"_m{w}").alias(f"{p}{w}") for w in range(words)],
+            )
+
+        out = (
+            pairs.join(side(1, "_a"), "id1")
+            .join(side(2, "_b"), "id2")
+            .select("id1", "id2", "n1", "n2", mask_overlap("_a", "_b", words).alias("inter"))
+            .filter(F.col("inter") > 0)
+        )
+    else:
+
+        def side(k: int) -> DataFrame:
+            return tokens.select(
+                F.col("doc_id").alias(f"id{k}"), "token", F.col("n").alias(f"n{k}")
+            )
+
+        out = (
+            pairs.join(side(1), "id1")
+            .join(side(2), ["id2", "token"])
+            .groupBy("id1", "id2", "n1", "n2")
+            .agg(F.count("*").alias("inter"))
+        )
+    return out.select("id1", "id2", *[F.col(c).cast("long") for c in ("n1", "n2", "inter")])
 
 
 # ---------------------------------------------------------------------------
@@ -227,186 +343,71 @@ def minhash_candidate_pairs(
     )
 
 
-VERIFY_BITSET_MAX_WORDS = 64  # bitset verify only when vocab <= 64*this (4096)
-
-
 def token_jaccard_verify(
     pairs: DataFrame,
     docs: DataFrame,
     threshold: float,
     tokens_col: str = "tokens",
-    strategy: str = "explode",
     token_dict: DataFrame | None = None,
 ) -> DataFrame:
     """Exact distinct-token Jaccard for candidate pairs; keep >= threshold.
 
-    Several plans, same result:
-    - ``explode`` (default): explode + groupBy — token lists never ride
-      through the pair join; pure join/aggregate algebra that stays in
-      whole-stage codegen and scales with cores. With threshold > 0 the
-      candidate input is referenced exactly ONCE (a pair with no shared
-      token has jaccard 0 and can never pass), so an unpersisted enumeration
-      upstream is not recomputed.
-    - ``bitset`` (r6; requires ``threshold > 0`` and vocab <=
-      64·``VERIFY_BITSET_MAX_WORDS``): dense token-dictionary ids map to bit
-      positions; each doc's distinct-token set becomes W int64 masks built
-      at DOC cardinality, and the per-pair intersection is a static
-      ``Σ_w bit_count(m1_w & m2_w)`` — whole-stage codegen, zero per-row
-      allocation, and the O(pairs · tokens-per-doc) exploded stream the
-      explode plan shuffles through two joins + a groupBy disappears
-      entirely (guide §2.3/§2.4: the verify becomes a per-row expression on
-      the pair stream, with the masks attached by two doc-cardinality
-      joins — broadcast when docs are small). Measured at sf0.1/local[32]:
-      the q_dedup verify step 13.4s (explode) -> ~1s. Same integers, same
-      one final double division — bit-identical jaccard.
-    - ``auto``: bitset when the vocabulary fits and threshold > 0, else
-      explode (the unbounded-vocabulary route; at web-scale vocab the masks
-      would be wider than the token lists).
+    ``inter`` comes from :func:`token_overlap`, which picks the bitset or the
+    explode route from the vocabulary of ``token_dict`` (a dense-id
+    :func:`dedup_token_dict` table; derived from ``docs`` when absent), and
+    the score is one final double division of the integers.
 
-    ``token_dict``: optional (token, token_id) table with DENSE ids 1..vocab
-    (e.g. :func:`dedup_token_dict` output) for the bitset path; derived
-    internally when absent. Ignored by ``explode``.
+    With threshold > 0 only pairs sharing a token can pass. A threshold of 0
+    keeps every candidate: pairs sharing no token are restored with jaccard
+    0 by a left join.
     """
-    if strategy not in ("explode", "bitset", "auto"):
+    if token_dict is None:
+        token_dict = token_dictionary(doc_frequencies(docs, tokens_col, "doc_id"))
+    ov = token_overlap(
+        pairs, doc_tokens(docs, tokens_col), vocab_size(token_dict), token_dict
+    )
+    if threshold <= 0:
+        sizes = docs.select("doc_id", F.size(F.array_distinct(tokens_col)).alias("n"))
+        ov = (
+            pairs.select("id1", "id2")
+            .join(ov.select("id1", "id2", "inter"), ["id1", "id2"], "left")
+            .join(sizes.select(F.col("doc_id").alias("id1"), F.col("n").alias("n1")), "id1")
+            .join(sizes.select(F.col("doc_id").alias("id2"), F.col("n").alias("n2")), "id2")
+            .fillna(0, subset=["inter"])
+        )
+    jaccard = F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter"))
+    return ov.select("id1", "id2", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
+def _auto_only(verify_strategy: str) -> None:
+    if verify_strategy != "auto":
         raise ValueError(
-            f"strategy must be 'explode', 'bitset' or 'auto', got {strategy!r}"
+            f"verify_strategy must be 'auto' (the verify picks its route from "
+            f"the vocabulary), got {verify_strategy!r}"
         )
-    if strategy in ("auto", "bitset"):
-        tdict = token_dict if token_dict is not None else dedup_token_dict(docs)
-        vocab = int(
-            tdict.agg(F.coalesce(F.max("token_id"), F.lit(0)).cast("long")).collect()[
-                0
-            ][0]
-        )
-        words = (vocab + 63) // 64
-        fits = 0 < words <= VERIFY_BITSET_MAX_WORDS and threshold > 0
-        if strategy == "bitset" and not fits:
-            raise ValueError(
-                f"bitset verify needs 0 < vocab <= {64 * VERIFY_BITSET_MAX_WORDS} "
-                f"and threshold > 0 (got vocab={vocab}, threshold={threshold})"
-            )
-        if fits:
-            tk = (
-                docs.select(
-                    "doc_id", F.explode(F.array_distinct(tokens_col)).alias("token")
-                )
-                .join(F.broadcast(tdict.select("token", "token_id")), "token")
-                .select("doc_id", (F.col("token_id") - 1).alias("bitpos"))
-                .select(
-                    "doc_id",
-                    F.expr("CAST(bitpos DIV 64 AS INT)").alias("w"),
-                    F.expr(
-                        "shiftleft(CAST(1 AS BIGINT), CAST(bitpos % 64 AS INT))"
-                    ).alias("bv"),
-                )
-            )
-            masks = tk.groupBy("doc_id").agg(
-                F.count("*").alias("_n"),  # tokens are distinct per doc
-                *[
-                    F.bit_or(
-                        F.when(F.col("w") == w, F.col("bv")).otherwise(F.lit(0))
-                    ).alias(f"_m{w}")
-                    for w in range(words)
-                ],
-            )
-            m1 = masks.select(
-                F.col("doc_id").alias("id1"),
-                F.col("_n").alias("_n1"),
-                *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(words)],
-            )
-            m2 = masks.select(
-                F.col("doc_id").alias("id2"),
-                F.col("_n").alias("_n2"),
-                *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(words)],
-            )
-            inter = None
-            for w in range(words):
-                term = F.bit_count(F.col(f"_a{w}").bitwiseAND(F.col(f"_b{w}")))
-                inter = term if inter is None else inter + term
-            # inner joins: a doc with zero tokens has no mask row, and with
-            # threshold > 0 its pairs can never pass anyway (explode-path
-            # semantics preserved exactly)
-            return (
-                pairs.join(m1, "id1")
-                .join(m2, "id2")
-                .select(
-                    "id1",
-                    "id2",
-                    (
-                        inter.cast("double")
-                        / (F.col("_n1") + F.col("_n2") - inter)
-                    ).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-            )
-        strategy = "explode"
-    t = docs.select("doc_id", F.explode(F.array_distinct(tokens_col)).alias("token"))
-    t1 = t.select(F.col("doc_id").alias("id1"), "token")
-    t2 = t.select(F.col("doc_id").alias("id2"), "token")
-    inter = (
-        pairs.join(t1, "id1")
-        .join(t2, ["id2", "token"])
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sizes = docs.select("doc_id", F.size(F.array_distinct(tokens_col)).alias("n"))
-    if threshold > 0:
-        # zero-shared-token pairs can never reach a positive threshold, so the
-        # left-join restore is unnecessary — `pairs` is referenced exactly once
-        return (
-            inter.join(
-                sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("n", "n1"), "id1"
-            )
-            .join(
-                sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("n", "n2"), "id2"
-            )
-            .select(
-                "id1",
-                "id2",
-                (
-                    F.col("n_inter").cast("double")
-                    / (F.col("n1") + F.col("n2") - F.col("n_inter"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    return (
-        pairs.join(inter, ["id1", "id2"], "left")
-        .join(sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("n", "n1"), "id1")
-        .join(sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("n", "n2"), "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.coalesce("n_inter", F.lit(0)).cast("double")
-                / (F.col("n1") + F.col("n2") - F.coalesce("n_inter", F.lit(0)))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def minhash_duplicates(
     documents: DataFrame,
     cfg: MinHashConfig | None = None,
-    verify_strategy: str = "explode",
+    verify_strategy: str = "auto",
 ) -> DataFrame:
     """documents -> verified near-dup pairs (id1, id2, jaccard)."""
+    _auto_only(verify_strategy)
     cfg = cfg or MinHashConfig()
     docs = prepare_docs(documents)
     tdict = dedup_token_dict(docs)
     cand = minhash_candidate_pairs(docs, tdict, cfg)
-    return token_jaccard_verify(
-        cand, docs, cfg.jaccard_threshold, strategy=verify_strategy,
-        token_dict=tdict,
-    )
+    return token_jaccard_verify(cand, docs, cfg.jaccard_threshold, token_dict=tdict)
 
 
 def cross_minhash_duplicates(
     new_documents: DataFrame,
     base_documents: DataFrame,
     cfg: MinHashConfig | None = None,
-    verify_strategy: str = "explode",
+    verify_strategy: str = "auto",
 ) -> DataFrame:
     """(new_id, base_id, jaccard): near-dups of NEW docs against an EXISTING
     corpus — the incremental-ingest dedup of a live training-data pipeline.
@@ -433,6 +434,7 @@ def cross_minhash_duplicates(
     explicit-N repartition for the same AQE-explosive-join reason as
     :func:`bucket_pairs`.
     """
+    _auto_only(verify_strategy)
     cfg = cfg or MinHashConfig()
     new_docs = prepare_docs(new_documents)
     base_docs = prepare_docs(base_documents)
@@ -452,10 +454,7 @@ def cross_minhash_duplicates(
         .filter(first_band_match(F.col("p1"), F.col("p2"), cfg.bands, cfg.rows))
         .select("id1", "id2")
     )
-    verified = token_jaccard_verify(
-        cand, union, cfg.jaccard_threshold, strategy=verify_strategy,
-        token_dict=tdict,
-    )
+    verified = token_jaccard_verify(cand, union, cfg.jaccard_threshold, token_dict=tdict)
     return verified.select(
         F.col("id1").alias("new_id"), F.col("id2").alias("base_id"), "jaccard"
     )
@@ -612,7 +611,7 @@ def ngram_jaccard_duplicates(
     b = keyed.select("gram", F.col("doc_id").alias("id2"))
     cand = a.join(b, "gram").filter(F.col("id1") < F.col("id2")).select("id1", "id2").distinct()
     return token_jaccard_verify(
-        cand, docs.withColumnRenamed("grams", "tokens"), threshold, strategy="auto"
+        cand, docs.withColumnRenamed("grams", "tokens"), threshold
     ).withColumnRenamed("jaccard", "ngram_jaccard")
 
 
@@ -1099,8 +1098,6 @@ def prefix_jaccard_join(
     threshold_denom: int = 1_000_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bitset_max_words: int = 64,
-    emit_once_max_words: int = 4,
 ) -> DataFrame:
     """Exact-threshold set-similarity self-join via prefix filtering (the
     PPJoin family — Chaudhuri et al. ICDE'06, Xiao et al. WWW'08): returns
@@ -1118,46 +1115,37 @@ def prefix_jaccard_join(
     (``inter·denom >= num·union``) are pure int64 comparisons — no doubles
     anywhere in a decision. Output jaccard is one final rounded division.
 
-    Scale shape (r6 rewrite of the r3 plan): one dictionary build
-    (range-partitioned ids, no global sort), then ONE equi-join on prefix
-    tokens with everything downstream per-row:
+    Scale shape: the dedup token dictionary (:func:`dedup_token_dict`, dense
+    ids in rarity order), then ONE equi-join on prefix tokens:
 
-    - vocab <= 64·min(``bitset_max_words``, ``emit_once_max_words``): each
-      doc's token set AND its prefix set are fixed-width int64 bitsets
-      (dense dictionary ids -> bit positions) riding the join rows (2W+1
-      longs per side — the width gate keeps that payload smaller than the
-      quadratic join's own row, see the inline comment). A pair is kept
-      only on the row whose join token is the MINIMUM shared prefix token —
-      emit-once as a per-row predicate instead of the r3 pair-keyed groupBy,
-      which was the dominant exchange of the whole query (measured at
-      sf0.1/local[32]: 1.4 GB shuffled; the r6 plan shuffles the pair
-      stream ZERO times). The verify is the same static
-      ``Σ_w bit_count(m1 & m2)`` on the already-riding masks — enumerate ->
-      filter -> verify in one pipelined whole-stage-codegen stage.
-    - larger vocab: the r3 plan — prefix join rows of four ints, emit-once
-      via pair groupBy (map-side combinable), explode verify (pairs ⋈
-      (doc, token_id) both sides, one count aggregate) — pure join algebra
-      at any vocabulary. (The r2 form carried token-id arrays through the
-      join and ran per-row array_intersect, the interpreted/allocating
-      pattern measured to collapse at high in-JVM concurrency.)
+    - vocab <= 64·``EMIT_ONCE_MAX_WORDS``: each doc's token set AND its
+      prefix set are fixed-width int64 bitsets (:func:`token_masks`, one
+      groupBy) riding the join rows (2W+1 longs per side — the width gate
+      keeps that payload smaller than the quadratic join's own row). A pair
+      is kept only on the row whose join token is the MINIMUM shared prefix
+      token — emit-once as a per-row predicate, so the pair stream is never
+      shuffled (measured at sf0.1/local[32]: the pair-keyed groupBy it
+      replaces shuffled 1.4 GB). The verify is the same
+      :func:`mask_overlap` on the already-riding masks — enumerate -> filter
+      -> verify in one pipelined whole-stage-codegen stage.
+    - larger vocab: prefix join rows of three ints, emit-once via a pair
+      distinct (map-side combinable), then :func:`token_overlap` — pure join
+      algebra at any vocabulary.
 
     Output: (id1, id2, inter, union, jaccard) for pairs with J >= t.
     """
-    toks = documents.select(
+    docs = documents.select(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("tokens")
-    ).select("doc_id", F.explode(F.array_distinct("tokens")).alias("token"))
-    dft = toks.groupBy("token").agg(F.count("*").alias("df"))
-    tdict = dense_rank_ids(dft, ["df", "token"], "token_id").select("token", "token_id")
+    )
+    tdict = dedup_token_dict(docs)
+    vocab = vocab_size(tdict)
+    words = (vocab + 63) // 64
     ids = (
-        toks.join(F.broadcast(tdict), "token")
+        doc_tokens(docs)
+        .join(F.broadcast(tdict.select("token", "token_id")), "token")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("token_id")).alias("tids"))
-        .filter(F.size("tids") > 0)
-    ).persist()  # feeds the vocab probe, the prefix sides, and the verify
-    vocab = int(
-        ids.agg(F.coalesce(F.max(F.element_at("tids", -1)), F.lit(0))).collect()[0][0]
-    )
-    words = (vocab + 63) // 64
+    ).persist()  # feeds the prefix sides and the verify
     # pin the join-input partitioning: prefix-token rows are small but the
     # self-join output is quadratic per token, and AQE coalesces exchanges by
     # INPUT size — unpinned, the whole pair stream can fold onto 1-2 cores
@@ -1165,80 +1153,43 @@ def prefix_jaccard_join(
     # hot-token imbalance splits under AQE skew-join on the shuffled join.
     n_part = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # integer ceil(t*n): (num*n + denom - 1) div denom
-    plen_sql = (
+    plen = F.expr(
         f"size(tids) - CAST((({threshold_num} * size(tids) + {threshold_denom} - 1) "
         f"DIV {threshold_denom}) AS INT) + 1"
     )
-    if 0 < words <= min(bitset_max_words, emit_once_max_words):
-        # Bitset emit-once plan (r6, guide §2.3/§2.4): the pair-set groupBy
-        # the generic plan uses to dedupe multi-token collisions was the
-        # dominant exchange of the whole join (measured at sf0.1/local[32]:
-        # 1.4 GB shuffled, ~14s). With the vocabulary in a fixed-width
-        # bitset, a pair can instead be kept ONLY on the row whose join
-        # token is the MINIMUM shared prefix token — a per-row predicate on
-        # masks that ride the join (2W+1 longs per side), so the pair
-        # stream is never shuffled again: enumerate -> filter -> verify in
-        # one pipelined stage. Same surviving pairs (every candidate shares
-        # >= 1 prefix token; the minimum is unique), same integer
+    # length filter: t·max(n1,n2) <= min(n1,n2), integers only
+    length_ok = F.lit(threshold_num) * F.greatest("n1", "n2") <= F.lit(
+        threshold_denom
+    ) * F.least("n1", "n2")
+    if 0 < words <= EMIT_ONCE_MAX_WORDS:
+        # Same surviving pairs as the pair-distinct route (every candidate
+        # shares >= 1 prefix token; the minimum is unique), same integer
         # inter/union, bit-identical jaccard.
-        #
-        # WIDTH GATE (``emit_once_max_words``, r6 skew re-measurement): the
-        # masks ride EVERY row of the quadratic prefix-token join, so the
-        # plan trades the pair-set groupBy for 2·words+1 longs per join
-        # row. At words=1 (this bench corpus) that is ~24 bytes and a clear
-        # win (14.1 -> 2.3s); at words=21 (the Zipf-skew corpus, vocab
-        # ~1.3k) it multiplied the hot-token join stream ~20x in bytes and
-        # measured 208s where the groupBy plan ran ~10s. Above the width
-        # gate the r3 groupBy plan (4-int join rows) is the right shape;
-        # the bitset VERIFY (below) still applies up to bitset_max_words.
         tk = ids.select(
             "doc_id",
-            F.size("tids").alias("_n"),
-            F.expr(plen_sql).alias("_plen"),
+            F.size("tids").alias("n"),
+            plen.alias("_plen"),
             F.posexplode("tids").alias("_pos", "tid"),
-        ).select(
-            "doc_id",
-            "_n",
-            "tid",
-            (F.col("_pos") < F.col("_plen")).alias("_inpref"),
-            F.expr("CAST((tid - 1) DIV 64 AS INT)").alias("_w"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST((tid - 1) % 64 AS INT))"
-            ).alias("_bv"),
         )
+        inpref = "_pos < _plen"
         masks = tk.groupBy("doc_id").agg(
-            F.min("_n").alias("_n"),
-            *[
-                F.bit_or(
-                    F.when(F.col("_w") == w, F.col("_bv")).otherwise(F.lit(0))
-                ).alias(f"_m{w}")
-                for w in range(words)
-            ],
-            *[
-                F.bit_or(
-                    F.when(
-                        (F.col("_w") == w) & F.col("_inpref"), F.col("_bv")
-                    ).otherwise(F.lit(0))
-                ).alias(f"_p{w}")
-                for w in range(words)
-            ],
+            F.min("n").alias("n"),
+            *token_masks(words, "_m"),
+            *token_masks(words, "_p", where=inpref),
         )
-        ptoks = tk.filter(F.col("_inpref")).select("doc_id", F.col("tid").alias("ptok"))
-        side = ptoks.join(masks, "doc_id")
-        a = side.select(
-            F.col("doc_id").alias("id1"),
-            F.col("_n").alias("n1"),
-            "ptok",
-            *[F.col(f"_m{w}").alias(f"_ma{w}") for w in range(words)],
-            *[F.col(f"_p{w}").alias(f"_pa{w}") for w in range(words)],
-        ).repartition(n_part, "ptok")
-        b = side.select(
-            F.col("doc_id").alias("id2"),
-            F.col("_n").alias("n2"),
-            "ptok",
-            *[F.col(f"_m{w}").alias(f"_mb{w}") for w in range(words)],
-            *[F.col(f"_p{w}").alias(f"_pb{w}") for w in range(words)],
-        ).repartition(n_part, "ptok")
+        side = tk.filter(inpref).select("doc_id", F.col("tid").alias("ptok")).join(
+            masks, "doc_id"
+        )
+
+        def prefix_side(k: int, s: str) -> DataFrame:
+            return side.select(
+                F.col("doc_id").alias(f"id{k}"),
+                F.col("n").alias(f"n{k}"),
+                "ptok",
+                *[F.col(f"_m{w}").alias(f"_m{s}{w}") for w in range(words)],
+                *[F.col(f"_p{w}").alias(f"_p{s}{w}") for w in range(words)],
+            ).repartition(n_part, "ptok")
+
         w0 = F.expr("CAST((ptok - 1) DIV 64 AS INT)")
         # bits 0..off-1 set; off = 63 needs the literal: shiftleft(1,63) is
         # Long.MIN and the -1 overflows under ANSI (caught by the skew bench,
@@ -1256,152 +1207,55 @@ def prefix_jaccard_join(
                 .otherwise(F.lit(True))
             )
             min_shared = term if min_shared is None else (min_shared & term)
-        inter = None
-        for w in range(words):
-            term = F.bit_count(F.col(f"_ma{w}").bitwiseAND(F.col(f"_mb{w}")))
-            inter = term if inter is None else inter + term
-        return (
-            a.join(b, "ptok")
+        ov = (
+            prefix_side(1, "a")
+            .join(prefix_side(2, "b"), "ptok")
             .filter(F.col("id1") < F.col("id2"))
-            # length filter: t·max(n1,n2) <= min(n1,n2), integers only
-            .filter(
-                F.lit(threshold_num) * F.greatest("n1", "n2")
-                <= F.lit(threshold_denom) * F.least("n1", "n2")
-            )
+            .filter(length_ok)
             .filter(min_shared)  # emit-once: min shared prefix token only
             .select(
                 "id1",
                 "id2",
-                F.col("n1"),
-                F.col("n2"),
-                inter.cast("long").alias("inter"),
-            )
-            .filter(
-                F.col("inter") * F.lit(threshold_denom)
-                >= F.lit(threshold_num) * (F.col("n1") + F.col("n2") - F.col("inter"))
-            )
-            .select(
-                "id1",
-                "id2",
-                "inter",
-                (F.col("n1") + F.col("n2") - F.col("inter")).cast("long").alias("union"),
-                F.round(
-                    F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")), 6
-                ).alias("jaccard"),
+                "n1",
+                "n2",
+                mask_overlap("_ma", "_mb", words).cast("long").alias("inter"),
             )
         )
-    pref = ids.select(
-        "doc_id",
-        F.size("tids").alias("_n"),
-        F.slice("tids", 1, F.expr(plen_sql)).alias("prefix"),
-    )
-    a = pref.select(
-        F.col("doc_id").alias("id1"),
-        F.col("_n").alias("n1"),
-        F.explode("prefix").alias("ptok"),
-    ).repartition(n_part, "ptok")
-    b = pref.select(
-        F.col("doc_id").alias("id2"),
-        F.col("_n").alias("n2"),
-        F.explode("prefix").alias("ptok"),
-    ).repartition(n_part, "ptok")
-    cand = (
-        a.join(b, "ptok")
-        .filter(F.col("id1") < F.col("id2"))
-        # length filter: t·max(n1,n2) <= min(n1,n2), integers only
-        .filter(
-            F.lit(threshold_num) * F.greatest("n1", "n2")
-            <= F.lit(threshold_denom) * F.least("n1", "n2")
+    else:
+        pref = ids.select(
+            "doc_id", F.size("tids").alias("n"), F.slice("tids", 1, plen).alias("prefix")
         )
-        # emit each pair once: pair-keyed aggregate (n1/n2 are constant per
-        # id, min() just carries them) — replaces the per-row
-        # min-common-prefix-token array filter of the r2 form
-        .groupBy("id1", "id2")
-        .agg(F.min("n1").alias("n1"), F.min("n2").alias("n2"))
-    )
-    inter_pairs = _token_set_intersections(cand, ids, bitset_max_words, vocab=vocab)
+
+        def prefix_side(k: int) -> DataFrame:
+            return pref.select(
+                F.col("doc_id").alias(f"id{k}"),
+                F.col("n").alias(f"n{k}"),
+                F.explode("prefix").alias("ptok"),
+            ).repartition(n_part, "ptok")
+
+        # emit each pair once: a pair-keyed distinct (map-side combinable)
+        cand = (
+            prefix_side(1)
+            .join(prefix_side(2), "ptok")
+            .filter(F.col("id1") < F.col("id2"))
+            .filter(length_ok)
+            .select("id1", "id2")
+            .distinct()
+        )
+        tokens = ids.select(
+            "doc_id", F.explode("tids").alias("token"), F.size("tids").alias("n")
+        )
+        ov = token_overlap(cand, tokens, vocab)
     union = F.col("n1") + F.col("n2") - F.col("inter")
-    return (
-        inter_pairs.select(
-            "id1",
-            "id2",
-            F.col("inter").cast("long").alias("inter"),
-            union.cast("long").alias("union"),
-        )
-        .filter(
-            F.col("inter") * F.lit(threshold_denom)
-            >= F.lit(threshold_num) * F.col("union")
-        )
-        .withColumn("jaccard", F.round(F.col("inter") / F.col("union"), 6))
+    return ov.filter(
+        F.col("inter") * F.lit(threshold_denom) >= F.lit(threshold_num) * union
+    ).select(
+        "id1",
+        "id2",
+        F.col("inter").cast("long").alias("inter"),
+        union.cast("long").alias("union"),
+        F.round(F.col("inter") / union, 6).alias("jaccard"),
     )
-
-
-def _token_set_intersections(
-    cand: DataFrame, ids: DataFrame, bitset_max_words: int, vocab: int | None = None
-) -> DataFrame:
-    """cand(id1, id2, ...) + ids(doc_id, tids sorted dense int64) ->
-    cand columns + ``inter`` (exact |t1 ∩ t2|), zero per-row allocation.
-
-    Bitset path (vocab <= 64·bitset_max_words): dense dictionary ids map to
-    bit positions; per-doc masks are W int64 bit_or aggregates; the
-    intersection size is a STATIC ``Σ_w bit_count(m1_w & m2_w)`` — stays in
-    whole-stage codegen. Fallback for unbounded vocabulary: explode both
-    sides and count shared tokens with one aggregate — join algebra only.
-    """
-    if vocab is None:
-        vocab = int(
-            ids.agg(
-                F.coalesce(F.max(F.element_at("tids", -1)), F.lit(0))
-            ).collect()[0][0]
-        )
-    words = (vocab + 63) // 64
-    if 0 < words <= bitset_max_words:
-        tk = ids.select(
-            "doc_id", F.explode("tids").alias("tid")
-        ).select(
-            "doc_id", (F.col("tid") - 1).alias("bitpos")
-        ).select(
-            "doc_id",
-            F.expr("CAST(bitpos DIV 64 AS INT)").alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bitpos % 64 AS INT))").alias("bv"),
-        )
-        masks = tk.groupBy("doc_id").agg(
-            *[
-                F.bit_or(F.when(F.col("w") == w, F.col("bv")).otherwise(F.lit(0))).alias(
-                    f"m{w}"
-                )
-                for w in range(words)
-            ]
-        )
-        m1 = masks.select(
-            F.col("doc_id").alias("id1"),
-            *[F.col(f"m{w}").alias(f"_a{w}") for w in range(words)],
-        )
-        m2 = masks.select(
-            F.col("doc_id").alias("id2"),
-            *[F.col(f"m{w}").alias(f"_b{w}") for w in range(words)],
-        )
-        inter = None
-        for w in range(words):
-            term = F.bit_count(F.col(f"_a{w}").bitwiseAND(F.col(f"_b{w}")))
-            inter = term if inter is None else inter + term
-        return (
-            cand.join(m1, "id1")
-            .join(m2, "id2")
-            .select(*cand.columns, inter.alias("inter"))
-        )
-    tk = ids.select("doc_id", F.explode("tids").alias("tid"))
-    t1 = tk.select(F.col("doc_id").alias("id1"), "tid")
-    t2 = tk.select(F.col("doc_id").alias("id2"), "tid")
-    counts = (
-        cand.select("id1", "id2")
-        .join(t1, "id1")
-        .join(t2, ["id2", "tid"])
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("inter"))
-    )
-    # inner join is exact here: every candidate shares >= 1 prefix token
-    return cand.join(counts, ["id1", "id2"])
 
 
 def minhash_jaccard_error(
@@ -1414,9 +1268,11 @@ def minhash_jaccard_error(
     "Measure, don't guess": this is how a deployment picks (rows, bands) —
     run the audit on a sample, look at the error at the threshold, THEN size
     the signature. Candidates come from the same first-band-match enumeration
-    as the dedup path; signatures ride the pair rows as arrays, so the
-    estimate is a per-row zip_with — no extra shuffle beyond the two
-    feature joins.
+    as the dedup path; the exact overlap is :func:`token_overlap` (every
+    candidate shares a token: a band collision means equal minima, and the
+    linear hash is a bijection mod P, so both minima come from one token id).
+    Signatures ride the pair rows as arrays, so the estimate is a per-row
+    zip_with.
 
     Output: (id1, id2, est, jaccard, abs_err), doubles rounded 6dp.
     """
@@ -1424,19 +1280,18 @@ def minhash_jaccard_error(
     sig = minhash_mins(docs, token_dict, n_hashes, cfg.seed, "doc_id").select(
         "doc_id", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
     )
-    pairs = minhash_candidate_pairs(docs, token_dict, cfg)
-    t = docs.select("doc_id", F.array_distinct("tokens").alias("_t"))
-    j = (
-        pairs.join(sig.select(F.col("doc_id").alias("id1"), F.col("sig").alias("s1")), "id1")
-        .join(sig.select(F.col("doc_id").alias("id2"), F.col("sig").alias("s2")), "id2")
-        .join(t.select(F.col("doc_id").alias("id1"), F.col("_t").alias("_t1")), "id1")
-        .join(t.select(F.col("doc_id").alias("id2"), F.col("_t").alias("_t2")), "id2")
+    ov = token_overlap(
+        minhash_candidate_pairs(docs, token_dict, cfg),
+        doc_tokens(docs),
+        vocab_size(token_dict),
+        token_dict,
     )
+    j = ov.join(
+        sig.select(F.col("doc_id").alias("id1"), F.col("sig").alias("s1")), "id1"
+    ).join(sig.select(F.col("doc_id").alias("id2"), F.col("sig").alias("s2")), "id2")
     matches = F.size(F.filter(F.zip_with("s1", "s2", lambda x, y: x == y), lambda v: v))
-    inter = F.size(F.array_intersect("_t1", "_t2"))
-    union = F.size("_t1") + F.size("_t2") - inter
     est = F.round(matches / F.lit(float(n_hashes)), 6)
-    true_j = F.round(inter / union, 6)
+    true_j = F.round(F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")), 6)
     return j.select(
         "id1",
         "id2",

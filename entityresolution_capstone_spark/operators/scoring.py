@@ -40,6 +40,7 @@ from pyspark.sql.functions import pandas_udf
 from ..functions import tfidf as tfidf_mod
 from ..functions import vector as V
 from ..functions.similarity import make_weighted_char_sim_udf, token_jaccard_col
+from .blocking import token_dictionary
 
 CHAR_KERNELS = ("jw", "jaro", "lev")
 
@@ -102,22 +103,19 @@ def _dense_tfidf_docs(docs, df_table, corpus_size, vocab):
     rows — the same pivot trick as the MinHash aggregation. Only called when
     vocab <= DENSE_TFIDF_MAX_VOCAB.
     """
-    from ..functions.ids import dense_rank_ids
-
-    tdict = dense_rank_ids(df_table.select("token", "df"), ["df", "token"], "tid")
     tf = (
         docs.select("conv_id", F.explode("tokens").alias("token"))
         .groupBy("conv_id", "token")
         .agg(F.count("*").alias("tf"))
-        .join(F.broadcast(tdict), "token")
+        .join(F.broadcast(token_dictionary(df_table)), "token")
         .select(
             "conv_id",
-            "tid",
+            "token_id",
             (F.col("tf") * F.lit(float(corpus_size)) / F.col("df")).alias("w"),
         )
     )
     sums = [
-        F.sum(F.when(F.col("tid") == i + 1, F.col("w")).otherwise(0.0)).alias(f"c{i}")
+        F.sum(F.when(F.col("token_id") == i + 1, F.col("w")).otherwise(0.0)).alias(f"c{i}")
         for i in range(vocab)
     ]
     agg = tf.groupBy("conv_id").agg(*sums)

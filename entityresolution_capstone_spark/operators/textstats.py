@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from ..functions.ids import dense_rank_ids
 from ..functions.text import token_ngrams, tokenize
+from ..functions.tfidf import doc_frequencies
+from .blocking import token_dictionary
 
 MERSENNE_P = 2147483647
 POS_MULT = 2654435761 % MERSENNE_P
@@ -117,13 +119,7 @@ def doc_fingerprints(documents: DataFrame, id_col: str = "doc_id", text_col: str
     the oracle reproduces it with the same row_number() dictionary.
     """
     docs = documents.select(F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("tokens"))
-    dft = (
-        docs.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-    )
-    # no global sort: range-partitioned deterministic ids (functions.ids)
-    tdict = dense_rank_ids(dft, ["df", "token"], "token_id").select("token", "token_id")
+    tdict = token_dictionary(doc_frequencies(docs, id_col="doc_id"))
     pos = docs.select("doc_id", F.posexplode("tokens").alias("pos", "token")).join(
         F.broadcast(tdict), "token"
     )
@@ -559,12 +555,7 @@ def winnow_fingerprints(
     docs = documents.select(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("tokens")
     )
-    dft = (
-        docs.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-    )
-    tdict = dense_rank_ids(dft, ["df", "token"], "token_id").select("token", "token_id")
+    tdict = token_dictionary(doc_frequencies(docs, id_col="doc_id"))
     pos = (
         docs.select(
             "doc_id", F.size("tokens").alias("_n"), F.posexplode("tokens").alias("pos", "token")
@@ -648,12 +639,7 @@ def cdc_chunks(
     docs = documents.select(
         F.col(id_col).cast("long").alias("doc_id"), tokenize(F.col(text_col)).alias("tokens")
     )
-    dft = (
-        docs.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-    )
-    tdict = dense_rank_ids(dft, ["df", "token"], "token_id").select("token", "token_id")
+    tdict = token_dictionary(doc_frequencies(docs, id_col="doc_id"))
     pos = docs.select(
         "doc_id", F.size("tokens").alias("_n"), F.posexplode("tokens").alias("pos", "token")
     ).join(F.broadcast(tdict), "token")

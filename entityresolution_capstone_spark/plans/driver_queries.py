@@ -803,15 +803,13 @@ tok_ids as (
 
 
 def q_dedup_minhash(spark, sf_dir):
-    # auto verify (r6): bitset masks + static bit_count when the vocabulary
+    # the verify picks bitset masks + static bit_count when the vocabulary
     # fits (this corpus: 31 tokens -> one int64 mask per doc, zero pair-set
     # shuffles in the verify), explode join/agg algebra above the vocab cap.
     # Never array_intersect: interpreted per-row allocation collapses at
     # high in-JVM concurrency (local[32] array=627.6s vs explode=40.3s) —
-    # see token_jaccard_verify's docstring.
-    dups = D.minhash_duplicates(
-        load(spark, sf_dir, "documents"), _MH, verify_strategy="auto"
-    )
+    # see dedup.token_overlap's docstring.
+    dups = D.minhash_duplicates(load(spark, sf_dir, "documents"), _MH)
     return dups.select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -2730,7 +2728,6 @@ def q_dedup_cross(spark, sf_dir):
         docs.filter(F.col("doc_id") % 2 == 1),
         docs.filter(F.col("doc_id") % 2 == 0),
         _MH,
-        verify_strategy="auto",
     )
     return dups.select(
         "new_id", "base_id", F.round("jaccard", 6).alias("jaccard")
@@ -4708,7 +4705,7 @@ def q_doc_cluster_split(spark, sf_dir):
     representative, so a near-dup cluster can never straddle train and eval.
     Same multiplicative hash + 90/5/5 boundaries as doc_split."""
     docs = load(spark, sf_dir, "documents")
-    dups = D.minhash_duplicates(docs, _MH, verify_strategy="auto")
+    dups = D.minhash_duplicates(docs, _MH)
     h = lambda c: F.pmod(c.cast("long") * F.lit(SPLIT_MULT), F.lit(SPLIT_DENOM))  # noqa: E731
     out = D.leakage_safe_split(
         docs,

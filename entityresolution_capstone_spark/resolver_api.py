@@ -111,6 +111,12 @@ class EntityResolver:
             "average_method": "max",
         }
         self._kwargs.update(kwargs)
+        if self._kwargs["second_sim"] != "jaro_winkler":
+            # soft-TF-IDF's secondary similarity is Jaro-Winkler, the
+            # reference default; no other is implemented
+            raise ValueError(
+                f"second_sim must be 'jaro_winkler', got {self._kwargs['second_sim']!r}"
+            )
         self._spark = spark
         self._last_scored: DataFrame | None = None
 

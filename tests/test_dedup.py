@@ -223,27 +223,24 @@ def test_pandas_dot_and_cosine_ordered_fold_bit_identical(spark):
         assert r["pcos"] is None
 
 
-def test_jaccard_verify_bitset_matches_explode(spark, documents, docs):
-    """r6 bitset verify == explode verify, value-for-value (same integers,
-    same one final division -> bit-identical doubles, asserted unrounded)."""
-    from entityresolution_capstone_spark.operators.dedup import (
-        dedup_token_dict,
-        minhash_candidate_pairs,
-        token_jaccard_verify,
-        MinHashConfig,
-    )
+def test_jaccard_verify_bitset_matches_explode(spark, documents, docs, monkeypatch):
+    """The bitset verify == the explode verify, value-for-value (same
+    integers, same one final division -> bit-identical doubles, asserted
+    unrounded); routes forced through VERIFY_BITSET_MAX_WORDS."""
+    cfg = D.MinHashConfig()
+    tdict = D.dedup_token_dict(docs)
+    assert 0 < D.vocab_size(tdict) <= 64 * D.VERIFY_BITSET_MAX_WORDS  # bitset by default
+    cand = D.minhash_candidate_pairs(docs, tdict, cfg).cache()
 
-    cfg = MinHashConfig()
-    tdict = dedup_token_dict(docs)
-    cand = minhash_candidate_pairs(docs, tdict, cfg).cache()
-    a = token_jaccard_verify(cand, docs, 0.5, strategy="explode")
-    b = token_jaccard_verify(cand, docs, 0.5, strategy="bitset", token_dict=tdict)
-    c = token_jaccard_verify(cand, docs, 0.5, strategy="auto")  # derives dict
-    ra = sorted((r["id1"], r["id2"], r["jaccard"]) for r in a.collect())
-    rb = sorted((r["id1"], r["id2"], r["jaccard"]) for r in b.collect())
-    rc = sorted((r["id1"], r["id2"], r["jaccard"]) for r in c.collect())
-    assert len(ra) > 0
-    assert ra == rb == rc
+    def rows(df):
+        return sorted((r["id1"], r["id2"], r["jaccard"]) for r in df.collect())
+
+    bitset = rows(D.token_jaccard_verify(cand, docs, 0.5, token_dict=tdict))
+    derived = rows(D.token_jaccard_verify(cand, docs, 0.5))  # derives the dict
+    monkeypatch.setattr(D, "VERIFY_BITSET_MAX_WORDS", 0)
+    explode = rows(D.token_jaccard_verify(cand, docs, 0.5, token_dict=tdict))
+    assert len(bitset) > 0
+    assert bitset == derived == explode
     cand.unpersist()
 
 

@@ -46,8 +46,7 @@ def test_no_single_partition_global_sort(spark):
         .toString()
     )
     # the vocabulary goes through rangepartitioning and a _pid-partitioned
-    # window; the only partition-less window allowed is the one over the tiny
-    # per-partition offsets table (numPartitions rows)
+    # window; the per-partition offsets are a literal lookup on _pid
     assert "rangepartitioning(df" in plan
     assert "windowspecdefinition(_pid" in plan
 

@@ -2,6 +2,7 @@
 
 import itertools
 
+from entityresolution_capstone_spark.operators import dedup
 from entityresolution_capstone_spark.operators.dedup import (
     MinHashConfig,
     dedup_token_dict,
@@ -78,44 +79,44 @@ def test_minhash_error_identical_docs(spark):
         assert abs(r["abs_err"] - abs(r["est"] - r["jaccard"])) < 1e-9
 
 
-def test_prefix_join_bitset_matches_groupby_plan(spark):
-    """r6 emit-once bitset plan == the generic pair-groupBy plan, row for
-    row (forcing the fallback via bitset_max_words=0 on the same input)."""
+def _rows(df):
+    return sorted(
+        (r["id1"], r["id2"], r["inter"], r["union"], r["jaccard"]) for r in df.collect()
+    )
+
+
+def _force_pair_distinct_explode(monkeypatch):
+    """The generic plan: pair-distinct emit-once and the explode overlap."""
+    monkeypatch.setattr(dedup, "EMIT_ONCE_MAX_WORDS", 0)
+    monkeypatch.setattr(dedup, "VERIFY_BITSET_MAX_WORDS", 0)
+
+
+def test_prefix_join_bitset_matches_groupby_plan(spark, monkeypatch):
+    """The emit-once bitset plan == the generic pair-distinct plan with the
+    explode overlap, row for row (forced through the module constants on
+    the same input)."""
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     for t in (0.5, 0.7):
         tn = int(t * 1_000_000)
-        fast = sorted(
-            (r["id1"], r["id2"], r["inter"], r["union"], r["jaccard"])
-            for r in prefix_jaccard_join(docs, threshold_num=tn).collect()
-        )
-        slow = sorted(
-            (r["id1"], r["id2"], r["inter"], r["union"], r["jaccard"])
-            for r in prefix_jaccard_join(
-                docs, threshold_num=tn, bitset_max_words=0
-            ).collect()
-        )
+        fast = _rows(prefix_jaccard_join(docs, threshold_num=tn))
+        with monkeypatch.context() as m:
+            _force_pair_distinct_explode(m)
+            slow = _rows(prefix_jaccard_join(docs, threshold_num=tn))
         assert fast == slow and len(fast) > 0, f"threshold {t}"
 
 
-def test_prefix_join_bitset_multiword_vocab(spark):
+def test_prefix_join_bitset_multiword_vocab(spark, monkeypatch):
     """Vocabulary spanning >64 dense ids exercises the multi-word masks and
     the bit-63 low-mask edge (shiftleft(1,63)-1 overflows under ANSI —
-    regression for the r6 emit-once plan). Compare against the forced
-    groupBy plan on the same input."""
+    regression for the emit-once plan). Compare against the forced generic
+    plan on the same input."""
     rows = []
     # 90-token vocabulary; overlapping windows give pairs across word 0/1
     toks = [f"tok{i:03d}" for i in range(90)]
     for d in range(25):
         rows.append((d, " ".join(toks[d * 2 : d * 2 + 40])))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    fast = sorted(
-        (r["id1"], r["id2"], r["inter"], r["union"], r["jaccard"])
-        for r in prefix_jaccard_join(docs, threshold_num=500_000).collect()
-    )
-    slow = sorted(
-        (r["id1"], r["id2"], r["inter"], r["union"], r["jaccard"])
-        for r in prefix_jaccard_join(
-            docs, threshold_num=500_000, bitset_max_words=0
-        ).collect()
-    )
+    fast = _rows(prefix_jaccard_join(docs, threshold_num=500_000))
+    _force_pair_distinct_explode(monkeypatch)
+    slow = _rows(prefix_jaccard_join(docs, threshold_num=500_000))
     assert fast == slow and len(fast) > 0

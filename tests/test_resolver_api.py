@@ -118,6 +118,15 @@ def test_property_validation(spark):
         r.evaluator_strategy = "accuracy"
 
 
+def test_second_sim_other_than_jaro_winkler_raises(spark):
+    """Soft-TF-IDF's secondary similarity is Jaro-Winkler only: another
+    ``second_sim`` is refused instead of being accepted and ignored."""
+    assert _resolver(spark, second_sim="jaro_winkler")._kwargs["second_sim"] == "jaro_winkler"
+    for other in ("jaro", "scaled_lev"):
+        with pytest.raises(ValueError, match="second_sim"):
+            _resolver(spark, second_sim=other)
+
+
 def test_custom_blocking_key_generator(spark, graph_files):
     from pyspark.sql import functions as F
 
