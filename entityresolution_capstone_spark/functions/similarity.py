@@ -12,16 +12,31 @@ utils.py:329-454``), re-implemented from the published algorithm definitions:
   golden scores in /root/reference/tests/test_core.py:161-166).
 - Scaled Levenshtein: ``1 - dist / max(|s1|,|s2|)``.
 
-All kernels are *batch* functions ``(ndarray[str], ndarray[str]) -> ndarray
-[float64]``: the per-character loops run over the (bounded) max string length,
-vectorized with NumPy across the whole Arrow batch — no per-row Python in the
-hot path. Strings are truncated to ``max_len`` (default 64) before comparison;
-callers must apply the same truncation in any SQL oracle.
+One entry point: :func:`char_sim_batch` scores ``Σ_k w_k · kernel_k`` over a
+batch of string pairs. It encodes and compacts each ``KERNEL_CHUNK`` slice
+once for every kernel, and :func:`_sim_chunk` holds the only routing
+decision:
+
+- byte-equal rows score ``Σ w`` (every kernel scores them 1.0);
+- the modal ``(|s1|, |s2|)`` group — real pair streams are dominated by one
+  length combination, because prefixes fill their budget — takes ONE shared
+  equality tensor feeding the uniform-length Jaro matcher and Myers, when it
+  has at least ``FUSED_MIN_ROWS`` rows or is the whole chunk;
+- every other row takes the general bit-parallel Jaro matcher and Myers;
+  a chunk whose alphabet exceeds 255 symbols takes the masked-loop Jaro and
+  the DP Levenshtein instead.
+
+The per-kernel wrappers (:func:`jaro_batch`, :func:`jaro_winkler_batch`,
+:func:`scaled_levenshtein_batch`) are single-weight calls of it, and
+:func:`make_weighted_char_sim_udf` is the one Arrow UDF over it. The
+per-character loops run over the (bounded) max string length, vectorized
+with NumPy across the whole batch — no per-row Python in the hot path.
+Strings are truncated to ``max_len`` (default 64) before comparison; callers
+must apply the same truncation in any SQL oracle. :func:`levenshtein_batch`
+(the DP) and the masked-loop matcher are the test references.
 """
 
 from __future__ import annotations
-
-import functools
 
 import numpy as np
 import pandas as pd
@@ -31,6 +46,12 @@ from pyspark.sql.functions import pandas_udf
 
 DEFAULT_MAX_LEN = 64
 JW_PREFIX_WEIGHT = 0.1  # reference default, main.py:276-279
+CHAR_KERNELS = ("jaro", "jw", "lev")
+KERNEL_CHUNK = 4096  # rows per internal slice: keeps the (chunk x L) working
+# set inside the per-core L3 share so 32 concurrent workers don't fight for
+# DRAM bandwidth (the scaling-efficiency killer), regardless of Arrow batch size
+FUSED_MIN_ROWS = 256  # a modal length group below this (and short of the
+# whole chunk) is not worth a second, uniform-length pass over the chunk
 
 
 def _encode_batch(strings: np.ndarray, max_len: int) -> tuple[np.ndarray, np.ndarray]:
@@ -102,6 +123,151 @@ def _build_peq(codes: np.ndarray, lens: np.ndarray, lmax: int, n_symbols: int) -
             packed = np.pad(packed, ((0, 0), (0, pad - packed.shape[1])))
         peq[:, c, :] = packed.view(np.uint64)
     return peq
+
+
+def char_sim_batch(
+    s1: np.ndarray,
+    s2: np.ndarray,
+    weights: dict[str, float],
+    max_len: int = DEFAULT_MAX_LEN,
+    prefix_weight: float = JW_PREFIX_WEIGHT,
+) -> np.ndarray:
+    """``Σ_k w_k · kernel_k(s1, s2)`` per pair, kernels ``jaro``/``jw``/``lev``.
+
+    Each ``KERNEL_CHUNK`` slice is encoded and alphabet-compacted ONCE for
+    all kernels (r5: per-kernel re-encodes were ~58% of the fused profile).
+    ``None`` scores as the empty string; ``prefix_weight`` is the Winkler
+    boost of ``jw``. The weighted sum runs in ``weights`` order from 0.0, so
+    a single weight of 1.0 returns the kernel's value bit for bit.
+    """
+    unknown = set(weights) - set(CHAR_KERNELS)
+    if unknown:
+        raise KeyError(f"unknown char kernel(s) {sorted(unknown)}; expected {CHAR_KERNELS}")
+    n = len(s1)
+    out = np.empty(n, dtype=np.float64)
+    for lo in range(0, n, KERNEL_CHUNK):
+        hi = min(lo + KERNEL_CHUNK, n)
+        a, la = _encode_batch(s1[lo:hi], max_len)
+        b, lb = _encode_batch(s2[lo:hi], max_len)
+        a, b = _compact_codes(a, b)
+        out[lo:hi] = _sim_chunk(a, la, b, lb, weights, prefix_weight)
+    return out
+
+
+def _sim_chunk(a, la, b, lb, weights, prefix_weight) -> np.ndarray:
+    """Score one encoded chunk: the only routing decision of the kernels.
+
+    Byte-equal rows split off first (Σw, the value every kernel's own
+    arithmetic gives them). Of the rest, the modal ``(la, lb)`` group takes
+    the shared-tensor route when it is the whole remainder or at least
+    ``FUSED_MIN_ROWS`` rows; the others take the general route. A chunk left
+    uncompacted (>255 symbols) always takes the general route, whose
+    matchers then fall back to the masked loop and the DP. Every route is
+    bit-identical (pinned by the kernel tests); the choice is speed only.
+    """
+    out = np.full(len(la), float(sum(weights.values())))
+    lmax = int(max(la.max(initial=0), lb.max(initial=0)))
+    todo = np.flatnonzero((la != lb) | (a[:, :lmax] != b[:, :lmax]).any(axis=1))
+    if len(todo) == 0:
+        return out
+    if len(todo) < len(la):
+        a, la, b, lb = a[todo], la[todo], b[todo], lb[todo]
+    if a.dtype == np.uint8:
+        shape, sel = _modal_group(la, lb)
+        if sel.all():
+            out[todo] = _kernel_scores(a, la, b, lb, weights, prefix_weight, shape)
+            return out
+        if sel.sum() >= FUSED_MIN_ROWS:
+            sub = np.empty(len(la))
+            sub[sel] = _kernel_scores(
+                a[sel], la[sel], b[sel], lb[sel], weights, prefix_weight, shape
+            )
+            rest = ~sel
+            sub[rest] = _kernel_scores(
+                a[rest], la[rest], b[rest], lb[rest], weights, prefix_weight
+            )
+            out[todo] = sub
+            return out
+    out[todo] = _kernel_scores(a, la, b, lb, weights, prefix_weight)
+    return out
+
+
+def _modal_group(la: np.ndarray, lb: np.ndarray) -> tuple[tuple[int, int], np.ndarray]:
+    """The most frequent ``(la, lb)`` combination and its row mask."""
+    base = int(lb.max(initial=0)) + 1
+    comb = la * base + lb
+    vals, counts = np.unique(comb, return_counts=True)
+    mode = vals[int(counts.argmax())]
+    return divmod(int(mode), base), comb == mode
+
+
+def _kernel_scores(a, la, b, lb, weights, prefix_weight, shape=None) -> np.ndarray:
+    """``Σ w_k · kernel_k`` over rows that are not byte-equal.
+
+    ``shape = (la_s, lb_s)`` when every row has those lengths (the
+    shared-tensor route): ONE :func:`_shared_eq_tensor` feeds both the
+    uniform Jaro matcher and the side-swapped Myers (r6; the two Peq
+    builds + gathers were ~40% of the fused kernel's DRAM traffic).
+    Otherwise the general matchers run, on per-row lengths."""
+    lmax = max(shape) if shape else int(max(la.max(initial=0), lb.max(initial=0)))
+    a, b = a[:, :lmax], b[:, :lmax]
+    eq_all = _shared_eq_tensor(a, b, shape[1], lmax) if shape else None
+    jaro = None
+    if "jaro" in weights or "jw" in weights:
+        if shape:
+            ma, mb = _jaro_match_bitparallel_uniform(a, b, *shape, lmax, eq_all)
+        else:
+            window = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
+            match = _jaro_match_bitparallel if a.dtype == np.uint8 else _jaro_match_masked
+            ma, mb = match(a, la, b, lb, window, lmax)
+        jaro = _jaro_sim_from_matches(a, la, b, lb, ma, mb)
+    acc = np.zeros(len(la))
+    for k, w in weights.items():
+        if k == "jaro":
+            sim = jaro
+        elif k == "jw":
+            sim = _winkler_from_jaro(jaro, a, la, b, lb, prefix_weight)
+        else:  # lev
+            if shape:
+                dist = _lev_myers_uniform_swapped(eq_all, *shape)
+            elif a.dtype == np.uint8:
+                dist = _lev_myers_coded(a, la, b, lb)
+            else:
+                dist = _lev_dp_coded(a, la, b, lb)
+            sim = 1.0 - dist / np.maximum(la, lb)
+        acc += w * sim
+    return acc
+
+
+def _jaro_match_masked(a, la, b, lb, window, lmax):
+    """Greedy Jaro matching as a masked loop over source positions — the
+    reference matcher, and the route for chunks whose alphabet exceeds the
+    uint8 Peq table. Loops over source positions (bounded by max_len),
+    vectorized across the batch and target positions. Buffers are
+    preallocated and updated in place — the loop is memory-bandwidth-bound,
+    and temporary churn is what stops it scaling across many workers."""
+    n = len(la)
+    cols = np.arange(lmax)[None, :]
+    matched_a = np.zeros((n, lmax), dtype=bool)
+    matched_b = np.zeros((n, lmax), dtype=bool)
+    colmask = cols < lb[:, None]       # static: valid target positions
+    not_matched_b = np.ones((n, lmax), dtype=bool)
+    win = window[:, None]
+    tmp = np.empty((n, lmax), dtype=bool)
+    rows = np.arange(n)
+    for i in range(lmax):
+        np.equal(b, a[:, i][:, None], out=tmp)
+        tmp &= colmask
+        tmp &= np.abs(cols - i) <= win
+        tmp &= not_matched_b
+        tmp[i >= la, :] = False
+        has = tmp.any(axis=1)
+        first = tmp.argmax(axis=1)
+        hit = rows[has]
+        matched_b[hit, first[has]] = True
+        not_matched_b[hit, first[has]] = False
+        matched_a[hit, i] = True
+    return matched_a, matched_b
 
 
 def _jaro_match_bitparallel(a, la, b, lb, window, lmax):
@@ -204,7 +370,7 @@ def _jaro_match_bitparallel_uniform(
     la_s: int,
     lb_s: int,
     lmax: int,
-    eq_all: np.ndarray | None = None,
+    eq_all: np.ndarray,
 ):
     """:func:`_jaro_match_bitparallel` specialized to UNIFORM lengths (every
     row has la == la_s and lb == lb_s) — the shape of the bench/pipeline
@@ -219,11 +385,6 @@ def _jaro_match_bitparallel_uniform(
     n = a.shape[0]
     W = (lmax + 63) // 64
     window = max(max(la_s, lb_s) // 2 - 1, 0)
-    if eq_all is None:
-        # one gather for every source position, transposed to (lmax, W, n)
-        # so the inner loop reads CONTIGUOUS (n,) slices instead of striding
-        # through an (n, lmax, W) cube (cache-miss bound at 128-char chunks)
-        eq_all = _shared_eq_tensor(a, b, lb_s, lmax)
     ones = np.uint64(0xFFFFFFFFFFFFFFFF)
     unmatched = np.empty((W, n), dtype=np.uint64)
     for w in range(W):
@@ -263,93 +424,6 @@ def _jaro_match_bitparallel_uniform(
     mb_bytes = matched_b_bits.transpose(1, 0).copy().view(np.uint8)
     matched_b = np.unpackbits(mb_bytes, axis=1, bitorder="little")[:, :lmax].astype(bool)
     return matched_a, matched_b
-
-
-def jaro_batch(
-    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
-) -> np.ndarray:
-    """Vectorized Jaro similarity over a batch of string pairs.
-
-    Fast path: byte-identical pairs score 1.0 without entering the matching
-    loop — near-duplicate corpora hit this constantly. The matcher itself is
-    the bit-parallel greedy matcher above whenever the batch alphabet fits
-    the uint8 Peq table (it always does after _compact_codes succeeds).
-    """
-    a, la = _encode_batch(s1, max_len)
-    b, lb = _encode_batch(s2, max_len)
-    a, b = _compact_codes(a, b)
-    return _jaro_coded(a, la, b, lb)
-
-
-def _jaro_coded(
-    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
-) -> np.ndarray:
-    """:func:`jaro_batch` on pre-encoded (and normally pre-compacted) codes.
-
-    The coded entry exists so the fused weighted UDF encodes + compacts each
-    chunk ONCE for all char kernels (r5; the per-kernel wrappers re-encoded
-    the same chunk up to 6x, ~58% of the fused kernel's profile). Byte-equal
-    subsets recurse on SLICED matrices instead of re-encoding; a subset is
-    never re-compacted, so a >255-symbol batch whose unequal subset would
-    fit uint8 takes the masked-loop matcher where the wrapper path might
-    re-try compaction — matcher choice only, the matchers are parity-pinned.
-    """
-    n = len(la)
-    lmax = int(max(la.max(initial=0), lb.max(initial=0)))
-    if lmax == 0:
-        # py_stringmatching returns 1.0 for two empty strings, 0 otherwise
-        return np.where((la == 0) & (lb == 0), 1.0, 0.0)
-    a, b = a[:, :lmax], b[:, :lmax]
-
-    equal = (la == lb) & (a == b).all(axis=1)
-    if equal.any():
-        out = np.ones(n, dtype=np.float64)
-        idx = ~equal
-        if idx.any():
-            out[idx] = _jaro_coded(a[idx], la[idx], b[idx], lb[idx])
-        return out
-
-    window = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
-    cols = np.arange(lmax)[None, :]  # (1, L)
-
-    if a.dtype == np.uint8:
-        # compact alphabet -> bit-parallel greedy matcher (O(L/64) words per
-        # source position; register/L1-resident working set). Uniform-length
-        # chunks (the bench/pipeline shape: prefixes fill their budget) take
-        # the scalar-mask specialization.
-        if la.min() == la.max() and lb.min() == lb.max():
-            matched_a, matched_b = _jaro_match_bitparallel_uniform(
-                a, b, int(la[0]), int(lb[0]), lmax
-            )
-        else:
-            matched_a, matched_b = _jaro_match_bitparallel(a, la, b, lb, window, lmax)
-    else:
-        matched_a = np.zeros((n, lmax), dtype=bool)
-        matched_b = np.zeros((n, lmax), dtype=bool)
-        # Greedy left-to-right matching: loop over source positions (bounded
-        # by max_len), vectorized across the batch and target positions.
-        # Buffers are preallocated and updated in place — the loop is
-        # memory-bandwidth-bound, and temporary churn is what stops it
-        # scaling across many workers.
-        colmask = cols < lb[:, None]       # static: valid target positions
-        not_matched_b = np.ones((n, lmax), dtype=bool)
-        win = window[:, None]
-        tmp = np.empty((n, lmax), dtype=bool)
-        rows = np.arange(n)
-        for i in range(lmax):
-            np.equal(b, a[:, i][:, None], out=tmp)
-            tmp &= colmask
-            tmp &= np.abs(cols - i) <= win
-            tmp &= not_matched_b
-            tmp[i >= la, :] = False
-            has = tmp.any(axis=1)
-            first = tmp.argmax(axis=1)
-            hit = rows[has]
-            matched_b[hit, first[has]] = True
-            not_matched_b[hit, first[has]] = False
-            matched_a[hit, i] = True
-
-    return _jaro_sim_from_matches(a, la, b, lb, matched_a, matched_b)
 
 
 def _jaro_sim_from_matches(
@@ -392,34 +466,6 @@ def _jaro_sim_from_matches(
     return sim
 
 
-def jaro_winkler_batch(
-    s1: np.ndarray,
-    s2: np.ndarray,
-    prefix_weight: float = JW_PREFIX_WEIGHT,
-    max_len: int = DEFAULT_MAX_LEN,
-) -> np.ndarray:
-    """Vectorized Jaro-Winkler (unconditional prefix boost, l<=4)."""
-    a, la = _encode_batch(s1, max_len)
-    b, lb = _encode_batch(s2, max_len)
-    a, b = _compact_codes(a, b)
-    return _jaro_winkler_coded(a, la, b, lb, prefix_weight=prefix_weight)
-
-
-def _jaro_winkler_coded(
-    a: np.ndarray,
-    la: np.ndarray,
-    b: np.ndarray,
-    lb: np.ndarray,
-    prefix_weight: float = JW_PREFIX_WEIGHT,
-) -> np.ndarray:
-    """JW on pre-encoded full-width codes (see :func:`_jaro_coded`). The
-    prefix-equality check runs on the compacted codes the jaro matcher uses —
-    the remap is injective, so equality (all this check reads) is unchanged
-    from the raw-codepoint check the standalone wrapper used to make."""
-    jaro = _jaro_coded(a, la, b, lb)
-    return _winkler_from_jaro(jaro, a, la, b, lb, prefix_weight)
-
-
 def _winkler_from_jaro(
     jaro: np.ndarray,
     a: np.ndarray,
@@ -440,33 +486,13 @@ def _winkler_from_jaro(
     return jaro + l * prefix_weight * (1.0 - jaro)
 
 
-def levenshtein_batch(
-    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
-) -> np.ndarray:
-    """Vectorized Levenshtein distance (DP over positions, batch-vectorized)."""
-    a, la = _encode_batch(s1, max_len)
-    b, lb = _encode_batch(s2, max_len)
-    a, b = _compact_codes(a, b)
-    return _lev_dp_coded(a, la, b, lb)
-
-
 def _lev_dp_coded(
     a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
 ) -> np.ndarray:
-    """DP Levenshtein on pre-encoded codes (see :func:`_jaro_coded`)."""
+    """DP Levenshtein on encoded codes (any alphabet width)."""
     n = len(la)
     l1 = int(la.max(initial=0))
     l2 = int(lb.max(initial=0))
-
-    lm = max(l1, l2)
-    equal = (la == lb) & (a[:, :lm] == b[:, :lm]).all(axis=1) if lm else (la == lb)
-    if equal.any():
-        out = np.zeros(n, dtype=np.float64)
-        idx = ~equal
-        if idx.any():
-            out[idx] = _lev_dp_coded(a[idx], la[idx], b[idx], lb[idx])
-        return out
-
     # dp rows over s2, iterate chars of s1; vectorized across batch
     prev = np.tile(np.arange(l2 + 1, dtype=np.int64), (n, 1))
     # cells beyond each string's own length are clamped at the end
@@ -487,10 +513,11 @@ def _lev_dp_coded(
     return dist.astype(np.float64)
 
 
-def levenshtein_batch_bitparallel(
-    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
+def _lev_myers_coded(
+    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
 ) -> np.ndarray:
-    """Exact Levenshtein distances via bit-parallel Myers, batch-vectorized.
+    """Exact Levenshtein distances via bit-parallel Myers, batch-vectorized,
+    on compacted (uint8) codes with per-row lengths.
 
     Myers' bit-vector recurrence (Myers, JACM 1999; multi-word form after
     Hyyrö 2003) computes one DP COLUMN per text character in O(ceil(m/64))
@@ -500,76 +527,80 @@ def levenshtein_batch_bitparallel(
     DRAM-bandwidth-bound; this one stays in registers/L1).
 
     Vectorization layout: all per-pair bitvectors are (n,) uint64 arrays per
-    word; the text loop runs max|s2| times over the whole batch with an
+    word; the text loop runs max|b| times over the whole batch with an
     active mask. Every dependency in the recurrence flows from lower to
     higher bits (addition carries, left shifts), so sharing a uniform word
     count across pairs with different pattern lengths is exact — bits above
     a pair's own m-1 never influence its score bit.
 
-    Falls back to the DP kernel when the batch alphabet exceeds 255 symbols
-    (the uint8 Peq table is what keeps the gather step cheap).
+    The uint8 Peq table is what keeps the gather step cheap; a chunk over
+    255 symbols takes :func:`_lev_dp_coded` instead.
     """
-    n = len(s1)
-    if n == 0:
-        return np.zeros(0, dtype=np.float64)
-    a, la = _encode_batch(s1, max_len)
-    b, lb = _encode_batch(s2, max_len)
-    a, b = _compact_codes(a, b)
-    return _lev_myers_coded(a, la, b, lb)
-
-
-def _lev_myers_uniform(a: np.ndarray, la_s: int, b: np.ndarray, lb_s: int) -> np.ndarray:
-    """:func:`_lev_myers_coded` specialized to UNIFORM lengths (see
-    :func:`_jaro_match_bitparallel_uniform` for why this shape dominates):
-    the active mask, score-bit word/shift and VP initialization are scalars,
-    the per-text-position Peq gather batches into one fancy-index op, and
-    the carry flags stay boolean (no astype churn). Identical recurrence,
-    bit-identical distances (parity-pinned by the kernel tests)."""
-    n = a.shape[0]
-    if la_s == 0:
-        return np.full(n, float(lb_s))
-    W = (la_s + 63) // 64
-    n_sym = int(max(a.max(initial=0), b.max(initial=0))) + 1
-    peq = _build_peq(a, np.full(n, la_s, dtype=np.int64), la_s, n_sym)
+    n = len(la)
+    m_max = int(la.max(initial=0))
+    n_max = int(lb.max(initial=0))
+    if m_max == 0:
+        return lb.astype(np.float64)
+    W = (m_max + 63) // 64
     rows = np.arange(n)
-    # one gather for all text positions, transposed to (lb_s, W, n) so the
-    # inner loop reads contiguous (n,) slices (see the jaro uniform matcher)
-    eq_all = np.ascontiguousarray(peq[rows[:, None], b[:, :lb_s], :].transpose(1, 2, 0))
+
+    # Peq[i, c, w]: bitmask of pattern positions in word w where a[i] == c
+    n_sym = int(max(a.max(initial=0), b.max(initial=0))) + 1
+    peq = _build_peq(a, la, m_max, n_sym)
+
     ones = np.uint64(0xFFFFFFFFFFFFFFFF)
-    vp = np.empty((W, n), dtype=np.uint64)
+    # VP starts all-ones over each pair's own m bits
+    vp = np.zeros((W, n), dtype=np.uint64)
     for w in range(W):
-        bits = min(max(la_s - 64 * w, 0), 64)
-        vp[w] = ones if bits >= 64 else np.uint64((1 << bits) - 1)
+        bits = np.clip(la - 64 * w, 0, 64)
+        full = bits >= 64
+        safe_bits = np.where(full, 0, bits).astype(np.uint64)
+        vp[w] = np.where(full, ones, (np.uint64(1) << safe_bits) - np.uint64(1))
     vn = np.zeros((W, n), dtype=np.uint64)
-    score = np.full(n, la_s, dtype=np.int64)
-    wm = (la_s - 1) // 64
-    ls = np.uint64((la_s - 1) % 64)
-    one = np.uint64(1)
-    s63 = np.uint64(63)
-    for j in range(lb_s):
+    score = la.astype(np.int64).copy()
+    # per-pair location of the score bit (m-1)
+    wm = np.maximum(la - 1, 0) // 64
+    last_shift = (np.maximum(la - 1, 0) % 64).astype(np.uint64)
+
+    eq = np.empty((W, n), dtype=np.uint64)
+    wsel = np.arange(W)[None, :]
+    for j in range(n_max):
+        act = j < lb
+        if not act.any():
+            continue
+        cj = b[:, j]
+        eq_g = peq[rows[:, None], cj[:, None], wsel]  # (n, W)
+        for w in range(W):
+            eq[w] = eq_g[:, w]
         carry = np.zeros(n, dtype=np.uint64)
         hp_c = np.ones(n, dtype=np.uint64)  # left-border carry-in for HP<<1
         hn_c = np.zeros(n, dtype=np.uint64)
+        dscore = np.zeros(n, dtype=np.int64)
         for w in range(W):
-            eqw = eq_all[j, w]
-            x = eqw & vp[w]
+            x = eq[w] & vp[w]
             s1w = x + vp[w]
-            c1 = s1w < x
+            c1 = (s1w < x).astype(np.uint64)
             s2w = s1w + carry
-            c2 = s2w < s1w
-            carry = (c1 | c2).astype(np.uint64)
-            d0 = (s2w ^ vp[w]) | eqw | vn[w]
+            c2 = (s2w < s1w).astype(np.uint64)
+            carry = c1 | c2
+            d0 = (s2w ^ vp[w]) | eq[w] | vn[w]
             hp = vn[w] | ~(d0 | vp[w])
             hn = vp[w] & d0
-            if w == wm:
-                score += ((hp >> ls) & one).astype(np.int64)
-                score -= ((hn >> ls) & one).astype(np.int64)
-            hp_s = (hp << one) | hp_c
-            hn_s = (hn << one) | hn_c
-            hp_c = hp >> s63
-            hn_c = hn >> s63
-            vp[w] = hn_s | ~(d0 | hp_s)
-            vn[w] = hp_s & d0
+            sel = wm == w
+            if sel.any():
+                dscore[sel] = (
+                    ((hp[sel] >> last_shift[sel]) & np.uint64(1)).astype(np.int64)
+                    - ((hn[sel] >> last_shift[sel]) & np.uint64(1)).astype(np.int64)
+                )
+            hp_s = (hp << np.uint64(1)) | hp_c
+            hn_s = (hn << np.uint64(1)) | hn_c
+            hp_c = hp >> np.uint64(63)
+            hn_c = hn >> np.uint64(63)
+            vp_new = hn_s | ~(d0 | hp_s)
+            vn_new = hp_s & d0
+            vp[w] = np.where(act, vp_new, vp[w])
+            vn[w] = np.where(act, vn_new, vn[w])
+        score += np.where(act, dscore, 0)
     return score.astype(np.float64)
 
 
@@ -577,11 +608,14 @@ def _lev_myers_uniform_swapped(
     eq_all: np.ndarray, la_s: int, lb_s: int
 ) -> np.ndarray:
     """Myers over the SHARED equality tensor (:func:`_shared_eq_tensor`),
-    with pattern = b and text = a — Levenshtein is symmetric, so the
-    distance is identical to :func:`_lev_myers_uniform`'s pattern-a
-    orientation (integer-exact, parity-pinned), and the orientation swap is
-    what lets the fused jw+lev kernel reuse the jaro matcher's Peq gather
-    instead of building its own."""
+    specialized to UNIFORM lengths (see
+    :func:`_jaro_match_bitparallel_uniform` for why this shape dominates):
+    the score-bit word/shift and VP initialization are scalars and the
+    inner loop reads contiguous (n,) words. Pattern = b and text = a —
+    Levenshtein is symmetric, so the distance equals the pattern-a
+    orientation of :func:`_lev_myers_coded` (integer-exact, parity-pinned),
+    and the swap is what lets it reuse the jaro matcher's Peq gather instead
+    of building its own."""
     n = eq_all.shape[2]
     if lb_s == 0:
         return np.full(n, float(la_s))
@@ -660,150 +694,44 @@ def _lev_myers_uniform_swapped(
     return score.astype(np.float64)
 
 
-def _lev_myers_coded(
-    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
+
+def jaro_batch(
+    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
 ) -> np.ndarray:
-    """Myers bit-parallel Levenshtein on pre-encoded codes (see
-    :func:`_jaro_coded`). The uint8 Peq table needs a compacted alphabet;
-    when shared compaction failed (>255 distinct codes — ``a`` still int32)
-    this falls back to the DP kernel, exactly as the wrapper always did."""
-    n = len(la)
-    if n == 0:
-        return np.zeros(0, dtype=np.float64)
-    if a.dtype != np.uint8:
-        return _lev_dp_coded(a, la, b, lb)
+    """Vectorized Jaro similarity over a batch of string pairs."""
+    return char_sim_batch(s1, s2, {"jaro": 1.0}, max_len)
 
-    m_max = int(la.max(initial=0))
-    n_max = int(lb.max(initial=0))
-    if m_max == 0:
-        return lb.astype(np.float64)
-    if la.min() == m_max and lb.min() == n_max:
-        return _lev_myers_uniform(a, m_max, b, n_max)
-    W = (m_max + 63) // 64
-    rows = np.arange(n)
 
-    # Peq[i, c, w]: bitmask of pattern positions in word w where a[i] == c
-    n_sym = int(max(a.max(initial=0), b.max(initial=0))) + 1
-    peq = _build_peq(a, la, m_max, n_sym)
-
-    ones = np.uint64(0xFFFFFFFFFFFFFFFF)
-    # VP starts all-ones over each pair's own m bits
-    vp = np.zeros((W, n), dtype=np.uint64)
-    for w in range(W):
-        bits = np.clip(la - 64 * w, 0, 64)
-        full = bits >= 64
-        safe_bits = np.where(full, 0, bits).astype(np.uint64)
-        vp[w] = np.where(full, ones, (np.uint64(1) << safe_bits) - np.uint64(1))
-    vn = np.zeros((W, n), dtype=np.uint64)
-    score = la.astype(np.int64).copy()
-    # per-pair location of the score bit (m-1)
-    wm = np.maximum(la - 1, 0) // 64
-    last_shift = (np.maximum(la - 1, 0) % 64).astype(np.uint64)
-
-    eq = np.empty((W, n), dtype=np.uint64)
-    wsel = np.arange(W)[None, :]
-    for j in range(n_max):
-        act = j < lb
-        if not act.any():
-            continue
-        cj = b[:, j]
-        eq_g = peq[rows[:, None], cj[:, None], wsel]  # (n, W)
-        for w in range(W):
-            eq[w] = eq_g[:, w]
-        carry = np.zeros(n, dtype=np.uint64)
-        hp_c = np.ones(n, dtype=np.uint64)  # left-border carry-in for HP<<1
-        hn_c = np.zeros(n, dtype=np.uint64)
-        dscore = np.zeros(n, dtype=np.int64)
-        for w in range(W):
-            x = eq[w] & vp[w]
-            s1w = x + vp[w]
-            c1 = (s1w < x).astype(np.uint64)
-            s2w = s1w + carry
-            c2 = (s2w < s1w).astype(np.uint64)
-            carry = c1 | c2
-            d0 = (s2w ^ vp[w]) | eq[w] | vn[w]
-            hp = vn[w] | ~(d0 | vp[w])
-            hn = vp[w] & d0
-            sel = wm == w
-            if sel.any():
-                dscore[sel] = (
-                    ((hp[sel] >> last_shift[sel]) & np.uint64(1)).astype(np.int64)
-                    - ((hn[sel] >> last_shift[sel]) & np.uint64(1)).astype(np.int64)
-                )
-            hp_s = (hp << np.uint64(1)) | hp_c
-            hn_s = (hn << np.uint64(1)) | hn_c
-            hp_c = hp >> np.uint64(63)
-            hn_c = hn >> np.uint64(63)
-            vp_new = hn_s | ~(d0 | hp_s)
-            vn_new = hp_s & d0
-            vp[w] = np.where(act, vp_new, vp[w])
-            vn[w] = np.where(act, vn_new, vn[w])
-        score += np.where(act, dscore, 0)
-    return score.astype(np.float64)
+def jaro_winkler_batch(
+    s1: np.ndarray,
+    s2: np.ndarray,
+    prefix_weight: float = JW_PREFIX_WEIGHT,
+    max_len: int = DEFAULT_MAX_LEN,
+) -> np.ndarray:
+    """Vectorized Jaro-Winkler (unconditional prefix boost, l<=4)."""
+    return char_sim_batch(s1, s2, {"jw": 1.0}, max_len, prefix_weight)
 
 
 def scaled_levenshtein_batch(
     s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
 ) -> np.ndarray:
     """1 - dist/max(len); 1.0 for two empty strings (py_stringmatching semantics)."""
-    a_len = np.array([min(len(x or ""), max_len) for x in s1], dtype=np.float64)
-    b_len = np.array([min(len(x or ""), max_len) for x in s2], dtype=np.float64)
-    dist = levenshtein_batch_bitparallel(s1, s2, max_len=max_len)
-    mx = np.maximum(a_len, b_len)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = 1.0 - dist / mx
-    return np.where(mx == 0, 1.0, sim)
+    return char_sim_batch(s1, s2, {"lev": 1.0}, max_len)
 
 
-def _scaled_lev_coded(
-    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
+def levenshtein_batch(
+    s1: np.ndarray, s2: np.ndarray, max_len: int = DEFAULT_MAX_LEN
 ) -> np.ndarray:
-    """scaled_levenshtein_batch on pre-encoded codes.
-    ``la``/``lb`` ARE min(len, max_len) — :func:`_encode_batch` truncates
-    before measuring — so the length normalization is byte-identical to the
-    wrapper's own per-string recount."""
-    dist = _lev_myers_coded(a, la, b, lb)
-    mx = np.maximum(la, lb).astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = 1.0 - dist / mx
-    return np.where(mx == 0, 1.0, sim)
+    """Levenshtein distances by the textbook DP (batch-vectorized): the
+    reference the bit-parallel routes are tested against."""
+    a, la = _encode_batch(s1, max_len)
+    b, lb = _encode_batch(s2, max_len)
+    return _lev_dp_coded(a, la, b, lb)
 
 
 # ---------------------------------------------------------------------------
-# pandas UDF wrappers (Arrow-batched; the Column-level API the operators use)
+# pandas UDF (Arrow-batched; the Column-level API the operators use)
 # ---------------------------------------------------------------------------
-
-KERNEL_CHUNK = 4096  # rows per internal slice: keeps the (chunk x L) working
-# set inside the per-core L3 share so 32 concurrent workers don't fight for
-# DRAM bandwidth (the scaling-efficiency killer), regardless of Arrow batch size
-
-
-def make_pair_sim_udf(kind: str = "jaro_winkler", max_len: int = DEFAULT_MAX_LEN):
-    """Return a pandas UDF Column fn (col1, col2) -> double for the given kernel."""
-    kernels = {
-        "jaro": lambda x, y: jaro_batch(x, y, max_len=max_len),
-        "jaro_winkler": lambda x, y: jaro_winkler_batch(x, y, max_len=max_len),
-        "scaled_lev": lambda x, y: scaled_levenshtein_batch(x, y, max_len=max_len),
-    }
-    kernel = kernels[kind]
-
-    @pandas_udf("double")
-    def sim_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        x = s1.to_numpy(dtype=object)
-        y = s2.to_numpy(dtype=object)
-        null = pd.isna(s1) | pd.isna(s2)
-        x = np.where(pd.isna(s1), "", x)
-        y = np.where(pd.isna(s2), "", y)
-        n = len(x)
-        out = np.empty(n, dtype=np.float64)
-        for lo in range(0, n, KERNEL_CHUNK):
-            hi = min(lo + KERNEL_CHUNK, n)
-            out[lo:hi] = kernel(x[lo:hi], y[lo:hi])
-        res = pd.Series(out)
-        res[null.to_numpy()] = None
-        return res
-
-    return sim_udf
 
 
 def make_weighted_char_sim_udf(
@@ -811,120 +739,25 @@ def make_weighted_char_sim_udf(
     max_len: int = DEFAULT_MAX_LEN,
     prefix_weight: float = JW_PREFIX_WEIGHT,
 ):
-    """One pandas UDF computing ``sum_k w_k * kernel_k`` over the same pair.
+    """One pandas UDF computing ``sum_k w_k * kernel_k`` over the same pair
+    (:func:`char_sim_batch`); NULL on either side scores NULL.
 
     The Arrow transport of the two prefix columns (the dominant fixed cost of
     a python kernel at 10^6+ pairs/batch), the codepoint encode AND the
     alphabet compaction are paid ONCE for all char kernels instead of once
-    per kernel — the kernels run their ``_coded`` entries on the shared
-    matrices (r5; the wrapper path re-encoded each chunk up to 6x and
-    re-compacted twice, measured at ~58% of the fused kernel's profile, all
-    of it redundant). ``prefix_weight`` is the Winkler boost of ``jw``.
+    per kernel. ``prefix_weight`` is the Winkler boost of ``jw``.
     """
-    kernels = {
-        "jaro": _jaro_coded,
-        "jw": functools.partial(_jaro_winkler_coded, prefix_weight=prefix_weight),
-        "lev": _scaled_lev_coded,
-    }
-    parts = [(kernels[k], w) for k, w in weighted.items()]
-    names = list(weighted)
-    total_w = float(sum(weighted.values()))
-
-    def _fused_uniform_chunk(a, la_s, b, lb_s, lmax):
-        """Uniform-length chunk with the SHARED equality tensor: byte-equal
-        pairs split off first (every kernel scores them 1.0, so the weighted
-        sum is Σw — the same value each kernel's own equal fast path
-        produces), then ONE _shared_eq_tensor feeds both the jaro matcher
-        and the side-swapped Myers. Bit-identical to summing the standalone
-        kernels (each helper is the exact code path those kernels run)."""
-        n_c = a.shape[0]
-        acc = np.full(n_c, total_w)
-        equal = (
-            (a[:, :lmax] == b[:, :lmax]).all(axis=1)
-            if la_s == lb_s
-            else np.zeros(n_c, dtype=bool)
-        )
-        idx = np.nonzero(~equal)[0]
-        if len(idx) == 0:
-            return acc
-        au, bu = a[idx, :lmax], b[idx, :lmax]
-        n_u = len(idx)
-        eq_all = _shared_eq_tensor(au, bu, lb_s, lmax)
-        sub = np.zeros(n_u)
-        jaro = None
-        if "jaro" in names or "jw" in names:
-            la_u = np.full(n_u, la_s, dtype=np.int64)
-            lb_u = np.full(n_u, lb_s, dtype=np.int64)
-            ma, mb = _jaro_match_bitparallel_uniform(
-                au, bu, la_s, lb_s, lmax, eq_all=eq_all
-            )
-            jaro = _jaro_sim_from_matches(au, la_u, bu, lb_u, ma, mb)
-        for k, w in weighted.items():
-            if k == "jaro":
-                sub += w * jaro
-            elif k == "jw":
-                sub += w * _winkler_from_jaro(
-                    jaro, au, la_u, bu, lb_u, prefix_weight
-                )
-            else:  # lev
-                dist = _lev_myers_uniform_swapped(eq_all, la_s, lb_s)
-                sub += w * (1.0 - dist / float(max(la_s, lb_s)))
-        acc[idx] = sub
-        return acc
+    weights = dict(weighted)
+    empty = np.empty(0, dtype=object)
+    char_sim_batch(empty, empty, weights)  # unknown kernels fail at plan build
 
     @pandas_udf("double")
     def sim_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        x = s1.to_numpy(dtype=object)
-        y = s2.to_numpy(dtype=object)
-        null = pd.isna(s1) | pd.isna(s2)
-        x = np.where(pd.isna(s1), "", x)
-        y = np.where(pd.isna(s2), "", y)
-        n = len(x)
-        out = np.zeros(n, dtype=np.float64)
-        for lo in range(0, n, KERNEL_CHUNK):
-            hi = min(lo + KERNEL_CHUNK, n)
-            a, la = _encode_batch(x[lo:hi], max_len)
-            b, lb = _encode_batch(y[lo:hi], max_len)
-            a, b = _compact_codes(a, b)
-            n_c = hi - lo
-            # modal-length routing: real pair streams are DOMINATED by one
-            # (la, lb) combination (the bench stream is 96% (128, 128) —
-            # prefixes usually fill their budget) but rarely 100% uniform,
-            # so a strict all-uniform gate would never fire. Split the
-            # chunk: the modal subset takes the fused shared-tensor path,
-            # the remainder (typically a few %) the general per-kernel
-            # path. Identical values either way (parity-pinned).
-            if n_c and a.dtype == np.uint8:
-                comb = la * (max_len + 1) + lb
-                vals, counts = np.unique(comb, return_counts=True)
-                mi = int(counts.argmax())
-                la_m = int(vals[mi]) // (max_len + 1)
-                lb_m = int(vals[mi]) % (max_len + 1)
-                if counts[mi] >= 256 and max(la_m, lb_m) > 0:
-                    lmax_m = max(la_m, lb_m)
-                    sel = comb == vals[mi]
-                    if counts[mi] == n_c:
-                        out[lo:hi] = _fused_uniform_chunk(a, la_m, b, lb_m, lmax_m)
-                        continue
-                    acc = np.empty(n_c, dtype=np.float64)
-                    acc[sel] = _fused_uniform_chunk(
-                        a[sel], la_m, b[sel], lb_m, lmax_m
-                    )
-                    rest = ~sel
-                    ar, br = a[rest], b[rest]
-                    lar, lbr = la[rest], lb[rest]
-                    racc = np.zeros(int(rest.sum()), dtype=np.float64)
-                    for fn, w in parts:
-                        racc += w * fn(ar, lar, br, lbr)
-                    acc[rest] = racc
-                    out[lo:hi] = acc
-                    continue
-            acc = np.zeros(n_c, dtype=np.float64)
-            for fn, w in parts:
-                acc += w * fn(a, la, b, lb)
-            out[lo:hi] = acc
-        res = pd.Series(out)
-        res[null.to_numpy()] = None
+        null1, null2 = s1.isna().to_numpy(), s2.isna().to_numpy()
+        x = np.where(null1, "", s1.to_numpy(dtype=object))
+        y = np.where(null2, "", s2.to_numpy(dtype=object))
+        res = pd.Series(char_sim_batch(x, y, weights, max_len, prefix_weight))
+        res[null1 | null2] = None
         return res
 
     return sim_udf
@@ -936,3 +769,4 @@ def token_jaccard_col(t1: Column, t2: Column) -> Column:
     inter = F.size(F.array_intersect(t1d, t2d)).cast("double")
     union = F.size(F.array_union(t1d, t2d)).cast("double")
     return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .similarity import jaro_winkler_batch
+from .similarity import jaro_winkler_batch, make_weighted_char_sim_udf
 
 
 def doc_frequencies(docs: DataFrame, tokens_col: str = "tokens", id_col: str = "conv_id") -> DataFrame:
@@ -141,7 +141,8 @@ def soft_tfidf_pairs(
     2. the pair⋈stats⋈stats token cross product (Σ_pairs |u1|·|u2| rows —
        the same work the UDF did per batch, now shuffled instead of looped);
     3. the secondary Jaro-Winkler evaluated ONCE per DISTINCT co-candidate
-       token pair through the same batched Arrow kernel (token-pair
+       token pair through the product's char-similarity UDF
+       (:func:`..functions.similarity.make_weighted_char_sim_udf`; token-pair
        cardinality ≪ cross cardinality), joined back;
     4. per-(pair, source-token) argmax via max_by ordered by (sim DESC,
        target first-pos ASC) — exactly np.argmax's first-max rule on the
@@ -178,18 +179,11 @@ def soft_tfidf_pairs(
       cross stream). Default False: at 100-TB token-pair cardinality can
       be too wide to ship, and AQE's runtime broadcast conversion makes
       the call from actual sizes instead.
-    - when ``symmetric``, the joined stream is persisted (both direction
-      aggregates consume it; Spark evicts it LRU after the job).
+    - when ``symmetric``, the joined stream is pinned with an eager
+      ``localCheckpoint`` (both direction aggregates consume it; its blocks
+      are reclaimed once no plan references them).
     """
-    @pandas_udf("double")
-    def sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            jaro_winkler_batch(
-                a.fillna("").to_numpy(dtype=object),
-                b.fillna("").to_numpy(dtype=object),
-            )
-        )
-
+    sim_udf = make_weighted_char_sim_udf({"jw": 1.0})
     stats = (
         docs.select(id_col, F.posexplode(tokens_col).alias("pos", "token"))
         .groupBy(id_col, "token")
@@ -239,8 +233,10 @@ def soft_tfidf_pairs(
     crossed = cross.join(sims_pos, ["x", "y"])
     if symmetric:
         # both directions consume the joined stream — materialize once
-        # instead of re-running the cross build + kernel for num21
-        crossed = crossed.persist()
+        # instead of re-running the cross build + kernel for num21, as an
+        # eager localCheckpoint (the library's pinning policy, see
+        # operators/blocking._pin): no CacheManager entry outlives the call
+        crossed = crossed.localCheckpoint(eager=True)
     contrib = lambda w_src, w_best, s: w_src * w_best * s  # noqa: E731
     best12 = (
         crossed.groupBy(id1, id2, "x")

@@ -48,6 +48,7 @@ from ..functions.tfidf import doc_frequencies
 from .blocking import (
     MERSENNE_P,
     _hash_params,
+    _pin,
     bucket_self_join,
     first_band_match,
     minhash_mins,
@@ -112,11 +113,10 @@ def vocab_size(token_dict: DataFrame) -> int:
 
 
 def doc_tokens(docs: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """(doc_id, token, n): one row per distinct token of each doc, ``n`` the
-    doc's distinct-token count riding every row. A doc without tokens has no
-    row."""
+    """(doc_id, n, tokens): each doc's distinct tokens and their count, one
+    row per doc."""
     toks = F.array_distinct(tokens_col)
-    return docs.select("doc_id", F.size(toks).alias("n"), F.explode(toks).alias("token"))
+    return docs.select("doc_id", F.size(toks).alias("n"), toks.alias("tokens"))
 
 
 def token_masks(words: int, prefix: str, where: str = "true") -> list:
@@ -148,7 +148,7 @@ def token_overlap(
     """(id1, id2, n1, n2, inter): exact distinct-token overlap of the candidate
     pairs that share at least one token. ``tokens`` is :func:`doc_tokens`
     output; ``token_dict`` numbers its tokens 1..``vocab`` (without it,
-    ``token`` already holds those dense ids).
+    ``tokens`` already holds those dense ids).
 
     The route is picked here and nowhere else, from the vocabulary:
 
@@ -159,21 +159,22 @@ def token_overlap(
       the O(pairs · tokens) exploded stream never exists (measured at
       sf0.1/local[32]: the q_dedup verify 13.4 s -> ~1 s);
     - explode (unbounded vocabulary, where masks would outgrow the token
-      lists): pairs ⋈ (doc, token) on both sides, one count aggregate, with
-      no dictionary join; the sizes ride the token rows. ``pairs`` is
-      referenced once, so an unpinned enumeration upstream is not
-      recomputed.
+      lists): pairs ⋈ (doc, token) on both sides, one count aggregate on
+      (id1, id2), with no dictionary join; the sizes are joined afterwards
+      at doc cardinality. ``pairs`` is referenced once, so an unpinned
+      enumeration upstream is not recomputed.
 
     Both routes return the same integers.
     """
     pairs = pairs.select("id1", "id2")
     words = (vocab + 63) // 64
+    rows = tokens.select("doc_id", "n", F.explode("tokens").alias("token"))
     if 0 < words <= VERIFY_BITSET_MAX_WORDS:
         if token_dict is not None:
-            tokens = tokens.join(
+            rows = rows.join(
                 F.broadcast(token_dict.select("token", "token_id")), "token"
             ).select("doc_id", F.col("token_id").alias("token"), "n")
-        per_doc = tokens.withColumnRenamed("token", "tid").groupBy("doc_id").agg(
+        per_doc = rows.withColumnRenamed("token", "tid").groupBy("doc_id").agg(
             F.min("n").alias("n"), *token_masks(words, "_m")
         )
 
@@ -192,16 +193,18 @@ def token_overlap(
         )
     else:
 
-        def side(k: int) -> DataFrame:
-            return tokens.select(
-                F.col("doc_id").alias(f"id{k}"), "token", F.col("n").alias(f"n{k}")
-            )
+        def side(df: DataFrame, k: int) -> DataFrame:
+            return df.withColumnRenamed("doc_id", f"id{k}").withColumnRenamed("n", f"n{k}")
 
+        t = rows.select("doc_id", "token")
+        sizes = tokens.select("doc_id", "n")
         out = (
-            pairs.join(side(1), "id1")
-            .join(side(2), ["id2", "token"])
-            .groupBy("id1", "id2", "n1", "n2")
+            pairs.join(side(t, 1), "id1")
+            .join(side(t, 2), ["id2", "token"])
+            .groupBy("id1", "id2")
             .agg(F.count("*").alias("inter"))
+            .join(side(sizes, 1), "id1")
+            .join(side(sizes, 2), "id2")
         )
     return out.select("id1", "id2", *[F.col(c).cast("long") for c in ("n1", "n2", "inter")])
 
@@ -1140,27 +1143,29 @@ def prefix_jaccard_join(
     tdict = dedup_token_dict(docs)
     vocab = vocab_size(tdict)
     words = (vocab + 63) // 64
-    ids = (
+    ids = _pin(  # feeds the prefix sides and the verify
         doc_tokens(docs)
+        .select("doc_id", F.explode("tokens").alias("token"))
         .join(F.broadcast(tdict.select("token", "token_id")), "token")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("token_id")).alias("tids"))
-    ).persist()  # feeds the prefix sides and the verify
+    )
     # pin the join-input partitioning: prefix-token rows are small but the
     # self-join output is quadratic per token, and AQE coalesces exchanges by
     # INPUT size — unpinned, the whole pair stream can fold onto 1-2 cores
     # (same hazard measured on bucket_pairs: 107s -> 32s at sf0.1). Residual
     # hot-token imbalance splits under AQE skew-join on the shuffled join.
     n_part = int(documents.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # integer ceil(t*n): (num*n + denom - 1) div denom
+    # integer ceil(t*n): (num*n + denom - 1) div denom, in longs — num*n
+    # overflows an int from 3,580 tokens at the default num
     plen = F.expr(
-        f"size(tids) - CAST((({threshold_num} * size(tids) + {threshold_denom} - 1) "
-        f"DIV {threshold_denom}) AS INT) + 1"
+        f"size(tids) - CAST(((CAST({threshold_num} AS BIGINT) * size(tids) "
+        f"+ {threshold_denom} - 1) DIV {threshold_denom}) AS INT) + 1"
     )
-    # length filter: t·max(n1,n2) <= min(n1,n2), integers only
-    length_ok = F.lit(threshold_num) * F.greatest("n1", "n2") <= F.lit(
+    # length filter: t·max(n1,n2) <= min(n1,n2), integers only (longs)
+    length_ok = F.lit(threshold_num).cast("long") * F.greatest("n1", "n2") <= F.lit(
         threshold_denom
-    ) * F.least("n1", "n2")
+    ).cast("long") * F.least("n1", "n2")
     if 0 < words <= EMIT_ONCE_MAX_WORDS:
         # Same surviving pairs as the pair-distinct route (every candidate
         # shares >= 1 prefix token; the minimum is unique), same integer
@@ -1242,9 +1247,7 @@ def prefix_jaccard_join(
             .select("id1", "id2")
             .distinct()
         )
-        tokens = ids.select(
-            "doc_id", F.explode("tids").alias("token"), F.size("tids").alias("n")
-        )
+        tokens = ids.select("doc_id", F.size("tids").alias("n"), F.col("tids").alias("tokens"))
         ov = token_overlap(cand, tokens, vocab)
     union = F.col("n1") + F.col("n2") - F.col("inter")
     return ov.filter(

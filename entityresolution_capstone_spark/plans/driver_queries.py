@@ -375,16 +375,18 @@ from mh_blocks group by block_key"""
 
 
 def q_er_pairs_lev(spark, sf_dir):
-    # graded path = the production kernel: bit-parallel Myers Levenshtein in
-    # the Arrow batch UDF (functions/similarity.py). Distances are exact ints,
-    # so the DuckDB builtin-levenshtein oracle matches bit-for-bit.
-    from ..functions.similarity import make_pair_sim_udf
+    # graded path = the production kernel: the scoring stage's Arrow UDF
+    # (functions/similarity.py:make_weighted_char_sim_udf) with the single
+    # weight lev=1.0, so chunks dominated by one (la, lb) take the same
+    # shared-tensor Myers route as score_pairs. Distances are exact ints, so
+    # the DuckDB builtin-levenshtein oracle matches bit-for-bit.
+    from ..functions.similarity import make_weighted_char_sim_udf
 
     _, docs, dft, tdict, blocks = _er_blocks(spark, sf_dir)
     pairs = _er_pairs(spark, sf_dir)
     d1 = docs.select(F.col("conv_id").alias("id1"), F.col("doc_prefix").alias("p1"))
     d2 = docs.select(F.col("conv_id").alias("id2"), F.col("doc_prefix").alias("p2"))
-    lev_udf = make_pair_sim_udf("scaled_lev", max_len=PREFIX)
+    lev_udf = make_weighted_char_sim_udf({"lev": 1.0}, max_len=PREFIX)
     return (
         pairs.join(d1, "id1").join(d2, "id2")
         .select("id1", "id2", F.round(lev_udf(F.col("p1"), F.col("p2")), 6).alias("lev_sim"))
@@ -463,12 +465,14 @@ def q_er_pairs_jw(spark, sf_dir):
     ``jaro_winkler_similarity`` uses a DIFFERENT matching variant (diverges on
     ~23% of random unequal-length pairs), so the oracle instead re-implements
     the greedy matcher itself as a recursive CTE over source positions —
-    bit-exact vs the kernel (fuzz-pinned in tests/test_kernels.py)."""
-    from ..functions.similarity import make_pair_sim_udf
+    bit-exact vs the kernel (fuzz-pinned in tests/test_kernels.py). The
+    graded UDF is the scoring stage's own (``make_weighted_char_sim_udf``
+    with the single weight jw=1.0), so its modal-length route is graded too."""
+    from ..functions.similarity import make_weighted_char_sim_udf
 
     _, docs, dft, tdict, blocks = _er_blocks(spark, sf_dir)
     pairs = _er_pairs(spark, sf_dir)
-    jw = make_pair_sim_udf("jaro_winkler", max_len=PREFIX)
+    jw = make_weighted_char_sim_udf({"jw": 1.0}, max_len=PREFIX)
     d1 = docs.select(F.col("conv_id").alias("id1"), F.col("doc_prefix").alias("p1"))
     d2 = docs.select(F.col("conv_id").alias("id2"), F.col("doc_prefix").alias("p2"))
     return (

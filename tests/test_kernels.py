@@ -8,17 +8,21 @@ Pins the NumPy batch kernels to:
    ['a aa','b ab','a ba','b bb'], pairwise sims 0.90/0.73/0.00/0.68/0.73/0.90.
 """
 
+from unittest import mock
+
 import duckdb
 import numpy as np
-import pytest
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from entityresolution_capstone_spark.functions import similarity as S
 from entityresolution_capstone_spark.functions.similarity import (
+    char_sim_batch,
     jaro_batch,
     jaro_winkler_batch,
     levenshtein_batch,
-    make_pair_sim_udf,
+    make_weighted_char_sim_udf,
     scaled_levenshtein_batch,
 )
 from entityresolution_capstone_spark.functions.tfidf import soft_tfidf_raw
@@ -130,7 +134,7 @@ def test_soft_tfidf_udf_matches_raw(spark):
 
 
 def test_pair_sim_udf_on_spark(spark):
-    udf = make_pair_sim_udf("jaro_winkler")
+    udf = make_weighted_char_sim_udf({"jw": 1.0})
     df = spark.createDataFrame(
         [("martha", "marhta"), ("aa", "ab"), (None, "x")], ["a", "b"]
     )
@@ -146,23 +150,132 @@ def test_pair_sim_udf_on_spark(spark):
     st.text(alphabet="abcdez ", max_size=140),
 )
 def test_bitparallel_lev_matches_duckdb_and_dp(s1, s2):
-    """Myers bit-vector distances == DP kernel == DuckDB builtin, including
-    strings that span multiple 64-bit words (>64 chars)."""
-    from entityresolution_capstone_spark.functions.similarity import (
-        levenshtein_batch_bitparallel,
-    )
-
+    """Myers bit-vector scaled Levenshtein == the DP kernel's == DuckDB's
+    builtin distance, scaled the same way, including strings that span
+    multiple 64-bit words (>64 chars)."""
     for ml in (64, 128):
-        got = k(lambda a, b, max_len=ml: levenshtein_batch_bitparallel(a, b, max_len=ml), s1, s2)
-        want = k(lambda a, b, max_len=ml: levenshtein_batch(a, b, max_len=ml), s1, s2)
+        got = k(scaled_levenshtein_batch, s1, s2, max_len=ml)
+        want = _scaled(k(levenshtein_batch, s1, s2, max_len=ml), s1[:ml], s2[:ml])
         assert got == want, (s1, s2, ml)
     (dl,) = duckdb.execute(
         "select levenshtein(?, ?)", [s1[:128], s2[:128]]
     ).fetchone()
-    got128 = k(
-        lambda a, b: levenshtein_batch_bitparallel(a, b, max_len=128), s1, s2
+    got128 = k(scaled_levenshtein_batch, s1, s2, max_len=128)
+    assert got128 == _scaled(dl, s1[:128], s2[:128]), (s1, s2)
+
+
+def _scaled(dist, s1: str, s2: str) -> float:
+    """py_stringmatching's scaled Levenshtein from a distance."""
+    mx = max(len(s1), len(s2))
+    return 1.0 if mx == 0 else 1.0 - dist / mx
+
+
+def _ref_weighted(xs, ys, weights: dict, ml: int) -> list[float]:
+    """``Σ w_k · kernel_k`` from the independent references — the scalar
+    greedy Jaro above and the DP Levenshtein — summed in weight order from
+    0.0, as the batch scorer sums."""
+    dists = levenshtein_batch(np.array(xs, dtype=object), np.array(ys, dtype=object), ml)
+    out = []
+    for x, y, d in zip(xs, ys, dists):
+        x, y = (x or "")[:ml], (y or "")[:ml]
+        j = _jaro_scalar(x, y)
+        upto = min(4, len(x), len(y))
+        pre = next((i for i in range(upto) if x[i] != y[i]), upto)
+        sims = {"jaro": j, "jw": j + pre * S.JW_PREFIX_WEIGHT * (1.0 - j), "lev": _scaled(d, x, y)}
+        acc = 0.0
+        for key, w in weights.items():
+            acc += w * sims[key]
+        out.append(acc)
+    return out
+
+
+class _RouteCalls:
+    """Counts the calls of the kernels' route-specific matchers."""
+
+    NAMES = (
+        "_jaro_match_bitparallel_uniform", "_lev_myers_uniform_swapped",
+        "_jaro_match_bitparallel", "_lev_myers_coded",
+        "_jaro_match_masked", "_lev_dp_coded",
     )
-    assert got128 == dl, (s1, s2)
+
+    def __enter__(self):
+        self.patches = {
+            n: mock.patch.object(S, n, wraps=getattr(S, n)) for n in self.NAMES
+        }
+        self.mocks = {n: p.start() for n, p in self.patches.items()}
+        return self
+
+    def __exit__(self, *exc):
+        for p in self.patches.values():
+            p.stop()
+
+    def __getitem__(self, name):
+        return self.mocks[name].call_count
+
+
+BATCH_WEIGHTS = {"jaro": 0.2, "jw": 0.5, "lev": 0.3}
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.integers(1, 80),
+    st.integers(1, 80),
+    st.integers(0, 2**32 - 1),
+    st.lists(
+        st.tuples(
+            st.text(alphabet="abcdez ", max_size=140),
+            st.text(alphabet="abcdez ", max_size=140),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+)
+def test_char_sim_batch_routes_bit_exact(la_s, lb_s, seed, mixed):
+    """One batch of FUSED_MIN_ROWS rows sharing one (la, lb), mixed-length
+    rows, byte-equal rows and a row of another shape: the batch scorer
+    reaches BOTH the shared-tensor route and the general route, and every
+    score equals the scalar Jaro / DP Levenshtein reference bit for bit."""
+    import random
+
+    rnd = random.Random(seed)
+
+    def word(n):
+        return "".join(rnd.choice("abcdez ") for _ in range(n))
+
+    rows = []
+    for _ in range(S.FUSED_MIN_ROWS):
+        x, y = word(la_s), word(lb_s)
+        rows.append((x, "q" + y[1:] if x == y else y))  # never byte-equal
+    mixed = mixed + [(word(rnd.randint(0, 140)), word(rnd.randint(0, 140))) for _ in range(30)]
+    rows += mixed + [(x, x) for x, _ in mixed[:3]] + [("abc", "")]
+    xs, ys = [r[0] for r in rows], [r[1] for r in rows]
+    with _RouteCalls() as calls:
+        got = char_sim_batch(
+            np.array(xs, dtype=object), np.array(ys, dtype=object), BATCH_WEIGHTS, 128
+        )
+    assert calls["_jaro_match_bitparallel_uniform"] == 1
+    assert calls["_lev_myers_uniform_swapped"] == 1
+    assert calls["_jaro_match_bitparallel"] == 1
+    assert calls["_lev_myers_coded"] == 1
+    assert list(got) == _ref_weighted(xs, ys, BATCH_WEIGHTS, 128)
+
+
+def test_char_sim_batch_wide_alphabet_falls_back():
+    """A chunk over 255 symbols cannot compact to uint8: it takes the
+    masked-loop Jaro and the DP Levenshtein, with the same scores."""
+    import random
+
+    rng = random.Random(3)
+    alpha = [chr(0x100 + i) for i in range(300)]
+    xs = ["".join(rng.choice(alpha) for _ in range(rng.randint(0, 70))) for _ in range(300)]
+    ys = [x[:30] + "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40))) for x in xs]
+    with _RouteCalls() as calls:
+        got = char_sim_batch(
+            np.array(xs, dtype=object), np.array(ys, dtype=object), BATCH_WEIGHTS, 64
+        )
+    assert calls["_jaro_match_masked"] == 1 and calls["_lev_dp_coded"] == 1
+    assert calls["_jaro_match_bitparallel_uniform"] == calls["_jaro_match_bitparallel"] == 0
+    assert list(got) == _ref_weighted(xs, ys, BATCH_WEIGHTS, 64)
 
 
 def test_weighted_char_udf_matches_split_kernels(spark):
@@ -301,21 +414,25 @@ from sim order by pid
 
 
 def test_weighted_char_udf_uniform_fused_path(spark):
-    """r6 shared-tensor fused path: uniform-length chunks (the bench/pipeline
-    shape) route through _fused_uniform_chunk (one Peq + gather shared by
-    the jaro matcher and a side-swapped Myers). Pin it bit-exactly against
-    the per-kernel wrappers on uniform-length rows with byte-equal pairs,
-    an all-empty-one-side row set, and NULLs."""
-    import numpy as np
-
-    from entityresolution_capstone_spark.functions.similarity import (
-        jaro_winkler_batch,
-        make_weighted_char_sim_udf,
-        scaled_levenshtein_batch,
-    )
+    """r6 shared-tensor fused route: a chunk whose rows share one (la, lb) —
+    the bench/pipeline shape — scores through one Peq + gather shared by
+    the jaro matcher and a side-swapped Myers. FUSED_MIN_ROWS uniform rows
+    (near-dups, byte-equal pairs, all-mismatch and degenerate repeats) plus
+    a few rows of other lengths in ONE Arrow batch reach both routes; the
+    UDF's scores equal the scalar Jaro / DP Levenshtein references bit for
+    bit, and NULLs score NULL."""
+    import random
 
     base = "entity resolution at scale needs fast kernels and careful tests!"
     assert len(base) == 64
+    rng = random.Random(5)
+
+    def mutate(s: str) -> str:
+        cs = list(s)
+        for _ in range(rng.randint(1, 12)):
+            cs[rng.randrange(64)] = rng.choice("abcxyz ?!")
+        return "".join(cs)
+
     rows = [
         (base, base[:-1] + "?"),            # near-dup
         (base, base),                        # byte-equal fast path
@@ -323,24 +440,17 @@ def test_weighted_char_udf_uniform_fused_path(spark):
         ("z" * 64, base),                    # degenerate repeat
         (base, "q" * 64),
     ]
-    df = spark.createDataFrame(rows, "p1 string, p2 string")
-    udf = make_weighted_char_sim_udf({"jw": 0.6, "lev": 0.4}, max_len=64)
-    got = [r["s"] for r in df.select(udf("p1", "p2").alias("s")).collect()]
+    rows += [(mutate(base), mutate(base)) for _ in range(S.FUSED_MIN_ROWS)]
+    rows += [(base[:40], base), (base[:40], base[:10] + "x" * 54), ("", base)]
     x = np.array([r[0] for r in rows], dtype=object)
     y = np.array([r[1] for r in rows], dtype=object)
-    want = 0.6 * jaro_winkler_batch(x, y, max_len=64) + 0.4 * scaled_levenshtein_batch(
-        x, y, max_len=64
-    )
-    assert got == list(want)  # bit-exact, not allclose
-
-    # asymmetric-uniform (la != lb constant) + NULL rows
-    rows2 = [(base[:40], base), (base[:40], base[:10] + "x" * 54), (None, base)]
-    df2 = spark.createDataFrame(rows2, "p1 string, p2 string")
-    got2 = [r["s"] for r in df2.select(udf("p1", "p2").alias("s")).collect()]
-    x2 = np.array([r[0] or "" for r in rows2[:2]], dtype=object)
-    y2 = np.array([r[1] for r in rows2[:2]], dtype=object)
-    want2 = 0.6 * jaro_winkler_batch(x2, y2, max_len=64) + 0.4 * scaled_levenshtein_batch(
-        x2, y2, max_len=64
-    )
-    assert got2[:2] == list(want2)
-    assert got2[2] is None
+    weights = {"jw": 0.6, "lev": 0.4}
+    want = _ref_weighted(list(x), list(y), weights, 64)
+    udf = make_weighted_char_sim_udf(weights, max_len=64)
+    with _RouteCalls() as calls:  # the UDF body, in this process
+        assert list(udf.func(pd.Series(x), pd.Series(y))) == want
+    assert calls["_lev_myers_uniform_swapped"] == 1 and calls["_lev_myers_coded"] == 1
+    df = spark.createDataFrame(rows + [(None, base)], "p1 string, p2 string").coalesce(1)
+    got = [r["s"] for r in df.select(udf("p1", "p2").alias("s")).collect()]
+    assert got[:-1] == want  # bit-exact, not allclose
+    assert got[-1] is None

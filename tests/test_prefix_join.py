@@ -120,3 +120,25 @@ def test_prefix_join_bitset_multiword_vocab(spark, monkeypatch):
     _force_pair_distinct_explode(monkeypatch)
     slow = _rows(prefix_jaccard_join(docs, threshold_num=500_000))
     assert fast == slow and len(fast) > 0
+
+
+def test_prefix_join_leaves_no_cached_frames(spark):
+    """The per-doc id lists are pinned with localCheckpoint, never a
+    CacheManager entry, so a call leaves nothing to release."""
+    docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(2):
+        assert prefix_jaccard_join(docs, threshold_num=600_000).count() > 0
+        assert cm.isEmpty()
+
+
+def test_prefix_join_long_documents_no_int_overflow(spark):
+    """Prefix length and length filter multiply the threshold numerator by
+    a token count: 600,000 x 4,000 exceeds an int, so they run in longs
+    (ANSI raises on int overflow)."""
+    a = [f"t{i}" for i in range(4000)]
+    b = a[:3600] + [f"u{i}" for i in range(400)]
+    docs = spark.createDataFrame([(1, " ".join(a)), (2, " ".join(b))], ["doc_id", "text"])
+    rows = prefix_jaccard_join(docs, threshold_num=600_000).collect()
+    assert [(r["id1"], r["id2"], r["inter"], r["union"]) for r in rows] == [(1, 2, 3600, 4400)]

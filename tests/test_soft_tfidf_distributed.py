@@ -127,3 +127,16 @@ def test_score_pairs_over_cap_uses_distributed(spark):
     assert set(udf_path) == set(dist_path)
     for k in udf_path:
         assert dist_path[k] == pytest.approx(udf_path[k], rel=1e-9, abs=1e-12), k
+
+
+def test_distributed_leaves_no_cached_frames(spark):
+    """The joined cross stream both directions read is pinned with
+    localCheckpoint, never a CacheManager entry, so a call leaves nothing
+    to release."""
+    docs, dft, pairs = _inputs(spark, REF_CORPUS)
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    out = soft_tfidf_pairs(pairs, docs, dft, len(REF_CORPUS), threshold=0.5)
+    assert cm.isEmpty()
+    assert out.count() == len(REF_GOLDEN)
+    assert cm.isEmpty()
