@@ -155,12 +155,13 @@ class Pipeline:
 
         dft = self._run_stage("df_table", lambda: doc_frequencies(docs), resume)
         corpus_size = TBL.num_rows(self.spark, self._path("docs"))
-        tdict = self._run_stage(
-            "token_dict", lambda: B.token_dictionary(dft), resume
-        )
 
+        # token ids are a pure function of the committed df_table, so a
+        # rebuilt blocks stage needs no committed dictionary
         blocks = self._run_stage(
-            "blocks", lambda: B.build_blocks(docs, tdict, cfg.blocking), resume
+            "blocks",
+            lambda: B.build_blocks(docs, B.token_dictionary(dft), cfg.blocking),
+            resume,
         )
         self._run_stage(
             "block_metrics",
@@ -249,25 +250,17 @@ class Pipeline:
             )
         else:
 
-            def build_cluster_edges():
+            def build_clusters():
+                # connected components pins its first round, so the edges
+                # are evaluated once there; duplicates are allowed
                 e = scored.filter(
                     F.col("sim") >= cfg.similarity_threshold
-                ).select("id1", "id2").unionByName(exact_edges).distinct()
+                ).select("id1", "id2").unionByName(exact_edges)
                 if cfg.use_negative_constraint and edges is not None:
                     e = BS.negative_constraint_filter(e, edges)
-                return e
+                return CC.assign_clusters(docs, CC.connected_components(e))
 
-            cluster_edges = self._run_stage(
-                "cluster_edges", build_cluster_edges, resume
-            )
-
-            clusters = self._run_stage(
-                "clusters",
-                lambda: CC.assign_clusters(
-                    docs, CC.connected_components(cluster_edges)
-                ),
-                resume,
-            )
+            clusters = self._run_stage("clusters", build_clusters, resume)
 
         result = {
             "run_id": self.run_id,

@@ -17,8 +17,8 @@ from entityresolution_capstone_spark.sources import tables as TBL
 
 # every committed stage of the default (max-linkage, no edges) graph
 STAGES = (
-    "docs", "df_table", "token_dict", "blocks", "block_metrics", "pairs",
-    "scores", "bootstrap_edges", "cluster_edges", "clusters",
+    "docs", "df_table", "blocks", "block_metrics", "pairs", "scores",
+    "bootstrap_edges", "clusters",
 )
 
 
@@ -40,7 +40,7 @@ def test_resume_skips_committed_stages_and_matches(spark, small_corpus):
     )
 
     # simulate a crash after 'scores': wipe every later stage
-    for stage in ("bootstrap_edges", "cluster_edges", "clusters"):
+    for stage in ("bootstrap_edges", "clusters"):
         shutil.rmtree(os.path.join(base, stage), ignore_errors=True)
     assert TBL.is_committed(os.path.join(base, "scores"))
     assert not TBL.is_committed(os.path.join(base, "clusters"))

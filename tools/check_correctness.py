@@ -4,6 +4,9 @@ For every entry in queries(): run the Spark query at the given sf dir AND the
 DuckDB oracle on the same parquet files, then compare row count, column names,
 and order-insensitive values. Prints one line per query + a JSON summary.
 
+Each line gives the Spark seconds (query plus collect) and the DuckDB seconds
+(oracle plus fetch) separately.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -101,10 +104,12 @@ def main():
             print(f"{name:24s} SPARK-ERROR {type(e).__name__}: {str(e)[:160]}")
             summary[name] = "spark_error"
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"{name:24s} rows-only  n={len(s_rows)}  ({time.time()-t0:.1f}s)")
+            print(f"{name:24s} rows-only  n={len(s_rows)}  (spark {spark_s:.1f}s)")
             summary[name] = f"rows_only:{len(s_rows)}"
             continue
+        t0 = time.time()
         try:
             res = con.execute(oracles[name])
             d_cols = [d[0] for d in res.description]
@@ -113,6 +118,8 @@ def main():
             print(f"{name:24s} DUCK-ERROR {type(e).__name__}: {str(e)[:160]}")
             summary[name] = "duck_error"
             continue
+        duck_s = time.time() - t0
+        secs = f"(spark {spark_s:.1f}s, duckdb {duck_s:.1f}s)"
         sc, sr = norm_rows(s_cols, s_rows)
         dc, dr = norm_rows(d_cols, d_rows)
         status = []
@@ -124,10 +131,10 @@ def main():
             diffs = [(a, b) for a, b in zip(sr, dr) if a != b][:3]
             status.append(f"VALUES {len([1 for a,b in zip(sr,dr) if a!=b])} rows differ, e.g. {diffs}")
         if status:
-            print(f"{name:24s} MISMATCH  {' | '.join(status)}")
+            print(f"{name:24s} MISMATCH  {' | '.join(status)}  {secs}")
             summary[name] = "mismatch"
         else:
-            print(f"{name:24s} OK  n={len(sr)}  ({time.time()-t0:.1f}s)")
+            print(f"{name:24s} OK  n={len(sr)}  {secs}")
             summary[name] = f"ok:{len(sr)}"
     _frontier_cache_audit(spark)
     print(json.dumps(summary))
@@ -135,29 +142,30 @@ def main():
 
 
 def _frontier_cache_audit(spark):
-    """The gate leans on driver_queries._FRONTIER_CACHE (the memoized
-    transcripts->docs->blocks->pairs->scored chain ~15 ER queries share);
-    assert it stayed bounded and report its storage footprint so a future
-    500-query gate can't silently blow past executor storage and evict
-    (docs/SCALE.md 'Driver-gate frontier cache')."""
+    """The ER queries read the stage tables of one ``Pipeline.run`` per
+    (application, sf_dir) key (driver_queries._FRONTIER_CACHE); assert the
+    keys stayed bounded and report the tables' bytes on disk and the
+    session's persistent RDDs (docs/SCALE.md 'Driver-gate frontier cache')."""
     try:
         from entityresolution_capstone_spark.plans import driver_queries as DQ
 
         n_keys = len(DQ._FRONTIER_CACHE)
-        n_frames = sum(len(st) for st in DQ._FRONTIER_CACHE.values())
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        mem = sum(i.memSize() for i in infos)
-        disk = sum(i.diskSize() for i in infos)
         # one (applicationId, sf_dir) key per gate run; more means queries
         # are being run against unexpected sf dirs and the cache will grow
         assert n_keys <= 2, (
             f"frontier cache grew to {n_keys} (app, sf_dir) keys — bounded "
             "design assumes one sf per gate run"
         )
+        disk = sum(
+            os.path.getsize(os.path.join(root, f))
+            for st in DQ._FRONTIER_CACHE.values()
+            for root, _, files in os.walk(st["base_dir"])
+            for f in files
+        )
+        n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
         print(
-            f"frontier-cache audit: {n_keys} key(s), {n_frames} memoized "
-            f"frames, {len(infos)} persisted RDDs, "
-            f"{mem/1e6:.0f} MB mem + {disk/1e6:.0f} MB disk"
+            f"frontier-cache audit: {n_keys} key(s), stage tables "
+            f"{disk/1e6:.1f} MB on disk, {n_rdds} persistent RDDs"
         )
     except AssertionError:
         raise

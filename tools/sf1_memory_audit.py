@@ -11,15 +11,13 @@ There is no driver-generated sf1 testdata (TESTDATA.md: the driver owns
 (`build_scaled`): 50k documents / 20k embeddings whose per-copy token
 spaces are disjoint, so candidate pairs grow exactly 10x by construction
 (~62M pairs — the same pair mass a driver sf1 would carry, which is what
-the extrapolation was linear in). The audit materializes the EXACT chain
-the gate memoizes (driver_queries._frontier -> _er_pairs -> _er_scored ->
-q_er_clusters) in one session and records, per stage:
-
-  - rows and wall seconds
-  - persisted-RDD storage footprint (getRDDStorageInfo: memory + disk)
-
-plus, at the end, the JVM's peak RSS (/proc VmHWM — the number that decides
-whether a real executor OOMs) and the python driver's peak RSS.
+the extrapolation was linear in). The audit runs the EXACT chain the gate
+reads (driver_queries.q_er_clusters: the frontier's one Pipeline.run) in one
+session and records, per committed stage, its rows and wall seconds (from the
+run's ``_metrics`` table) and its bytes on disk; plus the session's
+persisted-RDD storage (getRDDStorageInfo: memory + disk), the JVM's peak RSS
+(/proc VmHWM — the number that decides whether a real executor OOMs) and the
+python driver's peak RSS.
 
 Writes BENCH/SF1_MEMORY.json. Usage:
 
@@ -86,6 +84,14 @@ def _storage_mb(spark) -> dict:
     }
 
 
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def _bench_queries(line: str | None) -> dict | None:
     """The query walls of bench.py's JSON result line; None for a crashed run."""
     try:
@@ -114,6 +120,7 @@ def main():
 
     from entityresolution_capstone_spark.session import get_spark  # noqa: E402
     from entityresolution_capstone_spark.plans import driver_queries as DQ  # noqa: E402
+    from pyspark.sql import functions as F  # noqa: E402
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
@@ -135,29 +142,30 @@ def main():
         "stages": [],
     }
 
-    def stage(name: str, fn):
-        t0 = time.time()
-        rows = fn()
+    # the gate's frontier: one Pipeline.run, every stage committed
+    t0 = time.time()
+    DQ.q_er_clusters(spark, sf_dir).count()
+    report["frontier_wall_s"] = round(time.time() - t0, 1)
+    st = DQ._frontier(spark, sf_dir)
+    metrics = (
+        spark.read.parquet(os.path.join(st["base_dir"], "_metrics"))
+        .groupBy("stage")
+        .agg(F.sum("rows_out").alias("rows"), F.max("wall_ms").alias("wall_ms"))
+    )
+    for r in sorted(metrics.collect(), key=lambda r: r["stage"]):
         entry = {
-            "stage": name,
-            "rows": rows,
-            "wall_s": round(time.time() - t0, 1),
-            **_storage_mb(spark),
+            "stage": r["stage"],
+            "rows": r["rows"],
+            "wall_s": round(r["wall_ms"] / 1000.0, 1),
+            "disk_mb": round(_dir_bytes(os.path.join(st["base_dir"], r["stage"])) / 1e6, 1),
         }
         report["stages"].append(entry)
         print(json.dumps(entry), flush=True)
-
-    # the gate's exact memoized chain, in its dependency order
-    stage("frontier(docs+dft+blocks)", lambda: DQ._frontier(spark, sf_dir)["blocks"].count())
-    stage("candidate_pairs", lambda: DQ._er_pairs(spark, sf_dir).count())
-    stage("scored_pairs", lambda: DQ._er_scored(spark, sf_dir).count())
-    stage("clusters", lambda: DQ.q_er_clusters(spark, sf_dir).count())
 
     # frontier-cache audit identical to the gate tool's bound
     n_keys = len(DQ._FRONTIER_CACHE)
     assert n_keys <= 2, f"frontier cache grew to {n_keys} keys"
     report["frontier_keys"] = n_keys
-    report["frontier_frames"] = sum(len(st) for st in DQ._FRONTIER_CACHE.values())
     report["jvm_peak_rss_mb"] = max((_peak_rss_mb(p) for p in jvms), default=0.0)
     report["driver_py_peak_rss_mb"] = _peak_rss_mb(os.getpid())
     report.update(_storage_mb(spark))
