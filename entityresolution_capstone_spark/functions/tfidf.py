@@ -1,5 +1,5 @@
-"""TF-IDF machinery: corpus document frequencies, JVM-side TF-IDF cosine,
-and the soft-TF-IDF pandas-UDF kernel.
+"""TF-IDF machinery: corpus document frequencies, per-doc tf-idf weights and
+norms, and the two soft-TF-IDF kernels (distributed plan, pandas UDF).
 
 The reference fits ``py_stringmatching.SoftTfIdf`` on the whole per-attribute
 corpus (/root/reference/src/entity_resolver/core/utils.py:347-396, corpus built
@@ -17,10 +17,12 @@ algorithm and pinned by the reference's own golden scores
 - the reference symmetrizes with ``max(score(a,b), score(b,a))``
   (utils.py:389-395).
 
-At scale the *primary* scoring kernel is the plain TF-IDF cosine below — pure
-DataFrame algebra (explode + broadcast DF join + groupBy), fully JVM-side, no
-Python. Soft-TF-IDF is the parity kernel for reference-equivalent scoring and
-runs as a vectorized pandas UDF with a broadcast document-frequency dict.
+At scale the *primary* scoring kernel is the plain TF-IDF cosine of
+``operators/scoring.score_pairs`` — pure DataFrame algebra over
+:func:`tfidf_vectors` / :func:`tfidf_norms`, fully JVM-side, no Python.
+Soft-TF-IDF is the parity kernel for reference-equivalent scoring and runs
+as a vectorized pandas UDF with a broadcast document-frequency dict, or as
+the distributed :func:`soft_tfidf_pairs` plan.
 """
 
 from __future__ import annotations
@@ -72,45 +74,6 @@ def tfidf_norms(vectors: DataFrame, id_col: str = "conv_id") -> DataFrame:
     return vectors.groupBy(id_col).agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
 
 
-def tfidf_cosine_pairs(
-    pairs: DataFrame,
-    vectors: DataFrame,
-    norms: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-) -> DataFrame:
-    """Cosine similarity for candidate pairs, entirely JVM-side.
-
-    Plan shape: pairs ⋈ v1 (on id1) ⋈ v2 (on id2, token) → partial-aggregated
-    dot products → ⋈ norms. Pairs with no shared token get cosine 0.
-    """
-    v1 = vectors.select(F.col("conv_id").alias(id1), "token", F.col("w").alias("w1"))
-    v2 = vectors.select(F.col("conv_id").alias(id2), "token", F.col("w").alias("w2"))
-    dots = (
-        pairs.join(v1, id1)
-        .join(v2, [id2, "token"])
-        .groupBy(id1, id2)
-        .agg(F.sum(F.col("w1") * F.col("w2")).alias("dot"))
-    )
-    n1 = F.broadcast(norms.select(F.col("conv_id").alias(id1), F.col("norm").alias("norm1")))
-    n2 = F.broadcast(norms.select(F.col("conv_id").alias(id2), F.col("norm").alias("norm2")))
-    return (
-        pairs.join(dots, [id1, id2], "left")
-        .join(n1, id1)
-        .join(n2, id2)
-        .select(
-            id1,
-            id2,
-            F.when(
-                (F.col("norm1") > 0) & (F.col("norm2") > 0),
-                F.coalesce(F.col("dot"), F.lit(0.0)) / (F.col("norm1") * F.col("norm2")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("tfidf_cosine"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Soft-TF-IDF (reference-parity kernel, vectorized pandas UDF)
 # ---------------------------------------------------------------------------
@@ -121,12 +84,10 @@ def soft_tfidf_pairs(
     df_table: DataFrame,
     corpus_size: int,
     threshold: float = 0.5,
-    symmetric: bool = True,
     id1: str = "id1",
     id2: str = "id2",
     id_col: str = "conv_id",
     tokens_col: str = "tokens",
-    max_cross_per_pair: int | None = None,
     broadcast_sims: bool = False,
 ) -> DataFrame:
     """DISTRIBUTED soft-TF-IDF for candidate pairs: (id1, id2, stfidf).
@@ -166,12 +127,6 @@ def soft_tfidf_pairs(
       neither the winner nor the sum (contributions are >= 0; adding 0.0
       terms is an IEEE no-op). On random-token corpora this drops the
       aggregate input several-fold.
-    - ``max_cross_per_pair``: pairs whose token-unique cross size
-      ``|u1|*|u2|`` exceeds the cap NEVER enter the cross stream and come
-      back with ``stfidf`` NULL — explicitly *unscored*, distinguishable
-      from a true 0.0 (no silent caps: count NULLs to audit). Bounds the
-      one superlinear stream (Σ|u1|·|u2| grows with document width, not
-      corpus size) at 100-TB scale; default None scores everything.
     - ``broadcast_sims``: hash-broadcast the (distinct, super-threshold)
       token-pair similarity table into the cross-stream join — correct
       whenever that table fits an executor (it is DISTINCT token pairs
@@ -179,9 +134,9 @@ def soft_tfidf_pairs(
       cross stream). Default False: at 100-TB token-pair cardinality can
       be too wide to ship, and AQE's runtime broadcast conversion makes
       the call from actual sizes instead.
-    - when ``symmetric``, the joined stream is pinned with an eager
-      ``localCheckpoint`` (both direction aggregates consume it; its blocks
-      are reclaimed once no plan references them).
+    - the joined stream is pinned with an eager ``localCheckpoint`` (both
+      direction aggregates consume it; its blocks are reclaimed once no plan
+      references them).
     """
     sim_udf = make_weighted_char_sim_udf({"jw": 1.0})
     stats = (
@@ -205,21 +160,7 @@ def soft_tfidf_pairs(
         F.col(id_col).alias(id2), F.col("token").alias("y"),
         F.col("pos").alias("pos2"), F.col("w").alias("w2"),
     )
-    base = pairs.select(id1, id2)
-    capped = None
-    if max_cross_per_pair is not None:
-        ucnt = stats.groupBy(id_col).agg(F.count("*").alias("u"))
-        base = (
-            base.join(ucnt.select(F.col(id_col).alias(id1), F.col("u").alias("_u1")), id1)
-            .join(ucnt.select(F.col(id_col).alias(id2), F.col("u").alias("_u2")), id2)
-        )
-        capped = base.filter(
-            F.col("_u1") * F.col("_u2") > max_cross_per_pair
-        ).select(id1, id2)
-        base = base.filter(F.col("_u1") * F.col("_u2") <= max_cross_per_pair).select(
-            id1, id2
-        )
-    cross = base.join(t1, id1).join(t2, id2)
+    cross = pairs.select(id1, id2).join(t1, id1).join(t2, id2)
     # s > threshold pruned on the SIMS side, before the join back into the
     # cross stream — exactness argument in the docstring; the join and both
     # per-direction aggregations now see only rows that can contribute
@@ -230,13 +171,11 @@ def soft_tfidf_pairs(
     )
     if broadcast_sims:
         sims_pos = F.broadcast(sims_pos)
-    crossed = cross.join(sims_pos, ["x", "y"])
-    if symmetric:
-        # both directions consume the joined stream — materialize once
-        # instead of re-running the cross build + kernel for num21, as an
-        # eager localCheckpoint (the library's pinning policy, see
-        # operators/blocking._pin): no CacheManager entry outlives the call
-        crossed = crossed.localCheckpoint(eager=True)
+    # both directions consume the joined stream — materialize once instead
+    # of re-running the cross build + kernel for num21, as an eager
+    # localCheckpoint (the library's pinning policy, see
+    # operators/blocking._pin): no CacheManager entry outlives the call
+    crossed = cross.join(sims_pos, ["x", "y"]).localCheckpoint(eager=True)
     contrib = lambda w_src, w_best, s: w_src * w_best * s  # noqa: E731
     best12 = (
         crossed.groupBy(id1, id2, "x")
@@ -251,51 +190,43 @@ def soft_tfidf_pairs(
     num12 = best12.groupBy(id1, id2).agg(
         F.sum(contrib(F.col("w1"), F.col("b.w2"), F.col("b.s"))).alias("n12")
     )
-    out = num12
-    if symmetric:
-        best21 = (
-            crossed.groupBy(id1, id2, "y")
-            .agg(
-                F.min("w2").alias("w2"),
-                F.max_by(
-                    F.struct(F.col("s"), F.col("w1")),
-                    F.struct(F.col("s"), (-F.col("pos1")).alias("np")),
-                ).alias("b"),
-            )
+    best21 = (
+        crossed.groupBy(id1, id2, "y")
+        .agg(
+            F.min("w2").alias("w2"),
+            F.max_by(
+                F.struct(F.col("s"), F.col("w1")),
+                F.struct(F.col("s"), (-F.col("pos1")).alias("np")),
+            ).alias("b"),
         )
-        num21 = best21.groupBy(id1, id2).agg(
-            F.sum(contrib(F.col("w2"), F.col("b.w1"), F.col("b.s"))).alias("n21")
-        )
-        out = num12.join(num21, [id1, id2])
-        num = F.greatest("n12", "n21")
-    else:
-        num = F.col("n12")
+    )
+    num21 = best21.groupBy(id1, id2).agg(
+        F.sum(contrib(F.col("w2"), F.col("b.w1"), F.col("b.s"))).alias("n21")
+    )
     n1 = norms.select(F.col(id_col).alias(id1), F.col("v").alias("v1"))
     n2 = norms.select(F.col(id_col).alias(id2), F.col("v").alias("v2"))
     scored = (
-        out.join(n1, id1)
+        num12.join(num21, [id1, id2])
+        .join(n1, id1)
         .join(n2, id2)
         .select(
             id1,
             id2,
             F.when(
-                (F.col("v1") > 0) & (F.col("v2") > 0), num / (F.col("v1") * F.col("v2"))
+                (F.col("v1") > 0) & (F.col("v2") > 0),
+                F.greatest("n12", "n21") / (F.col("v1") * F.col("v2")),
             )
             .otherwise(F.lit(0.0))
             .alias("stfidf"),
         )
     )
     # pairs with an empty-token side never enter the cross stream; the kernel
-    # scores them 0.0 — restore them so the row set equals `pairs`. Pairs
-    # dropped by max_cross_per_pair stay NULL (unscored, not 0.0).
-    out = pairs.select(id1, id2).join(scored, [id1, id2], "left")
-    score = F.coalesce("stfidf", F.lit(0.0))
-    if capped is not None:
-        out = out.join(
-            capped.withColumn("_capped", F.lit(True)), [id1, id2], "left"
-        )
-        score = F.when(F.col("_capped"), F.lit(None).cast("double")).otherwise(score)
-    return out.select(id1, id2, score.alias("stfidf"))
+    # scores them 0.0 — restore them so the row set equals `pairs`
+    return (
+        pairs.select(id1, id2)
+        .join(scored, [id1, id2], "left")
+        .select(id1, id2, F.coalesce("stfidf", F.lit(0.0)).alias("stfidf"))
+    )
 
 
 def soft_tfidf_raw(
@@ -344,7 +275,6 @@ def make_soft_tfidf_udf(
     spark_df_map,
     corpus_size: int,
     threshold: float = 0.5,
-    symmetric: bool = True,
 ):
     """Pandas UDF (tokens1 array, tokens2 array) -> double soft-TF-IDF score.
 
@@ -411,12 +341,9 @@ def make_soft_tfidf_udf(
                 continue
             u1, u2, tf1, tf2, off = meta
             block = sims[off : off + len(u1) * len(u2)].reshape(len(u1), len(u2))
-            s1 = directed(u1, u2, tf1, tf2, block)
-            if symmetric:
-                s2 = directed(u2, u1, tf2, tf1, block.T)
-                out[r] = max(s1, s2)
-            else:
-                out[r] = s1
+            out[r] = max(
+                directed(u1, u2, tf1, tf2, block), directed(u2, u1, tf2, tf1, block.T)
+            )
         return pd.Series(out)
 
     return stfidf_udf

@@ -1,28 +1,30 @@
-"""Codegen-safe dense-vector primitives over ``array<double>`` columns.
+"""Dense-vector primitives over ``array<double>`` columns.
 
-Why this module exists (round-3 measured law, docs/SCALE.md): Spark's
-higher-order array expressions — ``zip_with``, ``aggregate``, ``exists``,
-``transform``, ``array_intersect`` — are *interpreted* (codegen-fallback)
-and allocate per row. On wide streams (the quadratic candidate-pair stream,
-a corpus×queries score stream) they anti-scale at high in-JVM concurrency:
-identical output measured 627.6s (array HOFs) vs 40.3s (static expressions)
-at sf0.1 / local[32]. The fix is always the same: when the vector dimension
-is a PLAN-TIME CONSTANT, unroll the loop into a static scalar expression —
-``element_at`` ordinal access + multiply-adds stay inside whole-stage
-codegen with zero per-row allocation.
+Two kinds of kernel, with one job each:
 
-Numeric contract: all folds are STRICT LEFT-TO-RIGHT (``((t1+t2)+t3)+…``),
-the same association order as ``zip_with``+``aggregate`` and as DuckDB's
-``list_dot_product`` — so swapping an interpreted dot for a static one is
-bit-identical, and the DuckDB correctness oracles keep matching without
-re-rounding.
+- :func:`cosine` — the one embedding cosine. Every embedding operator
+  (embedding and semantic dedup, brute-force / LSH / IVF top-k, semantic
+  decontamination) scores its pair stream through this Arrow-batched NumPy
+  UDF: one Arrow transfer per batch carries both vectors, and the dot and
+  both norms are computed in the same batch. It has no dim ceiling and needs
+  no codegen, so it runs at the same speed under a broadcast nested-loop
+  join (which gets no whole-stage codegen) as under a hash or sort-merge
+  join.
+- :func:`static_dot` — Σ a[i]·b[i] unrolled into a static scalar
+  expression over a PLAN-TIME-CONSTANT dim (``element_at`` + multiply-adds,
+  no array higher-order functions). Its one library caller is the dense
+  TF-IDF route of ``operators/scoring.score_pairs``, which gates it on the
+  vocabulary with its own measured bound.
 
-Dim ceiling: each dot is ~2·dim expression nodes. Past a few hundred dims
-the generated projection risks the JVM 64 KB method limit / codegen split
-thresholds and can silently fall back to interpreted evaluation — the exact
-failure mode this module exists to avoid — so :data:`MAX_STATIC_DIM` is
-enforced. For wider embeddings use :func:`pandas_dot` (Arrow-batched NumPy,
-the other scale-safe path).
+Numeric contract: every fold is STRICT LEFT-TO-RIGHT (``((t1+t2)+t3)+…``),
+the association order of ``aggregate(zip_with(...))`` and DuckDB
+``list_dot_product``, so the Arrow fold is bit-identical to the static
+expression and the DuckDB oracles match without re-rounding.
+
+Dim ceiling: each static dot is ~2·dim expression nodes, and past a few
+hundred dims the generated method risks the JVM 64 KB limit, where Spark
+silently falls back to interpreted evaluation. :data:`MAX_STATIC_DIM` is
+enforced.
 """
 
 from __future__ import annotations
@@ -34,74 +36,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 # Hard ceiling for one unrolled static dot (the expression still PLANS and
-# evaluates correctly up to here). Wider vectors must take the Arrow path.
+# evaluates correctly up to here).
 MAX_STATIC_DIM = 256
-
-# Measured ceiling at which the static unroll still runs FAST (r6,
-# BENCH/CROSSOVER_PLANSHAPE.json: on the bucketed SMJ pair stream, static
-# beats Arrow at dim 64 — 4.25 vs 5.87 s on a ~4M-pair stream — but by
-# dim 128 the generated projection no longer compiles into effective
-# whole-stage codegen and runs interpreted: 29.1 vs 8.5 s. The same cliff
-# gates the dense TF-IDF route of operators/scoring.py at 64 slots).
-# kernel="auto" dispatch uses THIS bound; explicit kernel="static" callers
-# may still go up to MAX_STATIC_DIM (correct, just slow past the cliff).
-AUTO_STATIC_MAX_DIM = 64
-
-
-_HUGE_JIT_CACHE: dict[str, bool] = {}
-
-
-def huge_methods_jit_enabled(spark) -> bool:
-    """True iff this driver JVM was started with ``-XX:-DontCompileHugeMethods``.
-
-    The static kernels' crossover vs the Arrow kernels was measured WITH the
-    flag (session.py sets it via spark.driver.defaultJavaOptions) — without
-    it, HotSpot refuses to JIT the large generated whole-stage-codegen
-    methods and the static form silently runs in the bytecode interpreter,
-    the slow regime the r4 numbers measured (ADVICE r5). Sessions created
-    through an already-running JVM (spark-submit without the flag, an
-    existing py4j gateway/notebook) never see defaultJavaOptions, so
-    ``kernel="auto"`` dispatch probes the ACTUAL JVM arguments and falls
-    back to Arrow when the flag is absent. Numerics are identical either
-    way; this is purely a plan-speed decision. Probed once per application.
-    """
-    try:
-        app_id = spark.sparkContext.applicationId
-        if app_id in _HUGE_JIT_CACHE:
-            return _HUGE_JIT_CACHE[app_id]
-        mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-        args = mx.getRuntimeMXBean().getInputArguments()
-        found = any(
-            "-XX:-DontCompileHugeMethods" in str(args.get(i))
-            for i in range(args.size())
-        )
-        _HUGE_JIT_CACHE[app_id] = found
-        return found
-    except Exception:
-        # no py4j access (e.g. Spark Connect): assume the session factory's
-        # defaults applied
-        return True
-
-
-def _check_dim(dim: int) -> None:
-    if not isinstance(dim, int) or dim <= 0:
-        raise ValueError(f"dim must be a positive int, got {dim!r}")
-    if dim > MAX_STATIC_DIM:
-        raise ValueError(
-            f"static vector expressions support dim <= {MAX_STATIC_DIM} "
-            f"(got {dim}); use functions.vector.pandas_dot (Arrow-batched "
-            "NumPy) for wider embeddings"
-        )
 
 
 def static_dot(a, b, dim: int) -> Column:
     """Σ_i a[i]·b[i] as a static whole-stage-codegen expression.
 
     Strict left-to-right summation — bit-identical to the
-    ``aggregate(zip_with(a, b, *))`` interpreted form it replaces and to
-    DuckDB ``list_dot_product``.
+    ``aggregate(zip_with(a, b, *))`` interpreted form it replaces, to DuckDB
+    ``list_dot_product`` and to :func:`pandas_dot`.
     """
-    _check_dim(dim)
+    if not isinstance(dim, int) or dim <= 0:
+        raise ValueError(f"dim must be a positive int, got {dim!r}")
+    if dim > MAX_STATIC_DIM:
+        raise ValueError(
+            f"static vector expressions support dim <= {MAX_STATIC_DIM} "
+            f"(got {dim}); use functions.vector.pandas_dot (Arrow-batched "
+            "NumPy) for wider vectors"
+        )
     a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     dot = None
     for i in range(dim):
@@ -110,59 +63,23 @@ def static_dot(a, b, dim: int) -> Column:
     return dot
 
 
-def static_sq_norm(a, dim: int) -> Column:
-    """Σ_i a[i]² (left-to-right), static."""
-    _check_dim(dim)
-    a = F.col(a) if isinstance(a, str) else a
-    out = None
-    for i in range(dim):
-        x = F.element_at(a, i + 1)
-        term = x * x
-        out = term if out is None else out + term
-    return out
-
-
-def static_norm(a, dim: int) -> Column:
-    """√(Σ a[i]²), static — matches ``sqrt(aggregate(v, 0.0, acc + x·x))``."""
-    return F.sqrt(static_sq_norm(a, dim))
-
-
-def static_weighted_sum(a, weights, dim: int) -> Column:
-    """Σ_i a[i]·w_i for PLAN-TIME-CONSTANT scalar weights (e.g. LSH plane
-    coefficients): each weight is folded as a literal, so the whole dot is
-    constant-foldable scalar algebra. Left-to-right over ALL dims (zero
-    weights included) to preserve bit-parity with full-sum oracles."""
-    _check_dim(dim)
-    if len(weights) != dim:
-        raise ValueError(f"got {len(weights)} weights for dim={dim}")
-    a = F.col(a) if isinstance(a, str) else a
-    out = None
-    for i, w in enumerate(weights):
-        term = F.element_at(a, i + 1) * F.lit(w)
-        out = term if out is None else out + term
-    return out
-
-
 def assert_dim(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Fail LOUDLY (not silently-NULL) when any vector's length ≠ dim.
+    """Fail LOUDLY when any vector is NULL or its length ≠ dim.
 
-    Under non-ANSI Spark, ``element_at`` past the array end returns NULL and
-    a static dot silently degrades to NULL → downstream ``cosine`` becomes
-    0.0 — for a decontamination operator that reads as "everything clean",
-    a safety-critical false negative. This guard turns a dim mismatch into
-    a raised error at scan time (no extra aggregate job; the check rides the
-    existing scan).
+    A wrong-dim vector otherwise surfaces deep inside an executor as a
+    ragged Arrow batch (or, under non-ANSI Spark, as a NULL ``element_at``
+    that degrades a static expression to NULL → a cosine of 0.0 — for a
+    decontamination operator that reads as "everything clean"). This guard
+    raises at scan time instead (no extra job; the check rides the scan).
 
     PLAN-SHAPE CONTRACT: the guard is a ``filter(assert_true(...) IS NULL)``
     — an all-pass predicate that raises per offending row — NOT a
     ``withColumn`` that wraps the vector in a conditional. The wrap form
     replaces the column with a ``WHEN(..RAISE_ERROR..)`` expression that
-    Catalyst's collapse-projects inlines into EVERY downstream reference;
-    on the LSH plane projections (planes × dim ``element_at`` refs, each
-    inlining a dim-sized guard) the expression tree grows multiplicatively
-    and the driver OOMs during codegen/explain. The filter form leaves the
-    column a plain attribute, so downstream static expressions stay linear
-    in dim."""
+    Catalyst's collapse-projects inlines into EVERY downstream reference of
+    the vector, so a static expression over ``dim`` element refs grows by a
+    dim-sized guard per ref. The filter form leaves the column a plain
+    attribute."""
     v = F.col(vec_col)
     ok = v.isNotNull() & (F.size(v) == dim)
     msg = F.concat(
@@ -172,39 +89,27 @@ def assert_dim(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     return df.filter(F.assert_true(ok, msg).isNull())
 
 
-def assert_nonzero_norm(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Fail LOUDLY when any vector has zero (or non-finite) norm.
+def assert_nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
+    """Fail LOUDLY when any vector has a zero, NULL or non-finite norm.
 
-    Why this exists (VERDICT/ADVICE r4): the Arrow cosine kernel is raw IEEE —
-    a zero-norm side yields NaN → Spark NULL → the pair silently fails any
-    ``>= threshold`` filter. For a DEDUP/DECONTAMINATION operator that reads
-    as "no duplicate found": a silent false negative from degenerate input,
-    the same failure class :func:`assert_dim` closes for wrong dims. The
-    check is Σv[i]² > 0 computed on the O(docs) stream (static codegen at
-    dim ≤ MAX_STATIC_DIM, one Arrow pass above), riding the existing scan —
-    never on the O(pairs) stream. NULL elements make the sum NULL, which
-    also routes to the raise. Same ``filter(assert_true)`` plan-shape
-    contract as :func:`assert_dim` (see there): the sq-norm expression is
-    evaluated ONCE in the filter predicate instead of being inlined into
-    every downstream reference of the vector column."""
-    sq = (
-        static_sq_norm(vec_col, dim)
-        if dim <= MAX_STATIC_DIM
-        else pandas_dot(vec_col, vec_col)
-    )
-    v = F.col(vec_col)
-    # finite check must bound ABOVE too (ADVICE r5): an overflowed sq_norm
-    # is +inf, not NaN — it passed the old isnan-only guard, and downstream
-    # the static cosine scored such pairs NaN, which Spark orders ABOVE all
-    # doubles, i.e. a false-positive `>= threshold` match (while the arrow
-    # kernel NULL-dropped the same pair as a false negative). inf fails
-    # `sq < lit(inf)`; NaN fails every comparison; both now raise here.
-    ok = (
-        v.isNotNull()
-        & (sq > 0)
-        & ~F.isnan(sq)
-        & (sq < F.lit(float("inf")))
-    )
+    :func:`cosine` scores a zero-norm side 0.0, so a degenerate vector in a
+    DEDUP operator would silently fail every ``>= threshold`` filter — a
+    false "no duplicate found", the failure class :func:`assert_dim` closes
+    for wrong dims. The check is ``0 < Σv[i]² < inf`` on the O(docs) stream,
+    never the O(pairs) one. Σv[i]² is the same Arrow ordered fold as the
+    cosine's norms (:func:`pandas_dot`), so the guard accepts exactly the
+    vectors the kernel divides by. Spark orders NaN above every double, so
+    ``< inf`` rejects NaN as well as an overflowed +inf; NULL rejects by
+    ``assert_true``. Same ``filter(assert_true)`` plan shape as
+    :func:`assert_dim`; Spark evaluates that (UDF-free) guard first.
+
+    The fold is Arrow rather than a static unroll: at dim 64 the unrolled
+    Σv² re-casts the vector column in every ``element_at`` once the filter
+    is pushed below the cast projection, and the guard stage's generated
+    method grows past the JVM's 64 KB limit (Spark then disables
+    whole-stage codegen for the stage)."""
+    sq = pandas_dot(vec_col, vec_col)
+    ok = (sq > 0) & (sq < F.lit(float("inf")))
     msg = F.concat(
         F.lit(
             f"vector column '{vec_col}': zero/NULL/non-finite norm (sq_norm="
@@ -285,16 +190,11 @@ def _ordered_rowwise_dot(mx: np.ndarray, my: np.ndarray) -> np.ndarray:
     return acc
 
 
-def pandas_dot(a, b, dim: int | None = None) -> Column:
-    """Arrow-batched NumPy dot — the scale path for wide vectors and for
-    large pair streams (measured at sf-agnostic 2.44M pairs × dim 64,
-    local[32]: 5.0s vs 9.1s for the static unroll; the gap widens with dim).
-
-    Per batch: stack the two list columns into (n, dim) float64 matrices and
-    left-fold across dims (:func:`_ordered_rowwise_dot`) — bit-identical to
-    :func:`static_dot` and to DuckDB ``list_dot_product``, so oracles keep
-    matching without re-rounding.
-    """
+def pandas_dot(a, b) -> Column:
+    """Arrow-batched NumPy dot: per batch, stack the two list columns into
+    (n, dim) float64 matrices and left-fold across dims
+    (:func:`_ordered_rowwise_dot`) — bit-identical to :func:`static_dot` and
+    to DuckDB ``list_dot_product``."""
     @pandas_udf("double")
     def _dot(x: pd.Series, y: pd.Series) -> pd.Series:
         if len(x) == 0:
@@ -309,47 +209,20 @@ def pandas_dot(a, b, dim: int | None = None) -> Column:
     return _dot(a, b)
 
 
-def pandas_cosine(a, b) -> Column:
-    """Arrow-batched cosine: dot(a,b) / (‖a‖·‖b‖) in ONE UDF (one Arrow
-    transfer for all three folds). Each fold is the ordered left-fold and the
-    norms are √(left-fold of squares) — bit-identical to the static
-    composition ``static_dot / (static_norm · static_norm)`` on every
-    nonzero-norm pair (verified mismatch-free over a 2.44M-pair stream).
-    Non-finite divergence: NumPy division is raw IEEE, so a zero-norm side
-    (0/0) or an overflowed norm (inf/inf) yields NaN, which the Arrow
-    serializer surfaces as Spark NULL — the pair then fails any
-    ``>= threshold`` filter, i.e. is dropped. The static composition under
-    ANSI Spark (the session default) instead raises divideByZero on a
-    zero norm and yields NaN (not NULL) on overflow."""
+def cosine(a, b) -> Column:
+    """The embedding cosine: dot(a,b) / (‖a‖·‖b‖) in ONE Arrow-batched UDF
+    (one transfer for all three folds). Each fold is the ordered left-fold
+    and the norms are √(left-fold of squares), so on nonzero norms the
+    result is bit-identical to the static composition
+    ``static_dot(a, b) / (√static_dot(a, a) · √static_dot(b, b))`` and to
+    DuckDB's ``list_dot_product`` form.
+
+    A zero-norm side scores 0.0 (not NULL/NaN/raise); operators for which
+    0.0 would read as a silent "no duplicate" reject such vectors upstream
+    with :func:`assert_nonzero_norm`. (If both norms are > 0 but their
+    product underflows to 0, this also returns 0.0.)"""
     @pandas_udf("double")
-    def _cos(x: pd.Series, y: pd.Series) -> pd.Series:
-        if len(x) == 0:
-            return pd.Series([], dtype="float64")
-        mx = _as_matrix(x, "left")
-        my = _as_matrix(y, "right")
-        _check_sides(mx, my)
-        num = _ordered_rowwise_dot(mx, my)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            den = np.sqrt(_ordered_rowwise_dot(mx, mx)) * np.sqrt(
-                _ordered_rowwise_dot(my, my)
-            )
-            return pd.Series(num / den)
-
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _cos(a, b)
-
-
-def pandas_cosine_guarded(a, b) -> Column:
-    """:func:`pandas_cosine` with the zero-norm guard used by similarity
-    search: a zero-norm side yields cosine 0.0 (not NULL/NaN/raise) —
-    bit-identical to the static composition
-    ``when((n1 > 0) & (n2 > 0), dot/(n1·n2)).otherwise(0.0)`` on nonzero
-    norms and to its guard on zero norms. (Sole divergence: if both norms
-    are so small their PRODUCT underflows to 0 while each is > 0, the static
-    form divides by zero — ANSI raise — where this returns 0.0.)"""
-    @pandas_udf("double")
-    def _cos(x: pd.Series, y: pd.Series) -> pd.Series:
+    def _cosine(x: pd.Series, y: pd.Series) -> pd.Series:
         if len(x) == 0:
             return pd.Series([], dtype="float64")
         mx = _as_matrix(x, "left")
@@ -363,12 +236,4 @@ def pandas_cosine_guarded(a, b) -> Column:
 
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    return _cos(a, b)
-
-
-def dot(a, b, dim: int) -> Column:
-    """Dim-dispatching dot product: static unroll when it fits codegen,
-    Arrow/NumPy beyond."""
-    if dim <= MAX_STATIC_DIM:
-        return static_dot(a, b, dim)
-    return pandas_dot(a, b, dim)
+    return _cosine(a, b)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import token_ngrams, tokenize
+from ..functions.vector import assert_dim, cosine
 
 
 def _distinct_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -93,12 +94,6 @@ def decontaminate(
     )
 
 
-# the static codegen-safe dot moved to functions/vector.py (round 4) so the
-# embedding dedup / ANN operators share one audited implementation; this
-# alias keeps the operator's provenance citation stable
-from ..functions.vector import static_dot as _static_dot  # noqa: E402
-
-
 def semantic_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -130,11 +125,12 @@ def semantic_decontaminate(
 
     100-TB shape: the benchmark side is an eval suite — thousands of vectors,
     not billions — so it is **broadcast** and the corpus streams through one
-    projection + broadcast nested-loop join; per-side norms are precomputed
-    BEFORE the join (O(C·d), not O(C·E·d)); the per-corpus-row argmax is a
-    map-side-combinable ``max(struct)`` aggregate, so only C rows (not C·E)
-    reach the exchange. For benchmark sides too large to broadcast, route
-    through the IVF/LSH index in operators/similarity_search.py instead.
+    projection + broadcast nested-loop join, scored by the Arrow ordered-fold
+    cosine (functions/vector.cosine; zero-norm sides score 0.0); the
+    per-corpus-row argmax is a map-side-combinable ``max(struct)``
+    aggregate, so only C rows (not C·E) reach the exchange. For benchmark
+    sides too large to broadcast, route through the IVF/LSH index in
+    operators/similarity_search.py instead.
     """
     from pyspark.sql.types import NumericType
 
@@ -144,11 +140,8 @@ def semantic_decontaminate(
             f"bench_id_col {bench_id_col!r} must be numeric (got {bid_type}): "
             "the argmax tie-break orders by negated id inside max(struct)"
         )
-    from ..functions.vector import assert_dim
-
-    # fail loudly on a dim mismatch: under non-ANSI Spark, element_at past
-    # the array end is NULL -> cosine silently 0.0 -> EVERY row reports
-    # contaminated=false — a silent false-negative for a safety operator
+    # fail loudly on a dim mismatch instead of scoring a ragged batch — a
+    # silently clean verdict is the worst outcome for a safety operator
     c = assert_dim(
         corpus.select(
             F.col(id_col).alias("_cid"),
@@ -156,7 +149,7 @@ def semantic_decontaminate(
         ),
         "_cv",
         dim,
-    ).withColumn("_cn", F.sqrt(_static_dot("_cv", "_cv", dim)))
+    )
     b = assert_dim(
         benchmark.select(
             F.col(bench_id_col).alias("_bid"),
@@ -164,17 +157,9 @@ def semantic_decontaminate(
         ),
         "_bv",
         dim,
-    ).withColumn("_bn", F.sqrt(_static_dot("_bv", "_bv", dim)))
-
-    cos = (
-        F.when(
-            (F.col("_cn") > 0) & (F.col("_bn") > 0),
-            _static_dot("_cv", "_bv", dim) / (F.col("_cn") * F.col("_bn")),
-        )
-        .otherwise(0.0)
     )
     pairs = c.crossJoin(F.broadcast(b)).select(
-        "_cid", "_bid", F.round(cos, 5).alias("_cos_r")
+        "_cid", "_bid", F.round(cosine("_cv", "_bv"), 5).alias("_cos_r")
     )
     # argmax(cos_r, tie -> lowest bench id) as ONE combinable aggregate:
     # max() over struct(cos_r, -bid) orders lexicographically

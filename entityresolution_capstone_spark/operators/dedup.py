@@ -629,99 +629,38 @@ def embedding_cosine_duplicates(
     vec_col: str = "embedding",
     bucketed: bool = False,
     n_planes: int = 8,
-    kernel: str = "auto",
 ) -> DataFrame:
     """(id1, id2, cosine >= threshold) over an array<float> embedding column.
 
     Brute-force O(n²/2) by default (correct baseline); ``bucketed=True``
     restricts pairs to a shared random-hyperplane LSH bucket (the scale path;
-    see similarity_search.lsh_bucket_keys).
+    see similarity_search.lsh_bucket_keys). Each pair is scored by the Arrow
+    ordered-fold cosine (functions/vector.cosine), bit-identical to DuckDB
+    ``list_dot_product``.
 
-    Both cosine kernels preserve strict left-to-right summation, so results
-    are bit-identical to each other and to DuckDB ``list_dot_product``
-    (verified mismatch-free over a 2.44M-pair stream):
-
-    - ``kernel="auto"`` (default): static codegen at dim ≤
-      AUTO_STATIC_MAX_DIM (64), Arrow ordered-fold above. Crossover per
-      plan shape and dim measured in BENCH/CROSSOVER_PLANSHAPE.json (r6):
-      on the bucketed SMJ stream static wins at dim 64 (4.25 vs 5.87 s)
-      but falls off the codegen cliff by dim 128 (29.1 vs 8.5 s
-      interpreted); the r5 crossover (static 3.91 vs arrow 5.67 s) was
-      dim-64 only and the r4 numbers that favored arrow were measured
-      with the static method running interpreted (docs/SCALE.md round-5).
-    - ``kernel="arrow"``: one Arrow-batched NumPy cosine per pair
-      (functions/vector.pandas_cosine); dim-unbounded.
-    - ``kernel="static"``: per-pair dot + per-doc norm as STATIC codegen
-      expressions (functions/vector.py), dim ≤ MAX_STATIC_DIM. Keeps the
-      whole plan JVM-side (no Python workers) and lets Catalyst push the
-      threshold into the pair join. Replaced the interpreted
-      ``aggregate(zip_with(...))`` form, which anti-scales at high in-JVM
-      concurrency on the quadratic pair stream (docs/SCALE.md, round-3 law).
+    Loud-failure contract: a wrong-dim or zero/non-finite-norm vector
+    raises instead of scoring 0.0 and silently missing every threshold.
+    Both checks ride the O(docs) scan, never the O(pairs) stream.
     """
     from ..functions import vector as V
-    from .similarity_search import probe_dim
+    from .similarity_search import lsh_bucket_keys, probe_dim, vectors
 
-    if kernel not in ("auto", "arrow", "static"):
-        raise ValueError(
-            f"kernel must be 'auto', 'arrow' or 'static', got {kernel!r}"
-        )
     dim = probe_dim(embeddings, vec_col)
-    if kernel == "auto":
-        # r5 crossover (post JIT-flag, 3.8M bucketed pairs at local[32]):
-        # static 3.91 s vs arrow 5.67 s at dim 64 — the r4 measurement that
-        # favored arrow was taken with the static method running in the
-        # HotSpot bytecode interpreter (docs/SCALE.md round-5). Static wins
-        # while the unroll fits MAX_STATIC_DIM *and* the JVM actually JITs
-        # huge generated methods (ADVICE r5: a session whose JVM predates
-        # session.py's -XX:-DontCompileHugeMethods never sees the flag and
-        # static regresses to the interpreted regime — probe the real JVM
-        # args and fall back to Arrow). Wide embeddings take the
-        # dim-unbounded Arrow ordered fold. All kernels are bit-identical.
-        kernel = (
-            "static"
-            if dim <= V.AUTO_STATIC_MAX_DIM
-            and V.huge_methods_jit_enabled(embeddings.sparkSession)
-            else "arrow"
-        )
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    # Loud-failure contract on the GRADED dedup entry (VERDICT/ADVICE r4): a
-    # wrong-dim or zero-norm vector must raise, not NaN→NULL→drop out of the
-    # threshold filter as a silent false negative. Both checks ride the
-    # O(docs) scan (assert_dim: size compare; assert_nonzero_norm: one static
-    # Σv² at dim ≤ MAX_STATIC_DIM, one Arrow pass above), never the O(pairs)
-    # stream.
-    v = V.assert_dim(v, "v", dim)
-    v = V.assert_nonzero_norm(v, "v", dim)
-    if kernel == "static":
-        v = v.withColumn("norm", V.static_norm("v", dim))
+    v = V.assert_dim(vectors(embeddings, id_col, vec_col), "v", dim)
+    v = V.assert_nonzero_norm(v, "v")
     if bucketed:
-        from .similarity_search import lsh_bucket_keys
-
-        keys = lsh_bucket_keys(v.select(F.col("id"), F.col("v")), "id", "v", n_planes)
+        keys = lsh_bucket_keys(v, "id", "v", n_planes)
         pairs = bucket_pairs(keys, id_col="id", key_col="bucket")
     else:
         a = v.select(F.col("id").alias("id1"))
         b = v.select(F.col("id").alias("id2"))
         pairs = a.crossJoin(b).filter(F.col("id1") < F.col("id2"))
-    if kernel == "arrow":
-        v1 = v.select(F.col("id").alias("id1"), F.col("v").alias("v1"))
-        v2 = v.select(F.col("id").alias("id2"), F.col("v").alias("v2"))
-        cosine = V.pandas_cosine("v1", "v2")
-    else:
-        v1 = v.select(
-            F.col("id").alias("id1"), F.col("v").alias("v1"), F.col("norm").alias("n1")
-        )
-        v2 = v.select(
-            F.col("id").alias("id2"), F.col("v").alias("v2"), F.col("norm").alias("n2")
-        )
-        cosine = V.static_dot("v1", "v2", dim) / (F.col("n1") * F.col("n2"))
+    v1 = v.select(F.col("id").alias("id1"), F.col("v").alias("v1"))
+    v2 = v.select(F.col("id").alias("id2"), F.col("v").alias("v2"))
     return (
         pairs.join(v1, "id1")
         .join(v2, "id2")
-        .select("id1", "id2", cosine.alias("cosine"))
+        .select("id1", "id2", V.cosine("v1", "v2").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -966,13 +905,13 @@ def semantic_duplicates(
     rule is a per-record EXISTS — no transitive closure, no distinct over
     the pair set.
     """
+    from ..functions.vector import cosine
     from .similarity_search import (
-        _cosine,
         _ivf_dist,
         _ivf_quantized,
-        _with_norm,
         ivf_index,
         probe_dim,
+        vectors,
     )
 
     spark = embeddings.sparkSession
@@ -997,21 +936,19 @@ def semantic_duplicates(
             _ivf_dist(F.col("cnt"), F.col("qe"), F.col("s"), dim).alias("d"),
         )
     )
-    side = own.join(_with_norm(embeddings, id_col, vec_col, dim), "id")
+    side = own.join(vectors(embeddings, id_col, vec_col), "id")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     a = side.select(
         "cid",
         F.col("id").alias("id1"),
         F.col("d").alias("d1"),
         F.col("v").alias("v1"),
-        F.col("norm").alias("n1"),
     ).repartition(n_part, "cid")
     b = side.select(
         "cid",
         F.col("id").alias("id2"),
         F.col("d").alias("d2"),
         F.col("v").alias("v2"),
-        F.col("norm").alias("n2"),
     ).repartition(n_part, "cid")
     beats = (
         a.join(b, "cid")
@@ -1024,9 +961,7 @@ def semantic_duplicates(
             "id1",
             "id2",
             "d2",
-            _cosine(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2"), dim).alias(
-                "cos"
-            ),
+            cosine("v1", "v2").alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )

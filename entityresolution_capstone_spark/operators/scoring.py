@@ -55,13 +55,6 @@ class ScoringConfig:
     prefix_len: int = 64
     stfidf_threshold: float = 0.5   # reference default
     jw_prefix_weight: float = 0.1   # reference default
-    stfidf_max_vocab: int = 2_000_000  # cap on the stfidf DF-dict broadcast
-    # BYTE cap on the same driver-side dict (VERDICT r4 item 6): the row cap
-    # alone lets 2M long tokens build a multi-hundred-MB python dict on the
-    # driver. Estimated as rows × fixed per-entry overhead + Σ len(token);
-    # above EITHER cap the scorer reroutes to the fully distributed
-    # soft_tfidf_pairs plan.
-    stfidf_max_vocab_bytes: int = 64 << 20
     # user-supplied kernels (reference resolver.py:899-901 custom callables):
     # name -> batch fn (ndarray[str], ndarray[str]) -> ndarray[float64],
     # applied to the doc prefixes through the same Arrow-batched transport.
@@ -76,6 +69,16 @@ class ScoringConfig:
         if unknown:
             raise ValueError(f"unknown kernels (no custom_kernels entry): {unknown}")
 
+
+# Soft-TF-IDF route: the pandas UDF over a driver-built DF dict while the
+# candidates' vocabulary fits BOTH caps, the distributed soft_tfidf_pairs
+# plan above either. Rows cap the broadcast; the byte cap (rows × fixed
+# per-entry overhead + Σ len(token)) stops a few long tokens building a
+# multi-hundred-MB dict on the driver. On sf0.01's 3,779-pair er_pairs_stfidf
+# subset (4 cores, min of 3) the dict UDF took 7.04 s and the distributed
+# plan 19.81 s, max |difference| 8.9e-16.
+STFIDF_MAX_VOCAB = 2_000_000
+STFIDF_MAX_VOCAB_BYTES = 64 << 20
 
 # Dense TF-IDF vocabulary gate: the static dot is `vocab` multiply-adds in
 # the per-pair projection, and just above 64 of them it leaves whole-stage
@@ -210,7 +213,7 @@ def _stfidf_kernel(pairs, docs, cfg, df_table, corpus_size):
     # caps the dict two orders of magnitude below driver heap, with the
     # distributed plan as the overflow path either way.
     est_bytes = n_tokens * 104 + int(stats["chars"])
-    if n_tokens > cfg.stfidf_max_vocab or est_bytes > cfg.stfidf_max_vocab_bytes:
+    if n_tokens > STFIDF_MAX_VOCAB or est_bytes > STFIDF_MAX_VOCAB_BYTES:
         return None, tfidf_mod.soft_tfidf_pairs(
             pairs, docs, df_table, corpus_size, threshold=cfg.stfidf_threshold
         )

@@ -1,18 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: the exact baseline; broadcast the (small) query
-  set, score with the Arrow ordered-fold cosine
-  (functions/vector.pandas_cosine_guarded — dim-unbounded, bit-identical
-  fold order vs the static form), then window top-k. The cosine kernel is
-  FORCED to Arrow here (r6, VERDICT r5 item 1): the crossJoin(broadcast)
-  plan is a BroadcastNestedLoopJoin, which gets NO whole-stage codegen, so
-  a static dim-unrolled expression would run on the interpreted expression
-  path per pair — measured 6.4x slower at local[32] (BENCH_r05 q_topk 6.80s
-  vs 1.06s). kernel="auto" elsewhere means "static under codegen-capable
-  joins, Arrow above MAX_STATIC_DIM or under no-codegen plans". Both
-  kernels replace the interpreted zip_with+aggregate form, which
-  anti-scales at high in-JVM concurrency. Zero-norm vectors score cosine
-  0.0 by contract on BOTH kernels (explicitly guarded, not NaN-dropped).
+  set, score every (corpus, query) pair with the Arrow ordered-fold cosine
+  (functions/vector.cosine, the one embedding cosine), then window top-k.
+  Zero-norm vectors score cosine 0.0 by contract.
 - LSH-bucketed ANN: deterministic random-hyperplane signatures with *integer*
   plane vectors (derived from index arithmetic, no RNG) so the bucketing is
   exactly reproducible in ANSI SQL for the correctness oracle. Candidates are
@@ -36,57 +27,21 @@ from ..functions import vector as V
 
 
 def probe_dim(df: DataFrame, vec_col: str) -> int:
-    """Vector width from the first row (one tiny job). Dim must be a
-    plan-time constant so the dot products unroll into static codegen
-    expressions (functions/vector.py) instead of interpreted array HOFs."""
+    """Vector width from the first row (one tiny job). The dim guards and the
+    IVF quantizer's static unrolls need it as a plan-time constant."""
     first = df.select(F.size(vec_col).alias("d")).first()
     if first is None:
         return 1  # empty input: any positive constant yields an empty result
     return int(first["d"])
 
 
-def _with_norm(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
-    v = df.select(
+def vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id: long, v: array<double>) — the one projection every embedding
+    operator reads its input through."""
+    return df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    # Wide embeddings (dim > MAX_STATIC_DIM): the static unroll refuses by
-    # contract, so the norm expression is built on the ordered-fold Arrow
-    # kernel instead — same left-to-right summation, bit-identical. Under
-    # the default kernel="auto" wide dims take the arrow COSINE, whose path
-    # never references the norm column, so Catalyst prunes this expression
-    # away and the pandas fallback here exists only for a caller that
-    # materializes norms explicitly.
-    norm = (
-        V.static_norm("v", dim)
-        if dim <= V.MAX_STATIC_DIM
-        else F.sqrt(V.pandas_dot("v", "v"))
-    )
-    return v.withColumn("norm", norm)
-
-
-def _cosine(v1, v2, n1, n2, dim: int, kernel: str = "auto"):
-    """Per-pair cosine with zero-norm guard (degenerate vectors score 0.0).
-
-    ``kernel="auto"`` (default): the static whole-stage-codegen composition
-    at dim ≤ AUTO_STATIC_MAX_DIM (64), the Arrow ordered-fold above it. The
-    two are bit-identical (ordered left-fold; verified in tests). The
-    boundary is MEASURED per plan shape and dim
-    (BENCH/CROSSOVER_PLANSHAPE.json, r6): under codegen-capable joins
-    static wins at dim 64 (SMJ 4.25 vs 5.87 s) but the generated
-    projection falls out of effective codegen by dim 128 (29.1 vs 8.5 s,
-    interpreted); callers whose plan is a BNLJ (brute_force_topk) must
-    force Arrow regardless — see there. ``kernel="arrow"`` forces the
-    Arrow UDF (the precomputed ``n1``/``n2`` columns then go unreferenced
-    and Catalyst prunes the norm computation upstream);
-    ``kernel="static"`` forces the all-JVM plan (correct up to
-    MAX_STATIC_DIM, fast only to the auto bound) and refuses wide dims."""
-    if kernel == "auto":
-        kernel = "static" if dim <= V.AUTO_STATIC_MAX_DIM else "arrow"
-    if kernel == "arrow":
-        return V.pandas_cosine_guarded(v1, v2)
-    dot = V.static_dot(v1, v2, dim)
-    return F.when((n1 > 0) & (n2 > 0), dot / (n1 * n2)).otherwise(F.lit(0.0))
 
 
 def brute_force_topk(
@@ -95,41 +50,43 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "auto",
 ) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank<=k), exact. Queries are broadcast.
-
-    ``kernel="auto"`` resolves to the ARROW cosine here regardless of dim
-    (r6, VERDICT r5 item 1): this plan is a BroadcastNestedLoopJoin —
-    crossJoin against a broadcast side — and BNLJ gets NO whole-stage
-    codegen, so the static dim-unrolled cosine would be evaluated by the
-    interpreted expression path once per (corpus x queries) pair: the exact
-    anti-pattern the static kernels exist to avoid (measured: BENCH_r05
-    q_topk 6.80s vs 1.06s at local[32], dim 64). The plan-shape rule:
-    static codegen only above codegen-capable joins (sort-merge / hash —
-    see ann_topk, embedding dedup); Arrow under BNLJ or above
-    MAX_STATIC_DIM. ``kernel="static"`` remains available for explicit
-    experiments; results are bit-identical either way (ordered fold)."""
-    dim = probe_dim(corpus, vec_col)
-    if kernel == "auto":
-        kernel = "arrow"
-    c = _with_norm(corpus, id_col, vec_col, dim)
-    q = _with_norm(queries, id_col, vec_col, dim).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
+    """(query_id, neighbor_id, cosine, rank<=k), exact. Queries are broadcast,
+    so the pair stream is a broadcast nested-loop join."""
+    q = vectors(queries, id_col, vec_col).select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv")
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        vectors(corpus, id_col, vec_col)
+        .crossJoin(F.broadcast(q))
         .filter(F.col("id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _cosine(
-                F.col("qv"), F.col("v"), F.col("qn"), F.col("norm"), dim, kernel=kernel
-            ).alias("cosine"),
+            V.cosine("qv", "v").alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _score_candidates(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for candidate (query_id, neighbor_id)
+    pairs: the corpus vectors join on the neighbor, the broadcast query
+    vectors on the query."""
+    c = vectors(corpus, id_col, vec_col).select(
+        F.col("id").alias("neighbor_id"), "v"
+    )
+    q = vectors(queries, id_col, vec_col).select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv")
+    )
+    return (
+        cand.join(c, "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id", V.cosine("qv", "v").alias("cosine"))
+    )
 
 
 def _plane_coeff(p: int, d: int) -> int:
@@ -191,11 +148,9 @@ def lsh_bucket_keys(
             per_table.append(np.char.add(prefixes[t], s))
         return pd.Series(np.stack(per_table, axis=1).tolist())
 
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    return vectors(embeddings, id_col, vec_col).select(
+        "id", F.explode(_bucket_keys("v")).alias("bucket")
     )
-    return v.select("id", F.explode(_bucket_keys("v")).alias("bucket"))
 
 
 def bucket_size_metrics(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -239,11 +194,6 @@ def ann_topk(
     qb = lsh_bucket_keys(queries, id_col, vec_col, n_planes, n_tables).select(
         F.col("id").alias("query_id"), "bucket"
     )
-    dim = probe_dim(corpus, vec_col)
-    c = _with_norm(corpus, id_col, vec_col, dim)
-    q = _with_norm(queries, id_col, vec_col, dim).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
     cand = (
         cb.withColumnRenamed("id", "neighbor_id")
         .join(qb, "bucket")
@@ -251,17 +201,7 @@ def ann_topk(
         .select("query_id", "neighbor_id")
         .distinct()  # collapse multi-table collisions before scoring
     )
-    scored = (
-        cand.join(c.select(F.col("id").alias("neighbor_id"), "v", "norm"), "neighbor_id")
-        .join(q.select("query_id", "qv", "qn"), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("norm"), dim).alias(
-                "cosine"
-            ),
-        )
-    )
+    scored = _score_candidates(cand, corpus, queries, id_col, vec_col)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -301,17 +241,13 @@ def _ivf_quantized(
 ) -> DataFrame:
     # static array constructor (not F.transform — interpreted HOF): one
     # fixed-width projection per corpus row, inside whole-stage codegen
-    v = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
     qe = F.array(
         *[
             F.floor(F.element_at("v", i + 1) * IVF_QUANT + F.lit(0.5)).cast("long")
             for i in range(dim)
         ]
     )
-    return v.withColumn("qe", qe)
+    return vectors(embeddings, id_col, vec_col).withColumn("qe", qe)
 
 
 def _ivf_dist(cnt_col, qe_col, s_col, dim: int):
@@ -416,26 +352,12 @@ def ivf_topk(
         .filter(F.col("prank") <= nprobe)
         .select("query_id", "cid")
     )
-    c = _with_norm(corpus, id_col, vec_col, dim)
-    q = _with_norm(queries, id_col, vec_col, dim).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
     cand = (
         assign.join(F.broadcast(probes), "cid")
         .filter(F.col("id") != F.col("query_id"))
         .select("query_id", F.col("id").alias("neighbor_id"))
     )
-    scored = (
-        cand.join(c.select(F.col("id").alias("neighbor_id"), "v", "norm"), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("norm"), dim).alias(
-                "cosine"
-            ),
-        )
-    )
+    scored = _score_candidates(cand, corpus, queries, id_col, vec_col)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 

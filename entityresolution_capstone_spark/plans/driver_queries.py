@@ -34,13 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize, tokenize_sql
-from ..functions.tfidf import tfidf_cosine_pairs, tfidf_norms, tfidf_vectors
 from ..operators import blocking as B
 from ..operators import dedup as D
 from ..operators import similarity_search as S
 from ..operators import textstats as TS
 from ..operators.canonicalize import canonical_docs
-from ..operators.scoring import ScoringConfig
+from ..operators.scoring import ScoringConfig, score_pairs
 from ..sources import tables as TBL
 from .pipeline import Pipeline, PipelineConfig
 
@@ -276,21 +275,26 @@ def q_streaming_canonicalize(spark, sf_dir):
     from ..streaming.ingest import start_ingest
 
     base = tempfile.mkdtemp(prefix="ercs-stream-")
-    inp = os.path.join(base, "in")
-    derive_transcripts(spark, sf_dir).write.mode("overwrite").parquet(inp)
-    q = start_ingest(
-        spark,
-        inp,
-        os.path.join(base, "staging"),
-        os.path.join(base, "docs"),
-        os.path.join(base, "ckpt"),
-        available_now=True,
-        n_buckets=8,
-    )
-    q.awaitTermination()
-    return spark.read.parquet(os.path.join(base, "docs")).select(
-        "conv_id", "doc", F.col("n_turns").cast("long").alias("n_turns")
-    )
+    try:
+        inp = os.path.join(base, "in")
+        derive_transcripts(spark, sf_dir).write.mode("overwrite").parquet(inp)
+        q = start_ingest(
+            spark,
+            inp,
+            os.path.join(base, "staging"),
+            os.path.join(base, "docs"),
+            os.path.join(base, "ckpt"),
+            available_now=True,
+            n_buckets=8,
+        )
+        q.awaitTermination()
+        docs = spark.read.parquet(os.path.join(base, "docs")).select(
+            "conv_id", "doc", F.col("n_turns").cast("long").alias("n_turns")
+        )
+        # pinned off the workspace files, so the workspace goes with the call
+        return docs.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, True)
 
 
 def q_er_tokens(spark, sf_dir):
@@ -383,12 +387,12 @@ join (select conv_id, substr(doc, 1, {PREFIX}) pfx from canon) c2 on p.id2 = c2.
 
 
 def q_er_pairs_tfidf(spark, sf_dir):
+    """TF-IDF cosine of the candidate pairs, by the route the scoring stage
+    takes (``score_pairs`` with the TF-IDF kernel alone)."""
     st = _frontier(spark, sf_dir)
-    docs, pairs = st["docs"], st["pairs"]
-    vectors = tfidf_vectors(docs, st["df_table"], st["n_docs"])
-    norms = tfidf_norms(vectors)
-    cos = tfidf_cosine_pairs(pairs, vectors, norms)
-    return cos.select("id1", "id2", F.round("tfidf_cosine", 6).alias("tfidf_cosine"))
+    cfg = ScoringConfig(weights={"tfidf": 1.0})
+    scored = score_pairs(st["pairs"], st["docs"], cfg, st["df_table"], st["n_docs"])
+    return scored.select("id1", "id2", F.round("attr_sim", 6).alias("tfidf_cosine"))
 
 
 _TFIDF_CTE = (
@@ -4491,7 +4495,7 @@ def q_er_pairs_stfidf(spark, sf_dir):
     """Soft-TF-IDF scored pairs via the DISTRIBUTED plan
     (functions/tfidf.py:soft_tfidf_pairs): the reference's default text
     kernel (utils.py:347-396) with the driver-side DF-dict broadcast and its
-    stfidf_max_vocab cap REMOVED (VERDICT r2 item 5) — token stats, the
+    vocabulary caps REMOVED (VERDICT r2 item 5) — token stats, the
     secondary Jaro-Winkler over distinct co-candidate token pairs (batched
     Arrow kernel), argmax, numerators and norms are all DataFrame algebra.
     Scored over a deterministic 1-in-20 pair subset so the oracle's

@@ -87,22 +87,36 @@ def test_embedding_cosine_dups_brute_vs_bucketed(spark):
     assert extra.count() == 0
 
 
-def test_embedding_cosine_arrow_vs_static_bit_identical(spark):
-    """The Arrow cosine kernel (ordered left-fold NumPy) must be BITWISE
-    equal to the static codegen composition on every pair — not merely
-    equal after rounding. Unfiltered comparison (threshold=-1 keeps all
-    pairs, including negative cosines)."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(300).cache()
-    a = D.embedding_cosine_duplicates(emb, threshold=-1.0, bucketed=True, kernel="arrow")
-    s = D.embedding_cosine_duplicates(emb, threshold=-1.0, bucketed=True, kernel="static")
-    assert a.count() == s.count() > 0
-    joined = a.join(
-        s.withColumnRenamed("cosine", "cosine_s"), ["id1", "id2"], "full"
+def _static_cosine(v1, v2, dim):
+    """The static-expression cosine reference: ordered-fold dot over the
+    ordered-fold norms."""
+    from entityresolution_capstone_spark.functions import vector as V
+
+    return V.static_dot(v1, v2, dim) / (
+        F.sqrt(V.static_dot(v1, v1, dim)) * F.sqrt(V.static_dot(v2, v2, dim))
     )
-    assert joined.filter(
-        F.col("cosine").isNull()
-        | F.col("cosine_s").isNull()
-        | (F.col("cosine") != F.col("cosine_s"))
+
+
+def test_embedding_cosine_arrow_vs_static_bit_identical(spark):
+    """The dedup cosine (the Arrow ordered fold) must be BITWISE equal to a
+    static-expression reference on every pair — not merely equal after
+    rounding. Unfiltered comparison (threshold=-1 keeps all pairs, including
+    negative cosines)."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(300).cache()
+    got = D.embedding_cosine_duplicates(emb, threshold=-1.0, bucketed=True).cache()
+    assert got.count() > 0
+    dim = len(emb.first()["embedding"])
+    vec = emb.select(
+        F.col("vec_id").cast("long").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
+    ref = (
+        got.join(vec.toDF("id1", "v1"), "id1")
+        .join(vec.toDF("id2", "v2"), "id2")
+        .select("cosine", _static_cosine("v1", "v2", dim).alias("cosine_s"))
+    )
+    assert ref.filter(
+        F.col("cosine_s").isNull() | (F.col("cosine") != F.col("cosine_s"))
     ).count() == 0
 
 
@@ -119,16 +133,54 @@ def test_embedding_dedup_zero_norm_raises(spark):
     rows = [(1, [1.0, 2.0, 3.0, 4.0]), (2, [0.0, 0.0, 0.0, 0.0]),
             (3, [1.0, 2.0, 3.0, 4.0])]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    for kernel in ("arrow", "static"):
-        out = D.embedding_cosine_duplicates(emb, threshold=0.9, kernel=kernel)
-        with pytest.raises(Exception, match="zero/NULL/non-finite norm"):
-            out.collect()
+    out = D.embedding_cosine_duplicates(emb, threshold=0.9)
+    with pytest.raises(Exception, match="zero/NULL/non-finite norm"):
+        out.collect()
     # control: same corpus without the degenerate row passes and finds the dup
     ok = D.embedding_cosine_duplicates(
         spark.createDataFrame([rows[0], rows[2]], ["vec_id", "embedding"]),
         threshold=0.9,
     )
     assert [(r["id1"], r["id2"]) for r in ok.collect()] == [(1, 3)]
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        [1.0, float("nan"), 1.0, 1.0],
+        [1e200, 1.0, 1.0, 1.0],
+        [float("-inf"), 1.0, 1.0, 1.0],
+        [1.0, None, 1.0, 1.0],
+    ],
+    ids=["nan", "overflow", "neg_inf", "null_element"],
+)
+def test_embedding_dedup_degenerate_norm_raises(spark, bad):
+    """Beyond zero norms (test above), every non-finite norm — NaN, an
+    overflowed +inf, an inf element, a NULL element — raises at the guard
+    instead of scoring."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0]), (2, bad), (3, [1.0, 2.0, 3.0, 4.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="zero/NULL/non-finite norm"):
+        D.embedding_cosine_duplicates(emb, threshold=0.9).collect()
+
+
+def test_embedding_dedup_compiles_at_dim_64(spark):
+    """Every stage of a dim-64 bucketed dedup compiles into whole-stage
+    codegen: with the interpreted fallback switched off, a stage whose
+    generated method outgrows the JVM's 64 KB limit fails the query instead
+    of silently running interpreted."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(200)
+    assert len(emb.first()["embedding"]) == 64
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        n = D.embedding_cosine_duplicates(emb, threshold=-1.0, bucketed=True).count()
+    finally:
+        spark.conf.set(key, old)
+    assert n > 0
 
 
 def test_embedding_dedup_wrong_dim_raises(spark):
@@ -157,7 +209,7 @@ def test_arrow_kernel_ragged_input_clear_error(spark):
         ["id", "v1", "v2"],
     )
     with pytest.raises(PySparkException, match="assert_dim"):
-        df.select(V.pandas_cosine("v1", "v2")).collect()
+        df.select(V.cosine("v1", "v2")).collect()
     dfn = spark.createDataFrame(
         [(1, [1.0, 2.0], [1.0, 2.0]), (2, None, [1.0, 2.0])],
         "id int, v1 array<double>, v2 array<double>",
@@ -169,10 +221,7 @@ def test_arrow_kernel_ragged_input_clear_error(spark):
 def test_pandas_dot_and_cosine_ordered_fold_bit_identical(spark):
     """functions/vector.py Arrow kernels vs the static expressions on
     adversarial magnitudes (mixed exponents, where association order shows
-    in the last ulp if it differs). Zero-norm vectors are checked separately:
-    ANSI Spark raises divideByZero for the static composition, while the
-    Arrow kernel's raw-IEEE NumPy division yields NaN, surfaced as Spark
-    NULL (documented in pandas_cosine)."""
+    in the last ulp if it differs). A zero-norm side scores cosine 0.0."""
     import math
 
     from entityresolution_capstone_spark.functions import vector as V
@@ -201,26 +250,22 @@ def test_pandas_dot_and_cosine_ordered_fold_bit_identical(spark):
         "id2",
         V.pandas_dot("v1", "v2").alias("pdot"),
         V.static_dot("v1", "v2", 8).alias("sdot"),
-        V.pandas_cosine("v1", "v2").alias("pcos"),
-        (
-            V.static_dot("v1", "v2", 8)
-            / (V.static_norm("v1", 8) * V.static_norm("v2", 8))
-        ).alias("scos"),
+        V.cosine("v1", "v2").alias("pcos"),
+        _static_cosine("v1", "v2", 8).alias("scos"),
     ).collect()
     assert len(out) == 9
     for r in out:
         assert r["pdot"] == r["sdot"], r  # bitwise, no rounding
         assert r["pcos"] == r["scos"], r
-    # zero-norm side: Arrow kernel -> NaN -> Spark NULL (pair fails any
-    # >= threshold filter); dot itself is still exact (0.0)
+    # zero-norm side: the dot is still exact (0.0) and the cosine is 0.0
     zrows = p.filter((F.col("id1") == 3) | (F.col("id2") == 3)).select(
         V.pandas_dot("v1", "v2").alias("pdot"),
-        V.pandas_cosine("v1", "v2").alias("pcos"),
+        V.cosine("v1", "v2").alias("pcos"),
     ).collect()
     assert len(zrows) == 7
     for r in zrows:
         assert r["pdot"] == 0.0
-        assert r["pcos"] is None
+        assert r["pcos"] == 0.0
 
 
 def test_jaccard_verify_bitset_matches_explode(spark, documents, docs, monkeypatch):

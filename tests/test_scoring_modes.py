@@ -97,30 +97,29 @@ def test_weights_must_sum_to_one():
 
 
 def _driver_reference(docs, dft, pairs, n_docs, weights, prefix_len):
-    """attr_sim computed independently of score_pairs: the char kernels on
-    the driver (jaro_winkler_batch / scaled_levenshtein_batch over the
-    collected prefixes), TF-IDF cosine by the JVM tfidf_cosine_pairs plan."""
+    """attr_sim computed independently of score_pairs, on the driver: the
+    char kernels by jaro_winkler_batch / scaled_levenshtein_batch over the
+    collected prefixes, the TF-IDF cosine in plain Python from the collected
+    tokens and DF table."""
     import numpy as np
 
-    from entityresolution_capstone_spark.functions import tfidf as T
     from entityresolution_capstone_spark.functions.similarity import (
         jaro_winkler_batch,
         scaled_levenshtein_batch,
     )
+    from reference_emulator import tfidf_cosine
 
-    prefix = {r["conv_id"]: r["doc_prefix"] for r in docs.select("conv_id", "doc_prefix").collect()}
+    rows = docs.select("conv_id", "doc_prefix", "tokens").collect()
+    prefix = {r["conv_id"]: r["doc_prefix"] for r in rows}
+    tokens = {r["conv_id"]: list(r["tokens"]) for r in rows}
+    df = {r["token"]: r["df"] for r in dft.collect()}
     keys = [(r["id1"], r["id2"]) for r in pairs.collect()]
     x = np.array([prefix[a] for a, _ in keys], dtype=object)
     y = np.array([prefix[b] for _, b in keys], dtype=object)
-    vectors = T.tfidf_vectors(docs, dft, n_docs)
-    cos = {
-        (r["id1"], r["id2"]): r["tfidf_cosine"]
-        for r in T.tfidf_cosine_pairs(pairs, vectors, T.tfidf_norms(vectors)).collect()
-    }
     kernels = {
         "jw": jaro_winkler_batch(x, y, max_len=prefix_len),
         "lev": scaled_levenshtein_batch(x, y, max_len=prefix_len),
-        "tfidf": np.array([cos.get(k, 0.0) for k in keys]),
+        "tfidf": np.array([tfidf_cosine(tokens[a], tokens[b], df, n_docs) for a, b in keys]),
     }
     total = sum(w * kernels[k] for k, w in weights.items())
     return dict(zip(keys, total))
@@ -240,8 +239,8 @@ def test_slim_tfidf_only_keeps_all_pairs(spark, monkeypatch):
         assert rows[("c1", "c2")] > 0.0, cap
 
 
-def test_stfidf_vocab_cap_falls_back_to_distributed(spark):
-    """Above stfidf_max_vocab, score_pairs switches to the fully distributed
+def test_stfidf_vocab_cap_falls_back_to_distributed(spark, monkeypatch):
+    """Above STFIDF_MAX_VOCAB, score_pairs switches to the fully distributed
     soft-TF-IDF plan (functions/tfidf.py:soft_tfidf_pairs) instead of the
     driver-broadcast dict — scores must be identical either way (r3: the cap
     no longer refuses, it reroutes)."""
@@ -264,7 +263,8 @@ def test_stfidf_vocab_cap_falls_back_to_distributed(spark):
     dft = doc_frequencies(docs)
 
     def scores(cap):
-        cfg = ScoringConfig(weights={"stfidf": 1.0}, stfidf_max_vocab=cap)
+        monkeypatch.setattr(SC, "STFIDF_MAX_VOCAB", cap)
+        cfg = ScoringConfig(weights={"stfidf": 1.0})
         out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30)
         return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 
@@ -275,7 +275,7 @@ def test_stfidf_vocab_cap_falls_back_to_distributed(spark):
         assert abs(broadcast_path[k] - distributed_path[k]) < 1e-12, k
 
 
-def test_stfidf_byte_cap_falls_back_to_distributed(spark):
+def test_stfidf_byte_cap_falls_back_to_distributed(spark, monkeypatch):
     """VERDICT r4 item 6: the driver dict is also capped in BYTES, not just
     rows — a small row count of long tokens must reroute to the distributed
     soft_tfidf_pairs plan, with identical scores."""
@@ -299,9 +299,8 @@ def test_stfidf_byte_cap_falls_back_to_distributed(spark):
     dft = doc_frequencies(docs)
 
     def scores(byte_cap):
-        cfg = ScoringConfig(
-            weights={"stfidf": 1.0}, stfidf_max_vocab_bytes=byte_cap
-        )
+        monkeypatch.setattr(SC, "STFIDF_MAX_VOCAB_BYTES", byte_cap)
+        cfg = ScoringConfig(weights={"stfidf": 1.0})
         out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=30)
         return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 

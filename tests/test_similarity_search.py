@@ -125,24 +125,25 @@ def test_ivf_index_deterministic_across_partitionings(spark):
 
 
 def test_cosine_kernels_bit_identical(spark, embeddings):
-    """_cosine(kernel="arrow") vs kernel="static": bitwise-equal cosines on
-    real embedding pairs, and 0.0 (not NULL/raise) on a zero-norm side —
-    the swap that routes the scored streams through the Arrow kernel must
-    not move a single ulp (rank order and oracle hashes depend on it)."""
+    """vector.cosine vs a static-expression reference built here:
+    bitwise-equal cosines on real embedding pairs, and 0.0 (not NULL/raise)
+    on a zero-norm side — the kernel may not move a single ulp against the
+    ordered fold (rank order and oracle hashes depend on it)."""
+    from entityresolution_capstone_spark.functions import vector as V
+
     dim = S.probe_dim(embeddings, "embedding")
-    v = S._with_norm(embeddings.limit(40), "vec_id", "embedding", dim)
-    zero = spark.createDataFrame(
-        [(10_000_000, [0.0] * dim)], ["id", "v"]
-    ).withColumn("norm", F.lit(0.0))
+    v = S.vectors(embeddings.limit(40), "vec_id", "embedding")
+    zero = spark.createDataFrame([(10_000_000, [0.0] * dim)], "id long, v array<double>")
     v = v.unionByName(zero)
-    a = v.select(F.col("id").alias("id1"), F.col("v").alias("v1"), F.col("norm").alias("n1"))
-    b = v.select(F.col("id").alias("id2"), F.col("v").alias("v2"), F.col("norm").alias("n2"))
-    p = a.crossJoin(b).filter(F.col("id1") < F.col("id2"))
+    p = v.toDF("id1", "v1").crossJoin(v.toDF("id2", "v2")).filter(F.col("id1") < F.col("id2"))
+    n1 = F.sqrt(V.static_dot("v1", "v1", dim))
+    n2 = F.sqrt(V.static_dot("v2", "v2", dim))
+    ref = F.when((n1 > 0) & (n2 > 0), V.static_dot("v1", "v2", dim) / (n1 * n2))
     out = p.select(
         "id1",
         "id2",
-        S._cosine(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2"), dim, kernel="arrow").alias("ca"),
-        S._cosine(F.col("v1"), F.col("v2"), F.col("n1"), F.col("n2"), dim, kernel="static").alias("cs"),
+        V.cosine("v1", "v2").alias("ca"),
+        ref.otherwise(F.lit(0.0)).alias("cs"),
     ).collect()
     assert len(out) > 800
     for r in out:
@@ -153,12 +154,66 @@ def test_cosine_kernels_bit_identical(spark, embeddings):
 
 def test_brute_force_topk_plan_uses_arrow_kernel(spark, embeddings, queries):
     """Regression pin for VERDICT r5 item 1: the brute-force plan is a
-    BroadcastNestedLoopJoin (no whole-stage codegen), so kernel="auto" must
-    resolve to the Arrow cosine there — a static dim-unrolled expression
-    under BNLJ runs on the interpreted per-pair path (6.4x at local[32])."""
+    BroadcastNestedLoopJoin (no whole-stage codegen), scored by the Arrow
+    cosine — a static dim-unrolled expression under BNLJ runs on the
+    interpreted per-pair path (6.4x at local[32])."""
     plan = S.brute_force_topk(embeddings, queries, k=5)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
     assert "ArrowEvalPython" in plan or "ArrowEval" in plan
     # and no interpreted element_at unroll on the pair stream
     assert "element_at" not in plan
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _embedding_operators(embeddings, queries):
+    from entityresolution_capstone_spark.operators import dedup as D
+    from entityresolution_capstone_spark.operators.decontam import semantic_decontaminate
+
+    bench = embeddings.filter(F.col("vec_id") % 97 == 3)
+    return {
+        "embedding_dedup": lambda: D.embedding_cosine_duplicates(embeddings, 0.5),
+        "embedding_dedup_bucketed": lambda: D.embedding_cosine_duplicates(
+            embeddings, 0.5, bucketed=True
+        ),
+        "semantic_dedup": lambda: D.semantic_duplicates(embeddings, 0.5),
+        "brute_force_topk": lambda: S.brute_force_topk(embeddings, queries, k=5),
+        "ann_topk": lambda: S.ann_topk(embeddings, queries, k=5),
+        "ivf_topk": lambda: S.ivf_topk(embeddings, queries, k=5),
+        "semantic_decontaminate": lambda: semantic_decontaminate(
+            embeddings.filter(F.col("vec_id") % 97 != 3), bench, dim=64
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "embedding_dedup",
+        "embedding_dedup_bucketed",
+        "semantic_dedup",
+        "brute_force_topk",
+        "ann_topk",
+        "ivf_topk",
+        "semantic_decontaminate",
+    ],
+)
+def test_embedding_operators_score_through_arrow_cosine(spark, embeddings, queries, op):
+    """Every embedding operator scores its pair stream with the one Arrow
+    cosine: an ArrowEvalPython node evaluating vector.cosine sits above a
+    join, and no node between it and the plan root unrolls element_at."""
+    df = _embedding_operators(embeddings, queries)[op]()
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln and "_cosine(" in ln]
+    assert at, lines
+    for i in at:
+        subtree = []
+        for ln in lines[i + 1 :]:
+            if _depth(ln) <= _depth(lines[i]):
+                break
+            subtree.append(ln)
+        assert any("Join" in ln or "CartesianProduct" in ln for ln in subtree), lines
+        assert not any("element_at" in ln for ln in lines[: i + 1]), lines

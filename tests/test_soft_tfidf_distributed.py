@@ -98,14 +98,11 @@ def test_empty_token_side_scores_zero(spark):
     assert len(out) == 1 and out[0]["stfidf"] == 0.0
 
 
-def test_score_pairs_over_cap_uses_distributed(spark):
+def test_score_pairs_over_cap_uses_distributed(spark, monkeypatch):
     """score_pairs with a vocab cap below the corpus vocabulary must fall back
     to the distributed plan (r3: no refusal) and produce the same stfidf
     score as the UDF path."""
-    from entityresolution_capstone_spark.operators.scoring import (
-        ScoringConfig,
-        score_pairs,
-    )
+    from entityresolution_capstone_spark.operators import scoring as SC
 
     rng = random.Random(5)
     words = ["alpha", "alpah", "beta", "betta", "gamma", "gama"]
@@ -115,10 +112,9 @@ def test_score_pairs_over_cap_uses_distributed(spark):
     n = len(corpus)
 
     def run(cap):
-        cfg = ScoringConfig(
-            weights={"stfidf": 1.0}, stfidf_max_vocab=cap, stfidf_threshold=0.5
-        )
-        out = score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
+        monkeypatch.setattr(SC, "STFIDF_MAX_VOCAB", cap)
+        cfg = SC.ScoringConfig(weights={"stfidf": 1.0}, stfidf_threshold=0.5)
+        out = SC.score_pairs(pairs, docs, cfg, df_table=dft, corpus_size=n)
         # single-kernel weights: attr_sim IS the stfidf score
         return {(r["id1"], r["id2"]): r["attr_sim"] for r in out.collect()}
 

@@ -187,3 +187,25 @@ def test_stateful_turn_counts_across_restarts(spark):
     want = t_pd.groupby("conv_id").size().to_dict()
     assert got == want
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_driver_streaming_query_leaves_no_workspace(spark, tmp_path, monkeypatch):
+    """The driver's streaming canonicalization returns the batch docs and
+    removes its stream workspace (input, staging, docs, checkpoint) before
+    it returns: no directory of the call is left."""
+    from entityresolution_capstone_spark.plans import driver_queries as DQ
+
+    sf_dir = str(tmp_path / "sf")
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
+    spark.createDataFrame(
+        [(i, " ".join(words[(i + k) % 8] for k in range(5 + 3 * i))) for i in range(12)],
+        "doc_id long, text string",
+    ).write.parquet(os.path.join(sf_dir, "documents.parquet"))
+    work = tmp_path / "tmp"
+    work.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work))
+    got = DQ.q_streaming_canonicalize(spark, sf_dir)
+    assert os.listdir(work) == []
+    want = DQ.q_er_canonicalize(spark, sf_dir)
+    rows = sorted(map(tuple, got.collect()))
+    assert len(rows) == 12 and rows == sorted(map(tuple, want.collect()))

@@ -46,9 +46,8 @@ def make_input(
     """Deterministic microbench input (see module docstring). No external data.
 
     ``dim`` (VERDICT r4 item 4): all round-4 vector evidence was dim 64;
-    realistic embedding widths (768, 1024) exercise ONLY the Arrow kernels
-    (the static path must refuse above MAX_STATIC_DIM=256), so the bench
-    needs wide inputs to measure the path production embeddings take.
+    the bench needs realistic embedding widths (768, 1024) to measure the
+    cosine at the widths production embeddings have.
     """
     import shutil
 
@@ -144,13 +143,13 @@ def main():
             q = emb.filter(F.col("vec_id") % 997 == 7)
             act = lambda: S.brute_force_topk(emb, q, k=10).count()
         elif mode == "paircosine":
-            # pandas_cosine throughput on the full bucketed pair stream:
+            # cosine throughput on the full bucketed pair stream:
             # threshold=-1 keeps every scored pair, so `rows` IS the number
             # of cosines computed (VERDICT r4 item 4 asks for >= 1M bucketed
             # pairs at dim 768 — size the makeinput n_vecs accordingly:
             # ~25k hash-random vectors / 8 planes -> ~1.2M bucket pairs)
             act = lambda: D.embedding_cosine_duplicates(
-                emb, threshold=-1.0, bucketed=True, kernel="arrow"
+                emb, threshold=-1.0, bucketed=True
             ).count()
         else:
             raise SystemExit(f"unknown mode {mode}")
